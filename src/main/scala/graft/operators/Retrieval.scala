@@ -78,12 +78,18 @@ object Retrieval {
     * query ids exclude themselves on the semantic side (the
     * ivfTopKFromIndex contract).
     *
-    * Driver-job shape (r11, the r10 verdict's latency ask): one
-    * stats job (lexical dfs+meta), one qId job, the semantic probe,
-    * then mmrGreedy's two bounded collects — the fused-page lineage
-    * runs ONCE (the old guard aggregate and rrf_score join-back are
-    * gone; rrf_score = rel_u/1e6 exactly, since rel_u = s6 and
-    * s6 ≤ ~2e6·k is held exactly by the double). */
+    * Driver-job shape: one stats job (lexical dfs+meta), then
+    * mmrGreedy's two bounded collects. The first runs the fused-page
+    * lineage ONCE — the |terms|-task posting scan, the probe-list
+    * broadcast and the pruned list scan, the fusion windows — and the
+    * second the page's sim matrix over its id-filtered vectors. No
+    * job reads index metadata: the query id and the semantic probe
+    * come from the query's driver rows, the centroids and the lists
+    * schema from the IVF index's cached handle
+    * ([[Similarity.ivfTopKFromIndex]]). A warm page over a local query
+    * frame is 11 jobs (spec-pinned). rrf_score = rel_u/1e6 exactly,
+    * since rel_u = s6 and s6 ≤ ~2e6·k is held exactly by the
+    * double. */
   def serve(spark: SparkSession, table: String, path: String,
             emb: DataFrame, queryVec: DataFrame,
             cfg: ServeConfig): DataFrame =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,7 +79,7 @@ object Similarity {
     * (vec_id, embedding), no `label` (the index serve paths promise
     * exactly that contract; `prepared` would throw on the missing
     * column). */
-  private def preparedQueries(queries: DataFrame): DataFrame = {
+  private[graft] def preparedQueries(queries: DataFrame): DataFrame = {
     graft.functions.VecExprs.register(queries.sparkSession)
     queries.withColumn("v", toDoubleVec(col("embedding")))
       .withColumn("n2", norm2(col("v")))
@@ -491,15 +491,23 @@ object Similarity {
     // candidate×candidate cosine matrix, same-query pairs only — the
     // pair list is built from the ALREADY-COLLECTED ids (a local
     // frame, broadcast against `p`), so only the vector joins and the
-    // codegen dot run distributed
+    // codegen dot run distributed. The vector side is filtered by the
+    // same ids, so an index-backed `p` scans with `vec_id IN (…)`
+    // pushed down instead of reading every committed vector (past
+    // idFilterCeiling distinct ids the literal list would cost more
+    // than it prunes, and the joins alone select the rows)
     val ids = rels.map(r => (r._1, r._2)).toSeq.toDF("q_id", "n_id")
+    val candIds = rels.map(_._2).distinct
+    val pc =
+      if (candIds.length <= idFilterCeiling) p.filter(col("vec_id").isin(candIds: _*))
+      else p
     val sims = ids.as("x").join(ids.as("y"),
         col("x.q_id") === col("y.q_id") && col("x.n_id") < col("y.n_id"))
       .select(col("x.q_id").as("q_id"), col("x.n_id").as("a_id"),
         col("y.n_id").as("b_id"))
-      .join(p.select(col("vec_id").as("a_id"), col("v").as("a_v"),
+      .join(pc.select(col("vec_id").as("a_id"), col("v").as("a_v"),
         col("n2").as("a_n2")), Seq("a_id"))
-      .join(p.select(col("vec_id").as("b_id"), col("v").as("b_v"),
+      .join(pc.select(col("vec_id").as("b_id"), col("v").as("b_v"),
         col("n2").as("b_n2")), Seq("b_id"))
       .select(col("q_id"), col("a_id"), col("b_id"),
         round(round(cosineFromParts(dot(col("a_v"), col("b_v")),
@@ -546,6 +554,10 @@ object Similarity {
     out.toDF("q_id", "doc_id", "rel_u", "mmr_score", "rank")
       .repartition(1)
   }
+
+  /** Most distinct candidate ids [[mmrGreedy]] pushes into its vector
+    * scan as an `IN` list (a serve page holds ≤ kLex + kSem). */
+  private val idFilterCeiling = 4096
 
   /** [[prepared]] exposed for [[graft.operators.Retrieval]]'s MMR
     * rerank and the mmrGreedy specs (zero-norm rows excluded — the
@@ -1413,10 +1425,6 @@ object Similarity {
     require(nprobe > 0 && nprobe <= 64, s"nprobe=$nprobe out of [1, 64]")
     require(seedsPerList > 0 && seedsPerList <= 64,
       s"seedsPerList=$seedsPerList out of [1, 64]")
-    // the centroid read is independent of the serve core's own
-    // startup (meta read, query-page collect, adj listing) — start it
-    // now, join inside hop-0 (r17, guide §2.6)
-    val centsJoin = Par.async(() => readCentroids(spark, ivfPath))
     indexBeamServe(spark, path, queries, k, beam, hops,
         excludeIngestBatch, stateCeiling, "graphTopKFromIndexSeeded") { ctx =>
       import spark.implicits._
@@ -1425,21 +1433,14 @@ object Similarity {
       val entryN2 = ctx.meta.getAs[Double]("entry_n2")
       val buckets = ctx.meta.getAs[Int]("p_buckets")
       // per-query probed centroids DRIVER-SIDE (r17, r16 verdict #4):
-      // the query page (ctx.qRows) and the centroid matrix are both
-      // bounded driver data already, so the old probeList Spark job
-      // paid one fixed-latency job per serve for |page|·nlist dots of
-      // local arithmetic. The assignment evaluates the EXACT
-      // NearestCentroids expression on each query vector (same class,
-      // same insertion top-n, first-wins ties — the graphPbLocal
-      // posture: a driver mirror by construction, never a
-      // re-spelling), so probe results are bit-identical.
-      val cents = centsJoin()
-      val probed: Array[(Long, Int)] =
-        if (cents.isEmpty) Array.empty
-        else ctx.qRows.flatMap { case (qi, v, _) =>
-          graft.functions.VecExprs.nearestCentroidsLocal(v, cents, nprobe)
-            .map(qi -> _)
-        }
+      // the query page (ctx.qRows) and the centroid matrix (the IVF
+      // index's cached handle) are both bounded driver data, so a
+      // probeList Spark job would pay one fixed-latency job per serve
+      // for |page|·nlist dots of local arithmetic — see [[localProbes]]
+      val ivf = ivfHandle(spark, ivfPath)
+      val probed: Array[(Long, Int)] = ctx.qRows.flatMap { case (qi, v, _) =>
+        localProbes(v, ivf.cents, nprobe).map(qi -> _)
+      }
       // seed members: first seedsPerList per probed list, from a
       // c_id-pruned committed lists read — bounded by
       // |probed lists|·seedsPerList driver rows
@@ -1448,7 +1449,7 @@ object Similarity {
         if (probedCids.isEmpty) Map.empty
         else {
           val w = Window.partitionBy(col("c_id")).orderBy(col("vec_id"))
-          committedLists(spark, ivfPath, None)
+          committedLists(spark, ivfPath, None, ivf)
             .filter(col("c_id").isin(probedCids: _*))
             .select(col("c_id"), col("vec_id"))
             .withColumn("__r", row_number().over(w))
@@ -2019,7 +2020,7 @@ object Similarity {
   /** Query-side probe list: each query paired with its `nprobe`
     * nearest centroid indices (same expression, n=nprobe, exploded —
     * queries are few, so the explode is trivially small). */
-  private def probeList(p: DataFrame, isQuery: Column,
+  private[graft] def probeList(p: DataFrame, isQuery: Column,
                         cents: Array[Array[Double]], nprobe: Int): DataFrame =
     if (cents.isEmpty)
       // no centroids → nothing to probe (the ivfAssignPrepared rationale)
@@ -2203,12 +2204,68 @@ object Similarity {
   private def labelBucket(label: Column, buckets: Int): Column =
     pmod(xxhash64(label), lit(buckets.toLong))
 
-  /** The stored coarse quantizer, back as the in-memory matrix every
-    * assignment/probing kernel takes (bounded: nlist × dim doubles). */
-  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids").orderBy("c_id")
-      .select("c_v").collect().map(_.getSeq[Double](0).toArray)
+  /** The driver-resident metadata of one written IVF/IVFPQ index: the
+    * stored coarse quantizer as the in-memory matrix every
+    * assignment/probing kernel takes (bounded: nlist × dim doubles),
+    * the `lists/` schema (so no serve or append pays a parquet
+    * schema-inference job), and the frozen `meta/` row of a
+    * label-bucketed layout. All three change only when the index is
+    * REBUILT ([[writeIvfIndex]] / [[writeIvfPqIndex]]), and a rebuild
+    * always lands new part files under `centroids/` — appends and
+    * compaction never touch that directory — so `stamp`, the
+    * (name, length, mtime) listing of `centroids/`, is the handle's
+    * validity key. */
+  private final class IvfHandle(val stamp: Seq[(String, Long, Long)],
+                                val cents: Array[Array[Double]],
+                                val listsSchema: org.apache.spark.sql.types.StructType,
+                                val meta: Option[Row])
+
+  /** Handles by qualified index path, least recently used first. A
+    * few live indexes per process is the serving shape; the cap
+    * bounds what an index-churning process keeps on the driver. */
+  private val ivfHandles =
+    new java.util.LinkedHashMap[String, IvfHandle](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, IvfHandle]): Boolean = size() > 32
+    }
+
+  /** The index's [[IvfHandle]], revalidated per call by ONE
+    * filesystem listing of `centroids/` (no Spark job): a cached
+    * handle whose stamp still matches is returned as is; otherwise
+    * (first use, or a rebuild at the same path) the metadata is
+    * re-read. The listing precedes the read, so a rebuild racing the
+    * reload leaves a stamp that the next call no longer matches.
+    * Concurrent callers may both reload — they read the same files
+    * and store equal handles. */
+  private def ivfHandle(spark: org.apache.spark.sql.SparkSession,
+                        path: String): IvfHandle = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(s"$path/centroids")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = fs.makeQualified(dir).toString
+    val stamp = fs.listStatus(dir).toSeq
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
+    val cached = ivfHandles.synchronized(Option(ivfHandles.get(key)))
+    cached.filter(_.stamp == stamp).getOrElse {
+      val cents = spark.read.parquet(dir.toString).orderBy("c_id")
+        .select("c_v").collect().map(_.getSeq[Double](0).toArray)
+      // ingest_batch widened to long: partition inference types it
+      // by the ids present (int while they fit), and an append may
+      // later land an id past Int.MaxValue under this cached schema
+      val inferred = spark.read.parquet(s"$path/lists").schema
+      val listsSchema = org.apache.spark.sql.types.StructType(inferred.map(f =>
+        if (f.name == "ingest_batch")
+          f.copy(dataType = org.apache.spark.sql.types.LongType)
+        else f))
+      val metaDir = new Path(s"$path/meta")
+      val meta =
+        if (fs.exists(metaDir)) Some(spark.read.parquet(metaDir.toString).head())
+        else None
+      val h = new IvfHandle(stamp, cents, listsSchema, meta)
+      ivfHandles.synchronized(ivfHandles.put(key, h))
+      h
+    }
+  }
 
   /** The stored PQ codebook, back as the [m][ks][subLen] matrix
     * [[graft.functions.VecExprs.PqEncode]] takes (bounded: m × ks
@@ -2389,8 +2446,10 @@ object Similarity {
     * partial batch costs the serve nothing, not even its files. */
   private def committedLists(spark: org.apache.spark.sql.SparkSession,
                              path: String,
-                             excludeIngestBatch: Option[Long]): DataFrame = {
-    val base = spark.read.parquet(s"$path/lists")
+                             excludeIngestBatch: Option[Long],
+                             h: IvfHandle): DataFrame = {
+    // the handle's schema: file listing only, no schema-inference job
+    val base = spark.read.schema(h.listsSchema).parquet(s"$path/lists")
     val lists = committedBatches(spark, path).fold(base)(ids =>
       base.filter(col("ingest_batch").isin(ids: _*)))
     excludeIngestBatch.fold(lists)(b =>
@@ -2406,7 +2465,7 @@ object Similarity {
     * exactly as it is to the serves. */
   def readIndexVectors(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame =
-    committedLists(spark, path, None)
+    committedLists(spark, path, None, ivfHandle(spark, path))
       .select(col("vec_id"), col("label"), col("v"), col("n2"))
 
   /** Append-side half of the no-concurrent-maintenance contract: a
@@ -2460,16 +2519,16 @@ object Similarity {
     val spark = emb.sparkSession
     assertNoMaintenance(spark, path, "appendToIvfIndex")
     adoptLegacyLedger(spark, path)
-    val cents = readCentroids(spark, path)
-    val existing = spark.read.parquet(s"$path/lists").schema
-    val assigned = ivfAssignPrepared(prepared(withLabel(emb, existing)), cents)
+    val h = ivfHandle(spark, path)
+    val existing = h.listsSchema
+    val assigned = ivfAssignPrepared(prepared(withLabel(emb, existing)), h.cents)
       .select(col("vec_id"), col("label"), col("v"), col("n2"), col("c_id"),
         lit(ingestBatch).as("ingest_batch"))
     // a label-bucketed index (E12 layout) buckets arrivals with the
     // FROZEN build-time B from meta/ — a drifted bucket count would
     // scatter one label across buckets and break serve-time pruning
     if (existing.fieldNames.contains("lbl")) {
-      val bkts = spark.read.parquet(s"$path/meta").head().getAs[Int]("label_buckets")
+      val bkts = labelMeta(h, path).getAs[Int]("label_buckets")
       assigned.withColumn("lbl", labelBucket(col("label"), bkts))
         .write.partitionBy("c_id", "lbl", "ingest_batch")
         .option("partitionOverwriteMode", "dynamic")
@@ -2496,11 +2555,10 @@ object Similarity {
     val spark = emb.sparkSession
     assertNoMaintenance(spark, path, "appendToIvfPqIndex")
     adoptLegacyLedger(spark, path)
-    val cents = readCentroids(spark, path)
+    val h = ivfHandle(spark, path)
     val cbMat = readCodebookMat(spark, path)
-    val existing = spark.read.parquet(s"$path/lists").schema
     graft.functions.VecExprs.withPqEncode(spark, cbMat) { fn =>
-      ivfAssignPrepared(prepared(withLabel(emb, existing)), cents)
+      ivfAssignPrepared(prepared(withLabel(emb, h.listsSchema)), h.cents)
         .filter(col("n2") > 0)
         .withColumn("u", transform(col("v"), x => x / sqrt(col("n2"))))
         .withColumn("codes", call_function(fn, col("u")))
@@ -2579,29 +2637,64 @@ object Similarity {
   }
 
   /** The ONE probe-and-prune spelling every index serve and the
-    * [[probedListFiles]] audit share: probe the stored coarse
-    * quantizer with the zero-norm-filtered queries (a zero query has
-    * no defined ranking, and its degenerate probe rows would inflate
-    * the probed set — reading list partitions no real query needs),
-    * collect the probed list ids (bounded by nlist), and return
+    * [[probedListFiles]] audit share: probe the index's cached coarse
+    * quantizer ([[ivfHandle]]) on the driver with the zero-norm-filtered
+    * queries ([[queryProbes]] — a zero query has no defined ranking,
+    * and its degenerate probe rows would inflate the probed set,
+    * reading list partitions no real query needs), and return
     * (probes, prunedLists) where the list scan carries
     * `c_id IN (probed)` as a PartitionFilter plus the optional
-    * replayed-batch exclusion. The audit MEASURING the same scan the
-    * serves PLAN is the point — a hand-copied spelling de-syncs
-    * silently. */
+    * replayed-batch exclusion. Nothing here schedules a Spark job
+    * beyond the query rows' collect (none for a local query frame):
+    * the centroids and the lists schema come from the handle, the
+    * probed ids from the driver probe, the committed batches from one
+    * ledger listing. The audit MEASURING the same scan the serves
+    * PLAN is the point — a hand-copied spelling de-syncs silently. */
   private def probeAndPrune(spark: org.apache.spark.sql.SparkSession,
                             path: String, queries: DataFrame, nprobe: Int,
                             excludeIngestBatch: Option[Long] = None)
       : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val cents = readCentroids(spark, path)
-    val probes = probeList(preparedQueries(queries).filter(col("n2") > 0),
-      lit(true), cents, nprobe)
-    val probedIds = probes.select(col("c_id")).distinct().as[Int].collect().toSeq
-    val lists = committedLists(spark, path, excludeIngestBatch)
+    val h = ivfHandle(spark, path)
+    val probes = queryProbes(queries, h.cents, nprobe)
+    val probedIds = probes.collect().map(_.getInt(3)).distinct.toSeq
+    val lists = committedLists(spark, path, excludeIngestBatch, h)
       .filter(col("c_id").isin(probedIds: _*))
     (probes, lists)
   }
+
+  /** The query side of [[probeAndPrune]]: `probeList` over the
+    * non-zero prepared queries, evaluated on the DRIVER — the query
+    * rows are collected once (the serve broadcast them anyway) and
+    * each is probed by [[localProbes]], so the result is a local
+    * relation `(q_id, q_v, q_n2, c_id)` with exactly probeList's rows
+    * (spec-pinned, ties and zero-norm exclusion included). */
+  private[graft] def queryProbes(queries: DataFrame,
+                                 cents: Array[Array[Double]],
+                                 nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val q = preparedQueries(queries).filter(col("n2") > 0)
+    val rows = q.collect().toSeq.flatMap { r =>
+      localProbes(r.getSeq[Double](1), cents, nprobe).toSeq
+        .map(c => Row(r.get(0), r.get(1), r.get(2), c))
+    }
+    queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("q_id", q.schema("vec_id").dataType),
+        StructField("q_v", q.schema("v").dataType),
+        StructField("q_n2", DoubleType),
+        StructField("c_id", IntegerType, nullable = false))))
+  }
+
+  /** One query vector's `nprobe` nearest centroids on the driver: the
+    * EXACT [[graft.functions.VecExprs.NearestCentroids]] expression
+    * probeList evaluates (same class, same insertion top-n, first-wins
+    * ties — a driver mirror by construction, never a re-spelling), so
+    * probe results are bit-identical. No centroids, no probes (the
+    * [[probeList]] empty-index rule). */
+  private def localProbes(v: Seq[Double], cents: Array[Array[Double]],
+                          nprobe: Int): Array[Int] =
+    if (cents.isEmpty) Array.empty
+    else graft.functions.VecExprs.nearestCentroidsLocal(v, cents, nprobe)
 
   /** Partition-pruning audit quantity for the index serves: the list
     * files a serve for `queries` at `nprobe` ACTUALLY reads — distinct
@@ -2622,7 +2715,12 @@ object Similarity {
     * `c_id IN (probed)` — spec-proved, with the input file set
     * restricted to the probed directories). `queries` is any frame
     * with (vec_id, embedding) — the external query set of a real
-    * deployment. The probed-id collect is bounded by nlist.
+    * deployment. The probe runs on the driver against the index's
+    * cached quantizer ([[probeAndPrune]]), so the returned frame's
+    * execution is the whole serve: for a local query frame, the
+    * probe-list broadcast, the pruned list scan and the rank window
+    * (three warm jobs, spec-pinned) — no centroid read, probe job or
+    * schema inference per request.
     *
     * `selfExclude` drops candidates whose vec_id equals the query's —
     * right when queries ARE corpus members (don't return yourself);
@@ -2700,17 +2798,16 @@ object Similarity {
                             path: String, queries: DataFrame, nprobe: Int,
                             excludeIngestBatch: Option[Long])
       : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").head()
+    import org.apache.spark.sql.types._
+    val h = ivfHandle(spark, path)
+    val meta = labelMeta(h, path)
     val bkts = meta.getAs[Int]("label_buckets")
     val nLabels = math.max(1L, meta.getAs[Long]("n_labels"))
-    val cents = readCentroids(spark, path)
-    val probeN = math.min(cents.length.toLong, nprobe.toLong * nLabels).toInt
+    val probeN = math.min(h.cents.length.toLong, nprobe.toLong * nLabels).toInt
     // query labels cast to the lists' stored type (the withLabel
     // rationale, serve side): a string-typed query label would hash
     // into a different bucket space and prune to nothing
-    val storedLabelType =
-      spark.read.parquet(s"$path/lists").schema("label").dataType
+    val storedLabelType = h.listsSchema("label").dataType
     // loud, not silent (the withLabel rationale): an uncastable query
     // label would cast to null and fall to the isNotNull filter — an
     // empty page instead of an error. Query frames are bounded.
@@ -2722,19 +2819,43 @@ object Similarity {
     val q = prepared(queries.withColumn("label",
         col("label").cast(storedLabelType)))
       .filter(col("n2") > 0 && col("label").isNotNull)
-    val probes = probeList(q, lit(true), cents, probeN)
-      .join(q.select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        labelBucket(col("label"), bkts).as("q_lbl")), Seq("q_id"))
-    // both collected sets are bounded metadata: probed ids by nlist,
-    // query buckets by min(distinct query labels, B)
-    val probedIds = probes.select(col("c_id")).distinct().as[Int].collect().toSeq
-    val qLbls = q.select(labelBucket(col("label"), bkts))
-      .distinct().as[Long].collect().toSeq
-    val lists = committedLists(spark, path, excludeIngestBatch)
+      .select(col("vec_id"), col("v"), col("n2"), col("label"),
+        labelBucket(col("label"), bkts).as("q_lbl"))
+    // probes on the driver ([[queryProbes]]), each probe row carrying
+    // the label and bucket of every query row with its id — the rows
+    // a q_id equi-join of the probe list with the queries yields
+    // (null ids join nothing)
+    val qRows = q.collect().filterNot(_.isNullAt(0))
+    val byId = qRows.groupBy(_.get(0))
+    val rows = qRows.toSeq.flatMap { r =>
+      for {
+        c <- localProbes(r.getSeq[Double](1), h.cents, probeN).toSeq
+        l <- byId(r.get(0)).toSeq
+      } yield Row(r.get(0), r.get(1), r.get(2), c, l.get(3), l.get(4))
+    }
+    val probes = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("q_id", q.schema("vec_id").dataType),
+        StructField("q_v", q.schema("v").dataType),
+        StructField("q_n2", DoubleType),
+        StructField("c_id", IntegerType, nullable = false),
+        StructField("q_label", storedLabelType),
+        StructField("q_lbl", q.schema("q_lbl").dataType))))
+    // both pruning sets are bounded driver metadata: probed ids by
+    // nlist, query buckets by min(distinct query labels, B)
+    val probedIds = rows.map(_.getInt(3)).distinct
+    val qLbls = qRows.map(_.get(4)).distinct.toSeq
+    val lists = committedLists(spark, path, excludeIngestBatch, h)
       .filter(col("c_id").isin(probedIds: _*) && col("lbl").isin(qLbls: _*))
       .filter(col("n2") > 0)
     (probes, lists)
   }
+
+  /** The frozen `meta/` row of a label-bucketed index, from its handle. */
+  private def labelMeta(h: IvfHandle, path: String): Row =
+    h.meta.getOrElse(throw new IllegalArgumentException(
+      s"$path has no meta/ — it was written without labelBuckets, so it " +
+        "has no label-bucket layout to serve or append to"))
 
   /** Pruning audit for the filtered serve — the [[probedListFiles]]
     * dual over the SAME scan [[filteredTopKFromIndex]] plans: the

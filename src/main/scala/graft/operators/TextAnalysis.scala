@@ -1176,9 +1176,14 @@ object TextAnalysis {
           (tfD * lit(10L) * lit(t) + lit(3L * t).cast(D38) +
             col("dl").cast(D38) * lit(9L * n)).cast("double"), 6)
         .cast(org.apache.spark.sql.types.DecimalType(20, 6))
+    // bucket-pruned: Σ df(term) rows. The bucketed scan still plans
+    // one partition per bucket — empty ones included — so coalesce it
+    // to the ≤ |terms| buckets the pruning can keep: the same files
+    // read by |terms| tasks instead of one task per bucket
     val postBase = spark.table(s"${table}_post")
-      .filter(col("tok").isin(uniq: _*)) // bucket-pruned: Σ df(term) rows
+      .filter(col("tok").isin(uniq: _*))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+      .coalesce(uniq.size)
     // delta segments ride the same shape: pbkt partition-pruned to
     // the query terms' buckets, still Σ df(term) rows — appended
     // doc_ids are new by the append contract, so the union is
