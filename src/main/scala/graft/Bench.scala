@@ -28,10 +28,10 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** The one cache-release sweep both the bench loop and the variance
-    * drives use — shared so a cache added here is cleared EVERYWHERE
-    * that claims "caches cleared between reps" (r15 review: the drive
-    * had its own copy that had already drifted). */
+  /** The one cache-release sweep both the bench loop and [[Profile]]
+    * use — shared so a cache added here is cleared EVERYWHERE that
+    * claims "caches cleared between reps" (r15 review: a drive had its
+    * own copy that had already drifted). */
   private[graft] def clearAllCaches(spark: SparkSession): Unit = {
     graft.operators.Dedup.releaseCaches()
     graft.operators.Similarity.releaseCaches()
@@ -66,9 +66,15 @@ object Bench {
   private val benchExclude: Set[String] =
     Set("ann_graph_topk", "ann_graph_topk_indexed", "ann_graph_topk_seeded")
 
+  /** Larger codegen class cache: the warmup + timed phases compile
+    * >100 distinct stages and the default 100-entry cache would make
+    * every timed query pay Janino recompilation. */
+  private[graft] val codegenCacheExtra: Map[String, String] =
+    Map("spark.sql.codegen.cache.maxEntries" -> "5000")
+
   /** noop-sink wall time of one plan — the same materialization rule
     * as the catalog loop (see Methodology). */
-  private def timeNoop(fn: () => org.apache.spark.sql.DataFrame): Double = {
+  private[graft] def timeNoop(fn: () => org.apache.spark.sql.DataFrame): Double = {
     val t0 = System.nanoTime()
     fn().write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
@@ -77,11 +83,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // larger codegen class cache: the warmup + timed phases compile
-    // >100 distinct stages and the default 100-entry cache would make
-    // every timed query pay Janino recompilation
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-      extra = Map("spark.sql.codegen.cache.maxEntries" -> "5000"))
+      extra = codegenCacheExtra)
     // deterministic per-entry cost counters (r16 verdict #2): jobs/
     // tasks/exec_s/shuffle_mb land in BENCH_FULL.json next to the wall
     // medians — the load-insensitive record that adjudicates sub-5s

@@ -20,12 +20,12 @@ private[graft] object BenchCounters {
 }
 
 /** Deterministic per-entry cost counters INSIDE the bench artifact
-  * (r16 verdict ask #2, generalizing the CostNoop drive): wall clock
-  * on this box swings ±26% with ambient load, so sub-5s entries
-  * cannot be adjudicated from wall medians alone — but job count,
-  * task count, summed executor run time and shuffle bytes are
-  * properties of the PLAN and the DATA, not of the noisy neighbor. A
-  * wall swing with flat counters is dismissible from the committed
+  * (r16 verdict ask #2, generalizing PERF.md Round 16's per-entry
+  * counters): wall clock on this box swings ±26% with ambient load,
+  * so sub-5s entries cannot be adjudicated from wall medians alone —
+  * but job count, task count, summed executor run time and shuffle
+  * bytes are properties of the PLAN and the DATA, not of the noisy
+  * neighbor. A wall swing with flat counters is dismissible from the committed
   * BENCH_FULL.json alone.
   *
   * One listener, registered once; [[record]] snapshots the adders

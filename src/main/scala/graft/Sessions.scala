@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-session builder for the runnable mains (Verify, Bench,
-  * Explain, Pipeline) — one place for the configs every entry point
+  * Profile, Pipeline) — one place for the configs every entry point
   * needs instead of four copies. */
 object Sessions {
   def local(cpus: String, shufflePartitions: String = null,
@@ -27,14 +27,8 @@ object Sessions {
       // 2+ sequential sub-jobs for zero saved work (measured: each
       // graph-serve hop paid it). A higher initial partition count
       // makes pass 1 cover the whole scan for anything under this
-      // many partitions — one job per bounded collect. Env-tunable
-      // for clusters where genuinely-selective small LIMITs dominate
-      // (there the ramp is the right behavior — set it back to 1).
-      // (a malformed value degrades to the default, like
-      // SPARK_GRAFT_CPUS — never kills the session build)
-      .config("spark.sql.limit.initialNumPartitions",
-        sys.env.get("SPARK_GRAFT_LIMIT_INIT_PARTS")
-          .flatMap(_.toIntOption).filter(_ > 0).getOrElse(512).toString)
+      // many partitions — one job per bounded collect.
+      .config("spark.sql.limit.initialNumPartitions", "512")
       // r17: every LOCAL relation in this engine is bounded driver
       // metadata BY DOCTRINE (beam frontiers, known-pair sets, query
       // pages, admission sets — all ≤ 4096 rows or ceiling-guarded),
@@ -48,11 +42,8 @@ object Sessions {
       // 2.3 exec-s, identical results). One partition is the right
       // shape for ≤4096-row relations on ANY cluster size — shipping
       // bounded metadata through hundreds of scheduler slots is pure
-      // overhead. Env-tunable for an engine reusing these sessions
-      // with genuinely large local collections (not this catalog).
-      .config("spark.sql.leafNodeDefaultParallelism",
-        sys.env.get("SPARK_GRAFT_LEAF_PAR")
-          .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1).toString)
+      // overhead.
+      .config("spark.sql.leafNodeDefaultParallelism", "1")
       // r16: let AQE re-plan the partitioning of CACHED intermediates
       // — the engine caches small intermediate frames everywhere
       // (CacheSlots), and with the default (false) every consumer of

@@ -618,7 +618,7 @@ object SparkEntry {
 
     "dedup_embedding_cosine" -> ((s, d) => Dedup.embeddingCosine(emb(s, d), 0.45)),
 
-    // tables=6/probes=2/occupancy=128: the r8 D5bTuneDrive pick — the
+    // tables=6/probes=2/occupancy=128: the r8 D5b retune pick — the
     // cheapest swept config holding pair recall 1.00 at BOTH verify
     // sfs (3.3× less candidate volume than the old 8-table/256
     // config; precision stays 1.0 — every candidate is exact-verified)
@@ -859,7 +859,7 @@ object SparkEntry {
 
     // nlist=32/nprobe=8 scans the same 25% of the corpus as the old
     // 16/4 but through finer lists: measured recall@5 .58 → .62 at
-    // sf0.01 for identical scan cost (AnnTuneDrive)
+    // sf0.01 for identical scan cost (PERF.md r7, E-block retune)
     "ann_ivf_topk" -> ((s, d) =>
       Similarity.ivfTopK(emb(s, d), annIsQuery, 5,
         nlist = 32, nprobe = 8)),                                     // rows-only
@@ -879,7 +879,7 @@ object SparkEntry {
     // verify found plain-PQ ADC ordering collapse on a clustered
     // corpus (recall@5 .44 at rr=16 where sf0.01 measures .98 — the
     // isotropic-calibrated shortlist is too thin when a query has
-    // thousands of near neighbors); Sf1PqDrive's sweep shows recall
+    // thousands of near neighbors); the r8 sf1 sweep shows recall
     // monotone in rr (.44/.58/.74/.89 at 16/32/64/128) at FLAT wall
     // (the shortlist rerank is nq × k·rr exact dots — noise next to
     // the ADC scan). rr can only widen the exact-reranked superset, so
@@ -908,7 +908,7 @@ object SparkEntry {
 
     // E6r: FAISS-faithful residual encoding (codes quantize u − cent);
     // rerank=64 as E6 — on the clustered sf1 corpus the residual codes
-    // turn the same budget into .96 recall (Sf1PqDrive)
+    // turn the same budget into .96 recall (PERF.md Round 8, sf1)
     "ann_ivfpq_residual_topk" -> ((s, d) =>                           // rows-only
       Similarity.ivfpqResidualTopK(emb(s, d), annIsQuery, 5,
         nlist = 32, nprobe = 8, rerank = 64)),
@@ -1436,8 +1436,8 @@ object SparkEntry {
     * signal instead of living only in the specs. Floors are ~0.9× the
     * smaller of the two verify-sf measured recalls under the CURRENT
     * quality params — the inline comment on the map below is the
-    * single source for those measured values (r7 AnnTuneDrive
-    * retune) — loose enough for the corpus-to-corpus variance the
+    * single source for those measured values (the r7 E-block
+    * retune, PERF.md) — loose enough for the corpus-to-corpus variance the
     * two sfs exhibit, tight enough to catch a real regression.
     *
     * On the r5→r6 "drift" the r6 advice flagged (lsh .76→.62 etc.):
@@ -1469,7 +1469,7 @@ object SparkEntry {
     // neighbors grow ~n), so the catalog serve auto-sizes the
     // shortlist to a constant 20% corpus fraction, which holds
     // recall flat across sfs (.62/.74 at the verify sfs; clustered
-    // corpora hold 0.886 at a 0.2% shortlist — JlProjectDrive).
+    // corpora hold 0.886 at a 0.2% shortlist — PERF.md Round 8b).
     // Floor 0.9× the smaller verify sf
     "ann_project_topk"        -> (("ann_bruteforce_topk", 0.55)),
     "ann_pq_topk"             -> (("ann_bruteforce_topk", 0.88)),
@@ -1486,7 +1486,7 @@ object SparkEntry {
     // sf0.001/sf0.01 (up from .927/.931 unrefined; the isotropic
     // verify corpora plateau there — further rounds add ≤ .001, and
     // the clustered deploy-regime corpus is at 1.00 with or without
-    // refinement, NnDescentDrive → PERF.md r10); floor 0.9× the
+    // refinement, PERF.md Round 10); floor 0.9× the
     // smaller measured
     "knn_graph_ann"           -> (("knn_graph", 0.85)),
     // E11b: label-AGREEMENT gate (overlap on (vec_id, cluster_id)) —

@@ -46,13 +46,6 @@ object Tables {
       scala.collection.concurrent.TrieMap[(String, String),
         java.lang.ref.SoftReference[DataFrame]]]()
 
-  /** Drop a session's resolved relations — call after REWRITING a
-    * table directory in-session (the cached InMemoryFileIndex still
-    * lists the old part files and the next action would die with
-    * "underlying files have been updated"). */
-  def invalidate(spark: SparkSession): Unit =
-    cache.synchronized { Option(cache.get(spark)).foreach(_.clear()) }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val perSession = cache.synchronized {
       cache.computeIfAbsent(spark,

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -846,7 +845,7 @@ object VecExprs {
     * `array<double>` (inDim) → `array<double>` (outDim). The HOF
     * spelling (transform + zip_with + aggregate) is CodegenFallback —
     * ~outDim·inDim boxed lambda calls per row, measured ~40 s for a
-    * 50k×100-query serve in JlProjectDrive where the fused brute
+    * 50k×100-query serve (PERF.md Round 8b) where the fused brute
     * force runs in 0.7 s — so the projection gets the [[DotProduct]]
     * treatment. Semantics are bit-identical to the oracle-pinned
     * integer spelling: each element rounds to micro-units via

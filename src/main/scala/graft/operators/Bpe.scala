@@ -58,7 +58,7 @@ object Bpe {
   /** The localCheckpoint-with-explicit-pins pattern (see
     * Dedup.checkpointPinned's scaladoc for why Dataset.unpersist
     * cannot free checkpoint blocks). */
-  private def checkpointPinned(df: DataFrame, eager: Boolean = true)
+  private def checkpointPinned(df: DataFrame, eager: Boolean)
       : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
     // one shared implementation (r16 review) — locked registration,
     // AQE stages materialized before the lock; the train loop uses
@@ -106,7 +106,8 @@ object Bpe {
     * batch-mate diminished can be picked a few ranks early), but
     * every pick is top-M-by-count and independent of its batch-mates,
     * and the resulting tokenizer's compression is measured ≈
-    * sequential's (BpeScaleDrive reports the piece-count delta).
+    * sequential's (PERF.md Rounds 9 and 10 report the piece-count
+    * delta).
     * Strict mode on natural text caps at ~3 picks/round — the
     * provable-equivalence ceiling, not an implementation limit —
     * because the top of the pair distribution shares common
@@ -247,10 +248,6 @@ object Bpe {
       (i + 1L, l, r, l + r, c)
     }.toSeq.toDF("rank", "left", "right", "merged", "pair_count")
   }
-
-  /** [[train]] + [[mergeTable]] in one call. */
-  def trainTable(docs: DataFrame, nMerges: Int): DataFrame =
-    mergeTable(docs.sparkSession, train(docs, nMerges))
 
   /** Freeze the learned merge list as an ON-DISK tokenizer artifact
     * (r10) — the deploy flow every other trained model here already

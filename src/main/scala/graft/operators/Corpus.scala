@@ -581,7 +581,7 @@ object Corpus {
     * the two cached stage frames (redacted prefix, near-dup
     * survivors) plus runtime shuffle-stage reuse make the expensive
     * subtrees shared across branches — the ledger costs ~one funnel
-    * pass (1.69 s vs the funnel's 1.94 s at sf0.1, FunnelDrive), not
+    * pass (1.69 s vs the funnel's 1.94 s at sf0.1, measured r14), not
     * O(stages) passes. */
   def prepFunnelLedger(docs: DataFrame, isBenchmark: Column,
                        blocklist: Seq[String], keepLang: String = "en",

@@ -73,8 +73,8 @@ object Layout {
     * integer arithmetic — and NORMALIZED: a narrow dim (say 150
     * user ids) must still fill the whole bucket range, or its bits
     * sit above the wide dim's in the interleave and that dim stops
-    * pruning (found by LayoutDrive: user-only predicates hit 64/64
-    * files before this scaling). Small spans scale UP via an exact
+    * pruning (PERF.md Round 12: user-only predicates hit 64/64 files
+    * before this scaling). Small spans scale UP via an exact
     * (off · 2^bits) div span (the product fits a long whenever
     * span ≤ Long.Max >> bits — true for µs timestamps over
     * millennia); astronomically wide spans fall back to fixed

@@ -222,7 +222,7 @@ object Similarity {
         // = fewer candidates per table at the price of more plane
         // straddles — with probes ≥ 2 re-finding the straddlers, 128
         // measured 3.3× cheaper than 256 at UNCHANGED pair recall
-        // (D5bTuneDrive r8, PERF.md)
+        // (PERF.md Round 8: D5b retune)
         val n = emb.count()
         math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(
           math.max(1L, n / occupancy)))
@@ -301,8 +301,8 @@ object Similarity {
     * a document land in the same k-means cluster, so the all-pairs
     * quadratic collapses from corpus² to Σ(listᵢ²) — size nlist so
     * lists stay bounded and that is ~linear in the corpus. The plan:
-    * sampled driver-side training ([[trainCentroids]]), ZERO-shuffle
-    * assignment (the [[graft.functions.VecExprs.NearestCentroids]]
+    * sampled driver-side training ([[trainCentroidsPrepared]]),
+    * ZERO-shuffle assignment (the [[graft.functions.VecExprs.NearestCentroids]]
     * scan), and one candidate equi-join whose shuffle key is the
     * list id — work distributes by cluster, never all-pairs.
     *
@@ -1295,10 +1295,9 @@ object Similarity {
     // collect would re-evaluate the query SOURCE through the
     // broadcast (for the catalog/bench callers a corpus-table scan,
     // ~hops+2 times per serve — r14 review)
-    val qRows = GraphStages.time("serve_qcollect")(
-      preparedQueries(queries).filter(col("n2") > 0)
-        .select(col("vec_id"), col("v"), col("n2"))
-        .limit(4097).as[(Long, Seq[Double], Double)].collect())
+    val qRows = preparedQueries(queries).filter(col("n2") > 0)
+      .select(col("vec_id"), col("v"), col("n2"))
+      .limit(4097).as[(Long, Seq[Double], Double)].collect()
     require(qRows.length <= 4096,
       s"$op serves a bounded query PAGE, got > 4096 query vectors")
     val meta = metaJoin()
@@ -1357,11 +1356,10 @@ object Similarity {
         .limit(limitRows)
         .as[(Long, Long, Double)].collect()
     beamSearchDrive(spark, qIds, k, beam, hops, stateCeiling, op,
-      hop0 = { lim => GraphStages.time("serve_hop0") {
+      hop0 = { lim =>
         scorePage(hop0Cand(IndexServeCtx(meta, qRows, adjScan)), lim)
-      } },
-      expand = { (frontier, known, lim) => GraphStages.time("serve_expand") {
-        GraphStages.count("serve_hop_n")
+      },
+      expand = { (frontier, known, lim) =>
         if (frontier.isEmpty) Array.empty
         else {
           val ft = graft.functions.ServeExprs.LongsTable.byKey(frontier)
@@ -1383,7 +1381,7 @@ object Similarity {
             scorePage(cand, lim)
           }
         }
-      } })
+      })
     }}
   }
 
@@ -1416,7 +1414,7 @@ object Similarity {
     * [[graphTopKFromIndex]] from hop 1 on. With beam/hops wide enough
     * to exhaust the component this is bit-identical to the frozen
     * serve (spec-pinned); at tight hops it reaches recall the frozen
-    * entry needs more hops to match (GraphSeedDrive, PERF.md). */
+    * entry needs more hops to match (measured at 10× corpus in r16). */
   def graphTopKFromIndexSeeded(spark: org.apache.spark.sql.SparkSession,
       path: String, ivfPath: String, queries: DataFrame, k: Int,
       beam: Int = 32, hops: Int = 6, nprobe: Int = 2,
@@ -1666,9 +1664,6 @@ object Similarity {
     val embL = withNullLabel(emb)
     val batch = preparedNonZero(embL).cache()
     try {
-      // GraphStages brackets (r15 verdict #3): non-overlapping stage
-      // attribution for the drive's per-batch cost table — one
-      // volatile read each when no capture is active.
       // ONE bounded collect serves as count AND id set (r16: the
       // separate count() paid a second fixed-latency job per batch
       // for a number the id collect already yields); the limit makes
@@ -1691,8 +1686,7 @@ object Similarity {
           page.select(col("q_id")).distinct().as[Long].collect().toSet
         })
       }
-      val idRows = GraphStages.time("app_admission")(
-        batch.select(col("vec_id")).limit(4097).as[Long].collect())
+      val idRows = batch.select(col("vec_id")).limit(4097).as[Long].collect()
       // meta joined before the empty-batch return: an append into a
       // missing/corrupt index must still throw, not commit (the
       // sequential spelling's order)
@@ -1727,20 +1721,17 @@ object Similarity {
       // they cannot be checked from the page alone — the scaladoc
       // carries the contract).
       pageQJoin.foreach { join =>
-        GraphStages.time("app_admission") {
-          val pageQ = join()
-          require(pageQ.subsetOf(batchIds),
-            "precomputedNeighbors was served for a DIFFERENT query set " +
-              s"than this batch (${(pageQ -- batchIds).size} page queries " +
-              s"not among the ${batchIds.size} nonzero batch vectors)")
-        }
+        val pageQ = join()
+        require(pageQ.subsetOf(batchIds),
+          "precomputedNeighbors was served for a DIFFERENT query set " +
+            s"than this batch (${(pageQ -- batchIds).size} page queries " +
+            s"not among the ${batchIds.size} nonzero batch vectors)")
       }
       val fwd = precomputedNeighbors
-        .getOrElse(GraphStages.time("app_attach_serve")(
-          graphTopKFromIndex(spark, path,
-            emb.select(col("vec_id"), col("embedding")), k, b0, hops,
-            excludeIngestBatch = Some(ingestBatch),
-            stateCeiling = stateCeiling)))
+        .getOrElse(graphTopKFromIndex(spark, path,
+          emb.select(col("vec_id"), col("embedding")), k, b0, hops,
+          excludeIngestBatch = Some(ingestBatch),
+          stateCeiling = stateCeiling))
         .select(col("q_id"), col("n_id"), col("cos_sim"))
       val within = knnGraph(embL, k)
         .select(col("q_id"), col("n_id"), col("cos_sim"))
@@ -1756,10 +1747,8 @@ object Similarity {
       // existing members via the bounded vec/ point lookup (the ids
       // are ≤ 2·batch·k driver metadata)
       // this collect EXECUTES the edge computation (within-batch kNN +
-      // union + per-arrival top-k window + undirect/distinct) — the
-      // bracket prices that whole lineage, not just the collect
-      val dstIds = GraphStages.time("app_edges")(
-        und.select(col("dst")).distinct().as[Long].collect())
+      // union + per-arrival top-k window + undirect/distinct)
+      val dstIds = und.select(col("dst")).distinct().as[Long].collect()
       val existIds = dstIds.filterNot(batchIds).toSeq
       // the distinct existing endpoints are bounded by batch·k, which
       // for k ≥ 33 can exceed the point-scan frontier ceiling (2^17) —
@@ -1775,31 +1764,26 @@ object Similarity {
       // them (r16, guide §2.6): the batch-sized jobs are fixed-latency
       // bound, so the pair costs max(adj, vec) instead of their sum.
       // Commit-record-last is unchanged — it still lands only after
-      // BOTH writes return. The GraphStages brackets now time two
-      // overlapping stages: their SUM can exceed the batch's wall
-      // share (each is its own thread's wall time).
+      // BOTH writes return.
       Par.run(Seq(
-        () => GraphStages.time("app_adj_write")(
-          und.join(dstVecs.select(col("vec_id").as("dst"),
-              col("v").as("dst_v"), col("n2").as("dst_n2")), Seq("dst"))
-            .select(col("src"), col("dst"), col("dst_v"), col("dst_n2"))
-            .withColumn("pb", graphPb(col("src"), buckets))
-            .withColumn("ingest_batch", lit(ingestBatch))
-            .repartition(col("pb")).sortWithinPartitions(col("src"))
-            .write.partitionBy("pb", "ingest_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$path/adj")),
-        () => GraphStages.time("app_vec_write")(
-          batch.select(col("vec_id"), col("v"), col("n2"))
-            .withColumn("vb", graphPb(col("vec_id"), buckets))
-            .withColumn("ingest_batch", lit(ingestBatch))
-            .repartition(col("vb")).sortWithinPartitions(col("vec_id"))
-            .write.partitionBy("vb", "ingest_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$path/vec"))))
+        () => und.join(dstVecs.select(col("vec_id").as("dst"),
+            col("v").as("dst_v"), col("n2").as("dst_n2")), Seq("dst"))
+          .select(col("src"), col("dst"), col("dst_v"), col("dst_n2"))
+          .withColumn("pb", graphPb(col("src"), buckets))
+          .withColumn("ingest_batch", lit(ingestBatch))
+          .repartition(col("pb")).sortWithinPartitions(col("src"))
+          .write.partitionBy("pb", "ingest_batch")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").parquet(s"$path/adj"),
+        () => batch.select(col("vec_id"), col("v"), col("n2"))
+          .withColumn("vb", graphPb(col("vec_id"), buckets))
+          .withColumn("ingest_batch", lit(ingestBatch))
+          .repartition(col("vb")).sortWithinPartitions(col("vec_id"))
+          .write.partitionBy("vb", "ingest_batch")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").parquet(s"$path/vec")))
       // commit record last — see appendToIvfIndex
-      GraphStages.time("app_commit")(
-        writeCommitRecord(spark, path, ingestBatch))
+      writeCommitRecord(spark, path, ingestBatch)
     } finally batch.unpersist(false): Unit
   }
 
@@ -1967,8 +1951,8 @@ object Similarity {
   /** Deterministic coarse-quantizer centroids, collected and
     * unit-normalized on the driver (smallest-xxhash64 sample — shared
     * by E3's probing and E6's IVFPQ composition; a k-means train
-    * replaces the sample via [[trainCentroids]]). The collect is
-    * bounded metadata, not data: nlist × dim doubles — the same
+    * replaces the sample via [[trainCentroidsPrepared]]). The collect
+    * is bounded metadata, not data: nlist × dim doubles — the same
     * "coarse quantizer lives in memory" posture as FAISS, and the
     * price of the zero-shuffle assignment below. Unit-normalizing
     * here lets the assignment rank by raw dot (≡ cosine). */
@@ -2035,29 +2019,6 @@ object Similarity {
             explode(call_function(fn, col("v"))).as("c_id"))
     }
 
-  /** Spherical k-means (Lloyd) training of the coarse quantizer to
-    * convergence — the driver loop [[centroidUpdate]]'s scaladoc
-    * names, now feeding E3/E6 in place of the raw hash sample.
-    * Trains on a BOUNDED deterministic sample (the FAISS posture:
-    * quantizers never train on the whole corpus — k-means quality
-    * saturates at a few hundred points per centroid, and at 100 TB a
-    * per-round corpus pass is pure waste). ONE cluster job collects
-    * the sample; every Lloyd round then runs on the driver over
-    * ≤ [[trainSampleRows]] vectors — no per-round jobs at all.
-    * Assignment is argmax-dot with first-wins ties (the exact
-    * [[graft.functions.VecExprs.NearestCentroids]] contract), the
-    * update normalizes each cluster's member SUM (spherical k-means),
-    * empty clusters keep their previous centroid, and the loop stops
-    * at `maxIter` or when the largest per-centroid movement drops
-    * below `tol`. The DISTRIBUTED one-step update stays available as
-    * [[centroidUpdate]] (E4, oracle-checked).
-    */
-  def trainCentroids(emb: DataFrame, nlist: Int = 16, maxIter: Int = 10,
-                     tol: Double = 1e-4): Array[Array[Double]] = {
-    val p = prepared(emb)
-    trainCentroidsPrepared(p, collectCentroids(p, nlist), maxIter, tol)
-  }
-
   /** Training-sample ceiling: ~10⁴ vectors bounds driver memory at a
     * few MB and exceeds FAISS's recommended points-per-centroid many
     * times over at the nlist/ks sizes in this catalog. */
@@ -2081,6 +2042,23 @@ object Similarity {
     math.sqrt(s)
   }
 
+  /** Spherical k-means (Lloyd) training of the coarse quantizer from
+    * the `seed` centroids to convergence — the driver loop
+    * [[centroidUpdate]]'s scaladoc names, now feeding E3/E6 in place of the raw hash sample.
+    * Trains on a BOUNDED deterministic sample (the FAISS posture:
+    * quantizers never train on the whole corpus — k-means quality
+    * saturates at a few hundred points per centroid, and at 100 TB a
+    * per-round corpus pass is pure waste). ONE cluster job collects
+    * the sample; every Lloyd round then runs on the driver over
+    * ≤ [[trainSampleRows]] vectors — no per-round jobs at all.
+    * Assignment is argmax-dot with first-wins ties (the exact
+    * [[graft.functions.VecExprs.NearestCentroids]] contract), the
+    * update normalizes each cluster's member SUM (spherical k-means),
+    * empty clusters keep their previous centroid, and the loop stops
+    * at `maxIter` or when the largest per-centroid movement drops
+    * below `tol`. The DISTRIBUTED one-step update stays available as
+    * [[centroidUpdate]] (E4, oracle-checked).
+    */
   private def trainCentroidsPrepared(p: DataFrame, seed: Array[Array[Double]],
                                      maxIter: Int, tol: Double): Array[Array[Double]] = {
     if (seed.isEmpty) return seed
@@ -3138,8 +3116,7 @@ object Similarity {
     * EXACTNESS invariant (a rerank window covering every candidate
     * reproduces exact IVF at the same nprobe) and recall parity, not
     * a win. The win is MEASURED in the clustered regime
-    * (ClusteredAnnDrive r8, 100k-vector mixture-of-256-Gaussians,
-    * PERF.md): recall@5 0.988 residual vs 0.848 plain at nlist=256/
+    * (PERF.md Round 8, 100k-vector mixture-of-256-Gaussians): recall@5 0.988 residual vs 0.848 plain at nlist=256/
     * rr=16, growing with nlist (0.920 vs 0.848 at nlist=64) exactly
     * as the tight-list argument predicts, and decisive at thin
     * rerank budgets (0.612 vs 0.216 at rr=1 — residual ADC ordering
@@ -3260,10 +3237,10 @@ object Similarity {
     }
 
   /** Per-subspace L2 k-means refinement of the PQ codebook, trained —
-    * like [[trainCentroids]] — on a BOUNDED deterministic sample: ONE
-    * cluster job collects ≤ [[trainSampleRows]] unit vectors, then
-    * every Lloyd round runs on the driver (all `m` subspaces per
-    * round). Assignment is nearest-entry by squared L2 with
+    * like [[trainCentroidsPrepared]] — on a BOUNDED deterministic
+    * sample: ONE cluster job collects ≤ [[trainSampleRows]] unit
+    * vectors, then every Lloyd round runs on the driver (all `m`
+    * subspaces per round). Assignment is nearest-entry by squared L2 with
     * first-wins ties and the d² = ‖a‖² + ‖b‖² − 2·a·b accumulator
     * order — the exact [[graft.functions.VecExprs.PqEncode]] contract,
     * so serve-time encoding agrees with training. Entries with no
@@ -3818,7 +3795,7 @@ object Similarity {
     * with shortlist 100) while the constant fraction holds recall
     * flat — that fraction is the isotropic regime's price. Clustered
     * corpora (real embeddings) don't pay it: a fixed overfetch=20 —
-    * 0.2% of a 50k corpus — holds 0.886 there (JlProjectDrive), which
+    * 0.2% of a 50k corpus — holds 0.886 there (PERF.md Round 8b), which
     * is the regime this operator deploys in. */
   def projectedTopK(emb: DataFrame, isQuery: Column, k: Int,
                     outDim: Int = 16, inDim: Int = 64,

@@ -1377,8 +1377,7 @@ object TextAnalysis {
     * actually ship: a classifier trained ONCE on labeled reference
     * data scoring every new crawl shard. */
   def writeNbModel(docs: DataFrame, table: String, path: String,
-                   buckets: Int = 64, k: Double = 0.5): Unit = {
-    val spark = docs.sparkSession
+                   buckets: Int = 64): Unit = {
     val dt = trainToks(docs)
     dt.groupBy(col("tok"), col("source")).agg(sum(col("m")).as("c_tc"))
       .write.format("parquet").bucketBy(buckets, "tok").sortBy("tok", "source")

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Data-lifecycle retention — the reference ages out forecast inputs
   * with a cron'd `find -name "*.nc" -mtime +90 -exec rm`

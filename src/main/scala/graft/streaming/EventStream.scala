@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -591,14 +591,12 @@ object EventStream {
         // beam threaded through, the handed page IS what the append
         // would have served itself)
         val bServe = math.max(32, kEff)
-        val page = graft.operators.GraphStages.time("ing_serve")(
-          Similarity.graphTopKFromIndex(spark,
-            indexPath, b.select("vec_id", "embedding"), kEff,
-            beam = bServe, excludeIngestBatch = Some(batchId),
-            stateCeiling = stateCeiling))
-        graft.operators.GraphStages.time("ing_report")(
-          onNeighbors(batchId,
-            page.filter(org.apache.spark.sql.functions.col("rank") <= k)))
+        val page = Similarity.graphTopKFromIndex(spark,
+          indexPath, b.select("vec_id", "embedding"), kEff,
+          beam = bServe, excludeIngestBatch = Some(batchId),
+          stateCeiling = stateCeiling)
+        onNeighbors(batchId,
+          page.filter(org.apache.spark.sql.functions.col("rank") <= k))
         Similarity.appendToGraphIndex(b, indexPath, ingestBatch = batchId,
           beam = bServe, stateCeiling = stateCeiling,
           precomputedNeighbors = Some(page))

@@ -34,7 +34,6 @@ class FunnelSpec extends SparkSpec {
 
   test("CorpusPrepJob auditFrac: the dedup self-audit lands as one metrics row over a deterministic sample") {
     import graft.operators.Dedup
-    import org.apache.spark.sql.functions._
     val out = java.nio.file.Files.createTempDirectory("graft_cpau").toString
     val r = CorpusPrepJob.run(spark, sfDir, out, nShards = 2,
       auditFrac = 1.0) // frac 1.0: the audit covers the whole corpus

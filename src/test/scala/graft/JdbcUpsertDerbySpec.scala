@@ -2,8 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.functions._
-
 import graft.sinks.JdbcUpsert
 import graft.sinks.JdbcUpsert.{AnsiMergeDialect, RetryPolicy}
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import graft.operators.Corpus
 
 /** F13b tokenQuantilesApprox vs F13 exact: the rank-error bound the
@@ -17,8 +16,13 @@ class QuantileSketchSpec extends SparkSpec {
     val labels = ps.map(Corpus.quantileLabel)
     def byLang(df: org.apache.spark.sql.DataFrame): Map[String, Row] =
       df.collect().map(r => r.getAs[String]("lang") -> r).toMap
-    val exact = byLang(Corpus.tokenQuantiles(docsTable, "lang", ps))
-    val approx = byLang(Corpus.tokenQuantilesApprox(docsTable, "lang", ps))
+    val exactDf = Corpus.tokenQuantiles(docsTable, "lang", ps)
+    val approxDf = Corpus.tokenQuantilesApprox(docsTable, "lang", ps)
+    // both spellings name their percentile columns identically
+    assert(labels.forall(exactDf.columns.contains))
+    assert(labels.forall(approxDf.columns.contains))
+    val exact = byLang(exactDf)
+    val approx = byLang(approxDf)
     assert(approx.keySet === exact.keySet)
     // with accuracy=10000 and n_docs ≪ accuracy per stratum at this
     // sf, rank error < 1: the estimate must land inside the exact

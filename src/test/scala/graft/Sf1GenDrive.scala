@@ -29,7 +29,6 @@ object Sf1GenDrive {
       shufflePartitions = "32",
       // match the driver datasets' physical timestamp type
       extra = Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
-    import spark.implicits._
 
     val conf = spark.sessionState.newHadoopConf()
     def writeOne(df: DataFrame, name: String): Unit = {

@@ -1174,7 +1174,7 @@ class SinkStreamSpec extends SparkSpec {
   test("streamingHybridIngest: both legs go live, every page ≡ the full re-index's page") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.operators.{Retrieval, TextAnalysis}
+    import graft.operators.Retrieval
     val terms = Seq("spark", "window", "merge", "dup")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val emb = Tables.embeddings(spark, sfDir)

@@ -255,19 +255,26 @@ class TextAnalysisSpec extends SparkSpec {
         (1 to 20).map(_ => "#").mkString(" ")),              // r6: symbol ratio
                                                              //     ONLY ('#' is
                                                              //     not a token)
-      (8L, null.asInstanceOf[String])                        // null → r1 at 0 words
+      (8L, null.asInstanceOf[String]),                       // null → r1 at 0 words
+      (9L, fifty.mkString(" "))                              // r5: a two-word loop
     ).toDF("doc_id", "text")
     val out = TextAnalysis.gopherRules(df, minWords = 30L)
       .orderBy("doc_id")
       .select("doc_id", "keep").as[(Long, Boolean)].collect().toSeq
     assert(out === Seq((1L, true), (2L, false), (3L, false), (4L, false),
-      (5L, false), (6L, false), (7L, false), (8L, false)))
+      (5L, false), (6L, false), (7L, false), (8L, false), (9L, false)))
     // and the signals carry the WHY (audit-trail posture): the r5 doc
     // fails on rep_ratio specifically, not some other rule
     val r5 = TextAnalysis.gopherRules(df, minWords = 30L)
       .filter(col("doc_id") === 6L)
       .select("n_words", "rep_ratio", "stop_hits").head()
     assert(r5.getLong(0) === 60L && r5.getDouble(1) > 0.3 && r5.getInt(2) >= 2)
+    // the two-word loop passes the length rules and fails on repetition
+    val loop = TextAnalysis.gopherRules(df, minWords = 30L)
+      .filter(col("doc_id") === 9L)
+      .select("n_words", "mean_word_len", "rep_ratio").head()
+    assert(loop.getLong(0) === 50L && loop.getDouble(1) >= 3.0 &&
+      loop.getDouble(2) > 0.3)
   }
 
   test("F2b threshold sweep matches brute-force per-tau counts, monotone, exact rates") {

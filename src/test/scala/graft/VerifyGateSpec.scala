@@ -1,13 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The empty-rows-only gate: the DuckDB hash compare only audits
   * queries with an oracle mirror, so [[Verify.floorFailures]] is what
   * turns "a rows-only query silently emptied" into a hard non-zero
   * exit. Driven with synthetic counts — the deliberate-break proof the
-  * round-4 verdict asked for. */
-class VerifyGateSpec extends AnyFunSuite {
+  * round-4 verdict asked for. Also holds the smoke check of
+  * `SparkEntry.entry`, the catalog's fixed entry point: it must
+  * return rows. */
+class VerifyGateSpec extends SparkSpec {
 
   private val rowsOnly: Set[String] =
     SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
@@ -17,6 +17,10 @@ class VerifyGateSpec extends AnyFunSuite {
   private def greenCounts: Map[String, Long] =
     SparkEntry.queries.keysIterator
       .map(q => q -> SparkEntry.rowFloors.getOrElse(q, 100L)).toMap
+
+  test("entry smoke: SparkEntry.entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0, "SparkEntry.entry returned no rows")
+  }
 
   test("the catalog still has rows-only queries for the gate to guard") {
     assert(rowsOnly.nonEmpty)
