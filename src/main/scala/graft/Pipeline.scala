@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Timeseries
@@ -36,10 +36,14 @@ object Pipeline {
     * version of the same accounting). `stageSeconds` carries the
     * per-stage wall clock of the run so callers (Bench) can attribute
     * a regression to parse/diff vs sinks instead of reading one
-    * opaque end-to-end number. */
+    * opaque end-to-end number. `diffPaths` records, per file pattern,
+    * where the interval diff ran: `reader` (inside the split reader)
+    * or `window: <why>` (the shuffle-and-sort fallback, with the file
+    * property that forced it). */
   final case class PipelineResult(stations: Long, seriesRows: Long,
                                   watermarks: Long, perSystem: Map[String, Long],
-                                  stageSeconds: Map[String, Double] = Map.empty)
+                                  stageSeconds: Map[String, Double] = Map.empty,
+                                  diffPaths: Map[String, String] = Map.empty)
 
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(
@@ -138,7 +142,6 @@ object Pipeline {
     // reference pushes only d03 series to the DB); the readiness and
     // existence gates cover EVERY domain's files — a run must not
     // start with d01 still uploading
-    val paths = cfg.systems.map(s => cfg.ncPath(primary.filePattern, s))
     val allPaths = domains.flatMap(d =>
       cfg.systems.map(s => cfg.ncPath(d.filePattern, s))).distinct
     if (cfg.waitReadyMs > 0L) { // is_netcdf_ready.sh semantics
@@ -149,87 +152,11 @@ object Pipeline {
     val missing = allPaths.filterNot(p => new java.io.File(p).exists())
     require(missing.isEmpty, s"missing netCDF inputs: ${missing.mkString(", ")}")
 
-    // 1. read all systems' grids in one scan; tag each row with its
-    //    system by matching the path (verbatim — readGrid echoes the
-    //    strings it was given) back to the config entry
-    val pathToSystem = cfg.systems.zip(paths)
-      .foldLeft(lit(null).cast("string")) {
-        case (acc, (s, p)) => when(col("path") === p, lit(s)).otherwise(acc)
-      }
-    val grid = NetCdfClassic.readGrid(spark, paths)
-      .withColumn("system", pathToSystem)
-
-    // 2. cumulative → per-interval (A1), per (system, cell) series
-    val keyed = grid.withColumn("cell",
-      concat_ws("_", col("system"),
-        format_string("%.6f", col("lat")), format_string("%.6f", col("lon"))))
-    // cache(): four downstream actions (registry, series count, rfield
-    // write, watermark) would otherwise each re-parse the netCDF files
-    // and re-run the diff — materialize the post-diff table once, the
-    // same checkpoint a production run would persist
-    val rain = Timeseries.intervalDiff(
-        keyed, "cell", "epoch_s", "t_idx", "value")
-      .withColumn("ts_us", col("epoch_s") * lit(1000000L))
-      .cache()
-
-    // 3. station registry (A9) + deterministic tms id (A10) + LK time (A2)
-    //    — derived from the CACHED rain table (grid columns ride along),
-    //    not the raw grid, so no second netCDF parse
-    val stations = Timeseries.stationRegistry(rain, Seq("lat", "lon"), "wrf")
-    val series = Timeseries.tzShiftLk(rain, "ts_us")
-      .withColumn("sim_tag", lit(cfg.simTag))
-      // source via the ONE documented spelling (cfg.sourceName) — the
-      // systems list is finite, so each binds to its helper-derived
-      // name; an inline concat would silently diverge if the helper's
-      // format ever changes
-      .withColumn("source",
-        cfg.systems.foldLeft(when(lit(false), lit(""))) { (acc, s) =>
-          acc.when(col("system") === s, lit(cfg.sourceName(s)))
-        })
-      .withColumn("variable", lit(cfg.variable))
-      .withColumn("unit", lit(cfg.unit))
-    val withId = Timeseries.tmsId(series,
-      Seq("sim_tag", "cell", "source", "variable", "unit"))
-
-    // 4. sinks: per-timestep rfield files (ensemble mean across systems
-    //    per cell, gen_*_mean_rfields.py flavor) + DB upsert statement.
-    //    Per DOMAIN: the primary (and any bbox cut sharing its file
-    //    pattern, e.g. the Kelani basin) reuses the cached post-diff
-    //    table; other domains (d01's coarse grid) parse their own
-    //    files. A bbox cuts BEFORE the mean — identical cells, fewer.
-    def domainDiff(d: DomainConfig): org.apache.spark.sql.DataFrame =
-      if (d.filePattern == primary.filePattern) rain
-      else {
-        val dPaths = cfg.systems.map(s => cfg.ncPath(d.filePattern, s))
-        val sysOfPath = cfg.systems.zip(dPaths)
-          .foldLeft(lit(null).cast("string")) {
-            case (acc, (s, p)) => when(col("path") === p, lit(s)).otherwise(acc)
-          }
-        // system folded into the cell key exactly like the primary's —
-        // two systems sharing a (lat, lon) must diff as SEPARATE series
-        val dGrid = NetCdfClassic.readGrid(spark, dPaths)
-          .withColumn("system", sysOfPath)
-          .withColumn("cell", concat_ws("_", col("system"),
-            format_string("%.6f", col("lat")), format_string("%.6f", col("lon"))))
-        Timeseries.intervalDiff(dGrid, "cell", "epoch_s", "t_idx", "value")
-      }
-    def bboxCut(df: org.apache.spark.sql.DataFrame, d: DomainConfig) =
-      d.bbox.fold(df) { case (lonMin, latMin, lonMax, latMax) =>
-        df.filter(col("lon") >= lonMin && col("lon") <= lonMax &&
-          col("lat") >= latMin && col("lat") <= latMax)
-      }
-    def rfieldOf(d: DomainConfig) = bboxCut(domainDiff(d), d)
-      .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
-      .agg(round(avg("delta"), 4).as("value"))
-    def rfieldDir(d: DomainConfig): String =
-      if (d.name.isEmpty) s"${cfg.outDir}/rfields"
-      else s"${cfg.outDir}/rfields/${d.name}"
-
-    val upsertSql = JdbcUpsert.MySqlDialect.sql("curw_fcst.data",
-      Seq("id", "time", "fgt", "value"), Seq("id", "time"))
-
-    // 5. fgt watermark per series (A11)
-    val wm = Timeseries.fgtWatermark(withId, "tms_id", "ts_us")
+    // how each file pattern's diff runs, decided on the driver from
+    // the file headers and axis vectors (see diffOf)
+    val patterns = domains.map(_.filePattern).distinct
+    val diffPaths = patterns.map(p =>
+      p -> diffBlocker(cfg, p).fold("reader")(why => s"window: $why")).toMap
 
     val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
     def timed[T](label: String)(f: => T): T = {
@@ -239,68 +166,179 @@ object Pipeline {
       println(f"PIPELINE stage $label%-12s $secs%6.1fs")
       r
     }
-    // materialize the cached post-diff table as its OWN stage: the
-    // netCDF parse + A1 diff otherwise hide inside whichever sink
-    // action runs first, and a parse regression would masquerade as
-    // an rfield-write regression in the stage breakdown
-    timed("parse_diff")(rain.count())
-    timed("rfields")(domains.foreach(d =>
-      RfieldSink.write(rfieldOf(d), rfieldDir(d), "t")))
-    if (cfg.packagedRfields) timed("rfield_pkg") {
-      // the reference's per-system bundles — per DOMAIN (it zips d03,
-      // the basin cut, and d01 each per system): each system's own
-      // diffs (one row per cell per step — the agg normalizes shape).
-      // Non-primary-pattern domains carry no `system` column (their
-      // grids parse separately), so their per-system frame re-reads
-      // just that system's file — d01-class grids are coarse.
-      for (d <- domains; sysName <- cfg.systems) {
-        val sysDiff =
-          if (d.filePattern == primary.filePattern)
-            rain.filter(col("system") === sysName)
-          else {
-            val g = NetCdfClassic
-              .readGrid(spark, Seq(cfg.ncPath(d.filePattern, sysName)))
-              .withColumn("cell", concat_ws("_",
-                format_string("%.6f", col("lat")), format_string("%.6f", col("lon"))))
-            Timeseries.intervalDiff(g, "cell", "epoch_s", "t_idx", "value")
-          }
-        val dir = if (d.name.isEmpty) s"${cfg.outDir}/rfields_packaged/$sysName"
-                  else s"${cfg.outDir}/rfields_packaged/${d.name}/$sysName"
-        RfieldSink.writePackaged(
-          bboxCut(sysDiff, d)
-            .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
-            .agg(round(sum("delta"), 4).as("value")),
-          dir, "t", cfg.model, sysName, cfg.version)
+    // every frame this run caches, released on success AND failure: a
+    // sink that throws must not leave them pinned in a long-lived session
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pinned(df: DataFrame): DataFrame = { caches += df; df.cache() }
+
+    val (nStations, perSystem, nWm) = try {
+      // 1-2. per file pattern, every system's grid diffed per
+      //    (system, cell) series (A1), cached: the primary's feeds the
+      //    rfield and bundle writes, the per-series summary and the
+      //    landing; a non-primary pattern's feeds its mean and bundles
+      val diffs = patterns.map(p =>
+        p -> pinned(diffOf(spark, cfg, p, inReader = diffPaths(p) == "reader"))).toMap
+      val rain = diffs(primary.filePattern)
+
+      // 3. per series (system, cell): its row count and newest ts_us.
+      //    The registry, the series count and the watermarks read these
+      //    cells·systems rows instead of every row. Cached because a
+      //    count() prunes the aggregates, after which Catalyst's
+      //    RemoveRedundantAggregates folds this aggregate into the one
+      //    above it, whose per-key work (key rendering, md5) would then
+      //    run on every row again.
+      val perSeries = pinned(rain.groupBy("system", "cell")
+        .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us")))
+      // LK time (A2) + deterministic tms id (A10)
+      def withMeta(df: DataFrame) = df
+        .withColumn("sim_tag", lit(cfg.simTag))
+        // source via the ONE documented spelling (cfg.sourceName) — the
+        // systems list is finite, so each binds to its helper-derived
+        // name; an inline concat would silently diverge if the helper's
+        // format ever changes
+        .withColumn("source",
+          cfg.systems.foldLeft(when(lit(false), lit(""))) { (acc, s) =>
+            acc.when(col("system") === s, lit(cfg.sourceName(s)))
+          })
+        .withColumn("variable", lit(cfg.variable))
+        .withColumn("unit", lit(cfg.unit))
+      val metaCols = Seq("sim_tag", "cell", "source", "variable", "unit")
+      val withId = Timeseries.tmsId(
+        withMeta(Timeseries.tzShiftLk(rain, "ts_us")), metaCols)
+      // fgt watermark per series (A11), tms_id hashed once per series
+      val wm = Timeseries.fgtWatermark(
+        Timeseries.tmsId(withMeta(perSeries), metaCols), "tms_id", "ts_us")
+
+      // 4. sinks: per-timestep rfield files (ensemble mean across
+      //    systems per cell, gen_*_mean_rfields.py flavor) — ONE mean
+      //    per file pattern, cut to each domain's bbox (a cut on the
+      //    grouping keys commutes with the mean; the Kelani basin
+      //    shares d03's pattern), cached when two domains share it
+      def bboxCut(df: DataFrame, d: DomainConfig) =
+        d.bbox.fold(df) { case (lonMin, latMin, lonMax, latMax) =>
+          df.filter(col("lon") >= lonMin && col("lon") <= lonMax &&
+            col("lat") >= latMin && col("lat") <= latMax)
+        }
+      val means = patterns.map { p =>
+        val mean = diffs(p).groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
+          .agg(round(avg("delta"), 4).as("value"))
+        p -> (if (domains.count(_.filePattern == p) > 1) pinned(mean) else mean)
+      }.toMap
+      def rfieldDir(d: DomainConfig): String =
+        if (d.name.isEmpty) s"${cfg.outDir}/rfields"
+        else s"${cfg.outDir}/rfields/${d.name}"
+
+      // materialize the cached post-diff table as its OWN stage: the
+      // netCDF parse + A1 diff otherwise hide inside whichever sink
+      // action runs first, and a parse regression would masquerade as
+      // an rfield-write regression in the stage breakdown
+      timed("parse_diff")(rain.count())
+      timed("rfields")(domains.foreach(d =>
+        RfieldSink.write(bboxCut(means(d.filePattern), d), rfieldDir(d), "t")))
+      if (cfg.packagedRfields) timed("rfield_pkg") {
+        // the reference's per-system bundles — per DOMAIN (it zips
+        // d03, the basin cut, and d01 each per system): each system's
+        // own diffs (one row per cell per step — the agg normalizes
+        // shape)
+        for (d <- domains; sysName <- cfg.systems) {
+          val dir = if (d.name.isEmpty) s"${cfg.outDir}/rfields_packaged/$sysName"
+                    else s"${cfg.outDir}/rfields_packaged/${d.name}/$sysName"
+          RfieldSink.writePackaged(
+            bboxCut(diffs(d.filePattern).filter(col("system") === sysName), d)
+              .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
+              .agg(round(sum("delta"), 4).as("value")),
+            dir, "t", cfg.model, sysName, cfg.version)
+        }
       }
-    }
-    val nStations = timed("stations")(stations.count())
-    // one aggregation gives total + per-system accounting in a pass
-    val perSystem = timed("series") {
-      withId.groupBy("system").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+      // station registry (A9) from the series' 6-dp keys: a cell key
+      // ends `_<lat6>_<lon6>`, and a %.6f rendering holds no '_'
+      val nStations = timed("stations")(Timeseries.stationRegistry6dp(
+        perSeries.select(
+          substring_index(substring_index(col("cell"), "_", -2), "_", 1).as("lat"),
+          substring_index(col("cell"), "_", -1).as("lon")),
+        Seq("lat", "lon"), "wrf").count())
+      // total + per-system series rows in one pass
+      val perSystem = timed("series") {
+        perSeries.groupBy("system").agg(sum("rows"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      val nWm = timed("watermarks")(wm.count())
+      // optional z-ordered series landing (r13, VERDICT r12 #5): the
+      // persisted artifact the standing consumer queries read — runs
+      // off the still-cached post-diff table, so no netCDF re-parse
+      if (cfg.landSeries) timed("series_land")(
+        landSeries(withId, s"${cfg.outDir}/series", cfg.landSeriesFiles))
+      (nStations, perSystem, nWm)
+    } finally caches.foreach(_.unpersist())
+
+    val upsertSql = JdbcUpsert.MySqlDialect.sql("curw_fcst.data",
+      Seq("id", "time", "fgt", "value"), Seq("id", "time"))
     val nSeries = perSystem.values.sum
-    val nWm = timed("watermarks")(wm.count())
-    // optional z-ordered series landing (r13, VERDICT r12 #5): the
-    // persisted artifact the standing consumer queries read — runs
-    // off the still-cached rain lineage, so no netCDF re-parse
-    if (cfg.landSeries) timed("series_land")(
-      landSeries(withId, s"${cfg.outDir}/series", cfg.landSeriesFiles))
-    rain.unpersist()
     // the residual OUTSIDE every timed stage (config discovery,
-    // readiness gate, netCDF header parsing during plan construction,
-    // analyzer/optimizer time, inter-job gaps) — tracked as its own
-    // stage so the bench sub-entries sum to the e2e wall and a
-    // regression can never hide in unattributed time
+    // readiness gate, the diff-path checks, netCDF header parsing
+    // during plan construction, analyzer/optimizer time, inter-job
+    // gaps) — tracked as its own stage so the bench sub-entries sum
+    // to the e2e wall and a regression can never hide in unattributed
+    // time
     val runSecs = (System.nanoTime() - runT0) / 1e9
     stageSecs("other") = math.max(0.0, runSecs - stageSecs.values.sum)
     println(f"PIPELINE stage other        ${stageSecs("other")}%6.1fs")
-    println(s"PIPELINE stations=$nStations series_rows=$nSeries watermarks=$nWm")
+    val diffKind = if (diffPaths.values.forall(_ == "reader")) "reader" else "window"
+    println(s"PIPELINE stations=$nStations series_rows=$nSeries watermarks=$nWm diff=$diffKind")
+    patterns.foreach(p => println(s"PIPELINE diff $p: ${diffPaths(p)}"))
     cfg.systems.foreach(s =>
       println(s"PIPELINE system $s: series_rows=${perSystem.getOrElse(s, 0L)}"))
     println(s"PIPELINE upsert: $upsertSql")
     println(s"PIPELINE rfields at ${cfg.outDir}/rfields")
-    PipelineResult(nStations, nSeries, nWm, perSystem, stageSecs.toMap)
+    PipelineResult(nStations, nSeries, nWm, perSystem, stageSecs.toMap, diffPaths)
+  }
+
+  /** One file pattern's post-diff table over every system of the run:
+    * `(path, t_idx, epoch_s, lat, lon, value, system, cell, delta,
+    * ts_us)`, one row per (system, cell) series and step after its
+    * first, `cell` = `<system>_<lat6>_<lon6>` with the `%.6f`
+    * coordinate keys. `inReader` diffs inside the split reader
+    * ([[NetCdfClassic.readGridDiff]]: no shuffle, keys formatted once
+    * per axis value); otherwise the window ([[Timeseries.intervalDiff]]
+    * over the cell key, ordered by (epoch_s, t_idx)) — the same rows
+    * whenever [[diffBlocker]] finds nothing. */
+  private def diffOf(spark: SparkSession, cfg: PipelineConfig, pattern: String,
+                     inReader: Boolean): DataFrame = {
+    val paths = cfg.systems.map(s => cfg.ncPath(pattern, s))
+    // tag each row with its system by matching the path (verbatim —
+    // the readers echo the strings they were given) back to the
+    // config entry
+    val system = cfg.systems.zip(paths)
+      .foldLeft(lit(null).cast("string")) {
+        case (acc, (s, p)) => when(col("path") === p, lit(s)).otherwise(acc)
+      }
+    // system folded into the cell key — two systems sharing a
+    // (lat, lon) are SEPARATE series
+    def keyed(g: DataFrame) = g.withColumn("system", system)
+      .withColumn("cell", concat_ws("_", col("system"), col("lat6"), col("lon6")))
+    val diff =
+      if (inReader) keyed(NetCdfClassic.readGridDiff(spark, paths))
+      else Timeseries.intervalDiff(
+        keyed(NetCdfClassic.readGrid(spark, paths)
+          .withColumn("lat6", format_string("%.6f", col("lat")))
+          .withColumn("lon6", format_string("%.6f", col("lon")))),
+        "cell", "epoch_s", "t_idx", "value")
+    diff.withColumn("ts_us", col("epoch_s") * lit(1000000L))
+      .select(Seq("path", "t_idx", "epoch_s", "lat", "lon", "value", "system",
+        "cell", "delta", "ts_us").map(col): _*)
+  }
+
+  /** Why `pattern`'s files must take the window diff, or None: the
+    * split reader diffs each FILE's grid points in record order, which
+    * is the window's series and order when the systems read distinct
+    * files and every file passes [[NetCdfClassic.recordOrderBlocker]]. */
+  private def diffBlocker(cfg: PipelineConfig, pattern: String): Option[String] = {
+    val paths = cfg.systems.map(s => cfg.ncPath(pattern, s))
+    if (paths.distinct.size < paths.size)
+      Some(s"systems ${cfg.systems.mkString(",")} do not read distinct files of $pattern")
+    else paths.iterator.map(NetCdfClassic.recordOrderBlocker(_)).collectFirst {
+      case Some(why) => why
+    }
   }
 
   /** Land the post-diff series table as a Z-ORDERED parquet artifact

@@ -202,8 +202,17 @@ object Timeseries {
     * executors, which is what upsert-once semantics need at scale.
     */
   def stationRegistry(df: DataFrame, keyCols: Seq[String],
-                      prefix: String = "st"): DataFrame = {
-    // 6-dp normalization + reference rendering (see scaladoc)
+                      prefix: String = "st"): DataFrame =
+    stationRegistry6dp(df.select(keyCols.map(c => sixDp(col(c)).as(c)): _*),
+      keyCols, prefix)
+
+  /** [[stationRegistry]] over key columns already rendered `%.6f`
+    * (the `format_string` rendering): dedups the 6-dp strings first,
+    * then renders each distinct key once. Same rows as rendering every
+    * input row, because the reference rendering is injective on 6-dp
+    * strings. */
+  def stationRegistry6dp(df: DataFrame, keyCols: Seq[String],
+                         prefix: String = "st"): DataFrame = {
     val keyed = keyCols.map(c => pyFloatKey(col(c)).as(s"${c}_key"))
     // concat, not concat_ws: a NULL key (null coordinate) must
     // propagate to a NULL name/id like the oracle's `||` chain —
@@ -211,13 +220,21 @@ object Timeseries {
     // shorter name ("wrf_79.85") with a valid-looking md5 id
     val name = concat(lit(prefix) +:
       keyCols.flatMap(c => Seq(lit("_"), col(s"${c}_key"))): _*)
-    df.select(keyed: _*).distinct()
+    df.select(keyCols.map(col): _*).distinct()
+      .select(keyed: _*)
       .withColumn("station_name", name)
       .withColumn("station_id", md5(name))
   }
 
-  /** Python `str(float('%.6f' % v))` as a Column, for coordinate-scale
-    * magnitudes (|v| < 1e16): positional with trailing zeros stripped
+  /** `%.6f` of a numeric column as `format_string` renders it, NULL
+    * kept NULL (the oracle's printf(NULL) is NULL) — format_string
+    * alone would render java.util.Formatter's literal "null". */
+  private def sixDp(v: Column): Column =
+    when(v.isNull, lit(null).cast("string")).otherwise(format_string("%.6f", v))
+
+  /** Python `str(float('%.6f' % v))` as a Column, from the `%.6f`
+    * string `s6` of a coordinate-scale magnitude (|v| < 1e16):
+    * positional with trailing zeros stripped
     * and one fractional digit kept, EXCEPT 0 < |v| < 1e-4 after 6-dp
     * rounding, where Python's shortest-repr goes scientific. The 6-dp
     * string pins the value to ≤2 significant digits there (micro-units
@@ -226,17 +243,13 @@ object Timeseries {
     * dropped), micro < 10 → `d e-06`. Shortest-repr uniqueness at ≤2
     * sig digits (neighbor decimals differ by ≫ 1 ulp) makes this
     * byte-for-byte Python's rendering. Shared shape with the DuckDB
-    * oracle mirror (SparkEntry.pyKeySql) — edit in lockstep. */
-  private[graft] def pyFloatKey(v: Column): Column = {
-    // NULL propagates (the oracle's printf(NULL) is NULL) —
-    // format_string would render java.util.Formatter's literal "null".
-    // Character ops (ltrim/rtrim/substring), not regexes: this runs
-    // per coordinate per row, and the three regexp_replace calls the
-    // first spelling paid tripled the registry's scan cost. Values
-    // are identical (a %.6f string has at most one leading '-', and
-    // rtrim-of-'0' ≡ strip-trailing-zeros on it).
-    val s6 = when(v.isNull, lit(null).cast("string"))
-      .otherwise(format_string("%.6f", v))
+    * oracle mirror (SparkEntry.pyKeySql) — edit in lockstep.
+    * Character ops (ltrim/rtrim/substring), not regexes: the three
+    * regexp_replace calls the first spelling paid tripled the
+    * registry's scan cost. Values are identical (a %.6f string has at
+    * most one leading '-', and rtrim-of-'0' ≡ strip-trailing-zeros on
+    * it). */
+  private def pyFloatKey(s6: Column): Column = {
     val absS = ltrim(s6, "-")
     val micro = substring(absS, 3, 6).cast("int")
     val sign = when(substring(s6, 1, 1) === "-", lit("-")).otherwise(lit(""))

@@ -22,12 +22,15 @@ import org.apache.spark.sql.functions._
 object RfieldSink {
 
   /** Write `rfield` (must carry `lon`, `lat`, value + `timeCol`) as
-    * space-separated text partitioned by `timeCol`. */
+    * space-separated text partitioned by `timeCol`. The shuffle gets
+    * one partition per core, not AQE's coalescing: a run's rfields are
+    * a few MB, under AQE's minimum partition size, so a coalesced
+    * write put every timestep's file on one task. */
   def write(rfield: DataFrame, outDir: String, timeCol: String,
             valueCol: String = "value"): Unit =
     rfield
       .select(col(timeCol), col("lon"), col("lat"), col(valueCol))
-      .repartition(col(timeCol))
+      .repartition(rfield.sparkSession.sparkContext.defaultParallelism, col(timeCol))
       .sortWithinPartitions(col(timeCol), col("lon"), col("lat"))
       .write
       .partitionBy(timeCol)

@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, element_at, expr, lit, pmod, posexplode}
 import org.apache.spark.sql.types._
 
@@ -35,7 +36,8 @@ import org.apache.spark.sql.types._
   * millions of them. [[readGrid]] distributes in two dimensions —
   * across files AND record ranges within each file — emitting
   * `(path, time, lat, lon, value)` rows. Downstream operators
-  * (A1 intervalDiff etc.) then shard by station key.
+  * (A1 intervalDiff etc.) then shard by station key; [[readGridDiff]]
+  * takes the A1 diff inside the split reader instead, with no shuffle.
   */
 object NetCdfClassic {
 
@@ -435,95 +437,212 @@ object NetCdfClassic {
     * and reshuffled to spread them. Coordinate variables may be 1-D
     * vectors or (time, y, x) grids (both occur in WRF output); 3-D
     * coords use the t=0 slice exactly as the reference does.
+    * [[readGridDiff]] is the same scan with each step's interval diff
+    * and 6-dp coordinate keys computed in the split reader.
     */
   def readGrid(spark: SparkSession, paths: Seq[String],
                valueVar: String = "RAINNC", latVar: String = "XLAT",
                lonVar: String = "XLONG", timeVar: String = "XTIME",
                recordsPerSplit: Int = 24): DataFrame = {
-    require(recordsPerSplit > 0, "recordsPerSplit must be positive")
-    // ONE row per TIMESTEP here (path, t_idx, epoch_s, coordinate
-    // vectors, the step's ny·nx value slab) — the per-CELL fan-out
-    // happens in Catalyst below (r16, guide §1.2 step 2 / §4): the
-    // old per-cell Row construction pushed every cell through the
-    // external-row encoder (a non-codegen boundary paying per-field
-    // conversion on millions of rows); per-step rows cross that
-    // boundary ~ny·nx times less often (primitive-array copies), and
-    // the explode to cells runs inside whole-stage codegen.
-    val schema = StructType(Seq(
-      StructField("path", StringType, nullable = false),
-      StructField("t_idx", IntegerType, nullable = false),
-      StructField("epoch_s", LongType, nullable = false),
-      StructField("nx", IntegerType, nullable = false),
-      StructField("lats", ArrayType(DoubleType, containsNull = false), nullable = false),
-      StructField("lons", ArrayType(DoubleType, containsNull = false), nullable = false),
-      StructField("values", ArrayType(DoubleType, containsNull = false), nullable = false)))
-    val defaultPar = spark.sparkContext.defaultParallelism
-    val splits = spark.sparkContext
-      .parallelize(paths, math.min(paths.size, 1024).max(1))
-      .flatMap { path =>
-        val n = withSeekable(path)(_.numRecs) // header-only read
-        (0 until n by recordsPerSplit).map(r0 =>
-          (path, r0, math.min(r0 + recordsPerSplit, n)))
-      }
-      .repartition(defaultPar * 2) // tiny descriptors; spread evenly
-    val rdd = splits.flatMap { case (path, r0, r1) =>
+    val rdd = gridSplits(spark, paths, recordsPerSplit).flatMap { case (path, r0, r1) =>
       withSeekable(path) { nc =>
-        // value + time decoded from ONE span fetch (readRecordsMulti)
-        // instead of two near-identical ranged reads per split
-        val multi = nc.readRecordsMulti(Seq(valueVar, timeVar), r0, r1)
-        val (vShape, values) = multi(valueVar)
-        require(vShape.size == 3, s"$valueVar must be (time, y, x), got $vShape")
-        val Seq(_, ny, nx) = vShape
-        def axis(name: String, take: Int, pick: Int => Int): Array[Double] = {
-          val v = nc.variable(name)
-          val (shp, raw) =
-            if (nc.isRecordVar(v)) nc.readRecords(name, 0, 1)
-            else nc.readDoubles(name)
-          if (shp.size == 1) raw
-          else (0 until take).map(i => raw(pick(i))).toArray // t=0 slice of (t,y,x)
+        val s = readSlab(nc, r0, r1, valueVar, latVar, lonVar, timeVar)
+        val cells = s.ny * s.nx
+        // materialized per split (the rows must not outlive the
+        // channel closed by withSeekable): ONE row per timestep,
+        // carrying the step's value slab
+        (r0 until r1).map { t =>
+          val at = (t - r0) * cells
+          Row(path, t, s.epochs(t - r0), s.nx, s.lats, s.lons,
+            java.util.Arrays.copyOfRange(s.values, at, at + cells))
         }
-        val lats = axis(latVar, ny, y => y * nx)      // XLAT[0, :, 0]
-        val lons = axis(lonVar, nx, x => x)           // XLONG[0, 0, :]
-        val (_, times) = multi(timeVar)
-        val tv = nc.variable(timeVar)
-        val unitStr = tv.attr("description").orElse(tv.attr("units"))
-          .map(_.values.asInstanceOf[String])
-          .getOrElse(throw new IllegalArgumentException(
-            s"$timeVar has neither 'description' nor 'units' — raw ticks " +
-              "would silently read as 1970-epoch seconds"))
-        val (secsPer, base) = parseTimeUnits(unitStr)
-        // materialized per split (the iterator must not outlive the
-        // channel closed by withSeekable); a split is bounded rows —
-        // ONE per timestep, carrying the step's value slab
-        val rows = Seq.newBuilder[Row]
-        var t = r0
-        while (t < r1) {
-          // round, don't truncate: XTIME is NC_FLOAT, so 10.2 min
-          // arrives as 10.1999998f and truncation lands the whole
-          // timestep one second early — file stamps, watermarks, and
-          // cross-system joins on epoch_s would silently disagree
-          val epoch = base + math.round(times(t - r0) * secsPer)
-          val slab = java.util.Arrays.copyOfRange(values,
-            (t - r0) * ny * nx, (t - r0 + 1) * ny * nx)
-          rows += Row(path, t, epoch, nx, lats, lons, slab)
-          t += 1
-        }
-        rows.result()
       }
     }
-    // per-cell fan-out in codegen: cell i of a step's row-major slab
-    // is (y = i div nx, x = i mod nx) — identical rows to the old
-    // per-cell construction, built by Catalyst instead of per-Row
-    // Scala (element_at is 1-based)
-    spark.createDataFrame(rdd, schema)
-      .select(col("path"), col("t_idx"), col("epoch_s"), col("nx"),
-        col("lats"), col("lons"),
-        posexplode(col("values")).as(Seq("i", "value")))
-      .select(col("path"), col("t_idx"), col("epoch_s"),
-        element_at(col("lats"),
-          (expr("i div nx") + lit(1L)).cast("int")).as("lat"),
-        element_at(col("lons"),
-          (pmod(col("i"), col("nx")) + lit(1)).cast("int")).as("lon"),
-        col("value"))
+    explodeCells(spark.createDataFrame(rdd, StructType(stepFields)),
+      (_, _) => Nil)
+  }
+
+  /** [[readGrid]] with the interval diff (A1, `prcp[1:] - prcp[:-1]`,
+    * wrf_data_pusher.py:63-65) taken inside the split reader:
+    * `(path, t_idx, epoch_s, lat, lon, value, delta, lat6, lon6)`,
+    * one row per cell and step except each file's first record (it has
+    * no predecessor), `delta` = the cell's value minus its value at
+    * the previous RECORD, `lat6`/`lon6` the coordinates rendered
+    * `%.6f` (the Formatter and locale of Spark's `format_string`),
+    * formatted once per axis value per split instead of once per row.
+    * Each split also reads the record before its range, so no shuffle
+    * or sort is needed.
+    *
+    * Equal to [[graft.operators.Timeseries.intervalDiff]] keyed by
+    * (file, lat6, lon6) and ordered by (epoch_s, t_idx) exactly when
+    * [[recordOrderBlocker]] finds nothing in any of `paths`. */
+  def readGridDiff(spark: SparkSession, paths: Seq[String],
+                   valueVar: String = "RAINNC", latVar: String = "XLAT",
+                   lonVar: String = "XLONG", timeVar: String = "XTIME",
+                   recordsPerSplit: Int = 24): DataFrame = {
+    val rdd = gridSplits(spark, paths, recordsPerSplit).flatMap { case (path, r0, r1) =>
+      withSeekable(path) { nc =>
+        val lo = math.max(r0 - 1, 0) // the predecessor of the split's first step
+        val s = readSlab(nc, lo, r1, valueVar, latVar, lonVar, timeVar)
+        val cells = s.ny * s.nx
+        val lat6 = s.lats.map(sixDp)
+        val lon6 = s.lons.map(sixDp)
+        (math.max(r0, 1) until r1).map { t =>
+          val at = (t - lo) * cells
+          val delta = new Array[Double](cells)
+          var i = 0
+          while (i < cells) {
+            delta(i) = s.values(at + i) - s.values(at - cells + i)
+            i += 1
+          }
+          Row(path, t, s.epochs(t - lo), s.nx, s.lats, s.lons,
+            java.util.Arrays.copyOfRange(s.values, at, at + cells),
+            lat6, lon6, delta)
+        }
+      }
+    }
+    val schema = StructType(stepFields ++ Seq(
+      StructField("lat6s", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("lon6s", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("deltas", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    explodeCells(spark.createDataFrame(rdd, schema), (y, x) => Seq(
+      element_at(col("deltas"), col("i") + lit(1)).as("delta"),
+      element_at(col("lat6s"), y).as("lat6"),
+      element_at(col("lon6s"), x).as("lon6")))
+  }
+
+  /** Why diffing the file at `path` in record order ([[readGridDiff]])
+    * could differ from [[graft.operators.Timeseries.intervalDiff]]
+    * keyed by (file, lat6, lon6) and ordered by (epoch_s, t_idx), or
+    * None when it cannot. The two agree when the epoch seconds never
+    * decrease in record order (ties keep record order, as the window's
+    * t_idx tie-break does) and the 6-dp lat keys are distinct, and so
+    * are the lon keys (otherwise two grid points would share one
+    * window series). Reads the header, the axis vectors and one time
+    * value per record. */
+  def recordOrderBlocker(path: String, valueVar: String = "RAINNC",
+                         latVar: String = "XLAT", lonVar: String = "XLONG",
+                         timeVar: String = "XTIME"): Option[String] =
+    withSeekable(path) { nc =>
+      val shp = nc.shape(nc.variable(valueVar))
+      require(shp.size == 3, s"$valueVar must be (time, y, x), got $shp")
+      val Seq(n, ny, nx) = shp
+      val epochs = epochSeconds(nc, timeVar,
+        Array.tabulate(n)(r => nc.readRecords(timeVar, r, r + 1)._2(0)))
+      val (lats, lons) = gridAxes(nc, ny, nx, latVar, lonVar)
+      def repeated(axis: String, vs: Array[Double]) =
+        vs.map(sixDp).groupBy(identity).collectFirst {
+          case (k, ks) if ks.length > 1 => s"$path: repeated 6-dp $axis $k"
+        }
+      (1 until n).find(r => epochs(r) < epochs(r - 1))
+        .map(r => s"$path: $timeVar steps back at record $r")
+        .orElse(repeated("latitude", lats))
+        .orElse(repeated("longitude", lons))
+    }
+
+  /** `%.6f` exactly as Spark's `format_string` renders a double. */
+  private def sixDp(v: Double): String =
+    String.format(java.util.Locale.US, "%.6f", Double.box(v))
+
+  /** (path, r0, r1) record-range splits of every file, enumerated
+    * executor-side from header-only reads and dealt round-robin over
+    * twice the cores: split k of file f goes to slot f + k·files, so
+    * files with equal record counts fill every slot once before any
+    * slot gets a second split (`repartition`'s seeded pseudo-random
+    * start slots put two of four one-split files on one task). */
+  private def gridSplits(spark: SparkSession, paths: Seq[String],
+                         recordsPerSplit: Int) = {
+    require(recordsPerSplit > 0, "recordsPerSplit must be positive")
+    val files = paths.size
+    spark.sparkContext
+      .parallelize(paths.zipWithIndex, math.min(files, 1024).max(1))
+      .flatMap { case (path, f) =>
+        val n = withSeekable(path)(_.numRecs) // header-only read
+        (0 until n by recordsPerSplit).zipWithIndex.map { case (r0, k) =>
+          (f.toLong + k.toLong * files, (path, r0, math.min(r0 + recordsPerSplit, n)))
+        }
+      }
+      .partitionBy(new HashPartitioner(spark.sparkContext.defaultParallelism * 2))
+      .values
+  }
+
+  /** Records [r0, r1) of a (time, y, x) grid: value slab row-major,
+    * epoch second per record, and the axis vectors. */
+  private final case class Slab(ny: Int, nx: Int, lats: Array[Double],
+                                lons: Array[Double], epochs: Array[Long],
+                                values: Array[Double])
+
+  private def readSlab(nc: NcFile, r0: Int, r1: Int, valueVar: String,
+                       latVar: String, lonVar: String, timeVar: String): Slab = {
+    // value + time decoded from ONE span fetch (readRecordsMulti)
+    // instead of two near-identical ranged reads per split
+    val multi = nc.readRecordsMulti(Seq(valueVar, timeVar), r0, r1)
+    val (vShape, values) = multi(valueVar)
+    require(vShape.size == 3, s"$valueVar must be (time, y, x), got $vShape")
+    val Seq(_, ny, nx) = vShape
+    val (lats, lons) = gridAxes(nc, ny, nx, latVar, lonVar)
+    Slab(ny, nx, lats, lons, epochSeconds(nc, timeVar, multi(timeVar)._2), values)
+  }
+
+  /** `XLAT[0, :, 0]` and `XLONG[0, 0, :]` — or the whole vector when
+    * the coordinate variable is 1-D. */
+  private def gridAxes(nc: NcFile, ny: Int, nx: Int, latVar: String,
+                       lonVar: String): (Array[Double], Array[Double]) = {
+    def axis(name: String, take: Int, pick: Int => Int): Array[Double] = {
+      val v = nc.variable(name)
+      val (shp, raw) =
+        if (nc.isRecordVar(v)) nc.readRecords(name, 0, 1)
+        else nc.readDoubles(name)
+      if (shp.size == 1) raw
+      else (0 until take).map(i => raw(pick(i))).toArray // t=0 slice of (t,y,x)
+    }
+    (axis(latVar, ny, y => y * nx), axis(lonVar, nx, x => x))
+  }
+
+  /** Epoch seconds of raw `timeVar` ticks, from its unit string. */
+  private def epochSeconds(nc: NcFile, timeVar: String,
+                           ticks: Array[Double]): Array[Long] = {
+    val tv = nc.variable(timeVar)
+    val unitStr = tv.attr("description").orElse(tv.attr("units"))
+      .map(_.values.asInstanceOf[String])
+      .getOrElse(throw new IllegalArgumentException(
+        s"$timeVar has neither 'description' nor 'units' — raw ticks " +
+          "would silently read as 1970-epoch seconds"))
+    val (secsPer, base) = parseTimeUnits(unitStr)
+    // round, don't truncate: XTIME is NC_FLOAT, so 10.2 min arrives as
+    // 10.1999998f and truncation lands the whole timestep one second
+    // early — file stamps, watermarks, and cross-system joins on
+    // epoch_s would silently disagree
+    ticks.map(t => base + math.round(t * secsPer))
+  }
+
+  /** ONE row per TIMESTEP crosses the external-row encoder (path,
+    * t_idx, epoch_s, coordinate vectors, the step's ny·nx value slab);
+    * the per-cell rows are built by [[explodeCells]] inside whole-stage
+    * codegen — per-cell Row construction paid per-field conversion on
+    * millions of rows (r16, guide §1.2 step 2 / §4). */
+  private val stepFields = Seq(
+    StructField("path", StringType, nullable = false),
+    StructField("t_idx", IntegerType, nullable = false),
+    StructField("epoch_s", LongType, nullable = false),
+    StructField("nx", IntegerType, nullable = false),
+    StructField("lats", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("lons", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("values", ArrayType(DoubleType, containsNull = false), nullable = false))
+
+  /** Per-cell fan-out in codegen: cell i of a step's row-major slab is
+    * (y = i div nx, x = i mod nx); `extra` gets the 1-based y and x
+    * (element_at's indexing) and adds per-cell columns after `value`. */
+  private def explodeCells(steps: DataFrame,
+                           extra: (Column, Column) => Seq[Column]): DataFrame = {
+    val y = (expr("i div nx") + lit(1L)).cast("int")
+    val x = (pmod(col("i"), col("nx")) + lit(1)).cast("int")
+    steps
+      .select(steps.columns.filter(_ != "values").map(col).toSeq :+
+        posexplode(col("values")).as(Seq("i", "value")): _*)
+      .select(Seq(col("path"), col("t_idx"), col("epoch_s"),
+        element_at(col("lats"), y).as("lat"),
+        element_at(col("lons"), x).as("lon"),
+        col("value")) ++ extra(y, x): _*)
   }
 }

@@ -120,4 +120,32 @@ class NetCdfClassicSpec extends SparkSpec {
     assert(diffs.sorted.toSeq === Seq(10.0, 11.0, 12.0, 13.0, 14.0, 15.0))
     Files.delete(f)
   }
+
+  test("readGridDiff equals readGrid → intervalDiff across split boundaries") {
+    import org.apache.spark.sql.functions._
+    val f = Files.createTempFile("graft_diff", ".nc")
+    val (ny, nx, nt) = (2, 3, 7)
+    // tied XTIME at records 2-3: the window orders ties by t_idx
+    val times = Array(0f, 15f, 30f, 30f, 45f, 60f, 75f)
+    val values = Array.tabulate(nt * ny * nx)(i => (i / (ny * nx)) * (1.5f + i % 4))
+    graft.sources.NetCdfClassicWriter.writeWrfGrid(f.toString,
+      Array(6.0f, 6.25f), Array(79.0f, 79.125f, 79.25f), times,
+      "2020-01-01 00:00:00", "RAINNC", values)
+    assert(NetCdfClassic.recordOrderBlocker(f.toString).isEmpty)
+    val cols = Seq("path", "t_idx", "epoch_s", "lat", "lon", "value", "delta")
+    val expect = graft.operators.Timeseries.intervalDiff(
+        NetCdfClassic.readGrid(spark, Seq(f.toString))
+          .withColumn("cell", concat_ws("_", col("lat"), col("lon"))),
+        "cell", "epoch_s", "t_idx", "value")
+      .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(expect.length === (nt - 1) * ny * nx)
+    for (perSplit <- Seq(1, 2, 3, 24)) {
+      val got = NetCdfClassic.readGridDiff(spark, Seq(f.toString), recordsPerSplit = perSplit)
+      assert(got.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq === expect,
+        s"recordsPerSplit=$perSplit")
+      assert(got.filter(col("lat6") =!= format_string("%.6f", col("lat")) ||
+        col("lon6") =!= format_string("%.6f", col("lon"))).isEmpty)
+    }
+    Files.delete(f)
+  }
 }

@@ -1,0 +1,202 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.Timeseries
+import graft.sinks.RfieldSink
+import graft.sources.{NetCdfClassic, NetCdfClassicWriter}
+
+/** `Pipeline.run` against the run as the window operators compute it:
+  * readGrid → intervalDiff per (system, cell) → stationRegistry /
+  * tmsId / fgtWatermark, and each domain's mean from its own diff.
+  * Outputs must be identical whichever diff path the run takes, and
+  * the path taken is recorded. */
+class PipelineDiffSpec extends SparkSpec {
+
+  private val Systems = Seq("A", "C", "E", "SE")
+  private val D03 = "d03_RAINNC_{system}.nc"
+  private val D01 = "d01_RAINNC_{system}.nc"
+
+  /** One cumulative (time, y, x) grid per system; `inc(system index,
+    * t, y, x)` is step t's increment. */
+  private def writeRun(dir: String, pattern: String, lats: Array[Float],
+                       lons: Array[Float], times: Array[Float],
+                       inc: (Int, Int, Int, Int) => Float): Unit =
+    for ((s, k) <- Systems.zipWithIndex) {
+      val (ny, nx) = (lats.length, lons.length)
+      val values = new Array[Float](times.length * ny * nx)
+      for (t <- times.indices; y <- 0 until ny; x <- 0 until nx) {
+        val i = (t * ny + y) * nx + x
+        values(i) = (if (t == 0) 0f else values(i - ny * nx)) + inc(k, t, y, x)
+      }
+      NetCdfClassicWriter.writeWrfGrid(s"$dir/${pattern.replace("{system}", s)}",
+        lats, lons, times, "2020-01-01 00:00:00", "RAINNC", values)
+    }
+
+  private def grid(n: Int, start: Float, step: Float) =
+    Array.tabulate(n)(i => start + step * i)
+
+  /** Fractional storm-like increments, distinct per system and cell. */
+  private def storm(k: Int, t: Int, y: Int, x: Int): Float =
+    ((k * 7 + t * 13 + y * 5 + x * 3) % 11) * 0.37f + (if ((x + y) % 4 == 0) 0f else 0.125f * k)
+
+  private def config(dir: String, out: String, domains: Seq[DomainConfig],
+                     packaged: Boolean = true) =
+    PipelineConfig(ncDir = dir, outDir = out, systems = Systems,
+      packagedRfields = packaged, landSeries = true, landSeriesFiles = 4,
+      domains = domains)
+
+  /** The run through the window operators, into `out`; returns the
+    * stations / series / watermarks counts. */
+  private def windowRun(cfg: PipelineConfig, out: String): (Long, Long, Long) = {
+    def cellKey(system: Option[String]) = concat_ws("_", (system.map(col).toSeq ++
+      Seq(format_string("%.6f", col("lat")), format_string("%.6f", col("lon")))): _*)
+    def diffOf(pattern: String): DataFrame = {
+      val paths = cfg.systems.map(s => cfg.ncPath(pattern, s))
+      val sys = cfg.systems.zip(paths).foldLeft(lit(null).cast("string")) {
+        case (acc, (s, p)) => when(col("path") === p, lit(s)).otherwise(acc)
+      }
+      val g = NetCdfClassic.readGrid(spark, paths).withColumn("system", sys)
+        .withColumn("cell", cellKey(Some("system")))
+      Timeseries.intervalDiff(g, "cell", "epoch_s", "t_idx", "value")
+    }
+    def cut(df: DataFrame, d: DomainConfig) = d.bbox.fold(df) {
+      case (lonMin, latMin, lonMax, latMax) =>
+        df.filter(col("lon") >= lonMin && col("lon") <= lonMax &&
+          col("lat") >= latMin && col("lat") <= latMax)
+    }
+    val primary = cfg.runDomains.head
+    val rain = diffOf(primary.filePattern).withColumn("ts_us", col("epoch_s") * lit(1000000L))
+    val withId = Timeseries.tmsId(Timeseries.tzShiftLk(rain, "ts_us")
+        .withColumn("sim_tag", lit(cfg.simTag))
+        .withColumn("source", concat(lit(s"${cfg.model}_"), col("system")))
+        .withColumn("variable", lit(cfg.variable))
+        .withColumn("unit", lit(cfg.unit)),
+      Seq("sim_tag", "cell", "source", "variable", "unit"))
+    for (d <- cfg.runDomains) {
+      RfieldSink.write(cut(diffOf(d.filePattern), d)
+        .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
+        .agg(round(avg("delta"), 4).as("value")), s"$out/rfields/${d.name}", "t")
+      if (cfg.packagedRfields) for (s <- cfg.systems) {
+        val sysDiff =
+          if (d.filePattern == primary.filePattern) rain.filter(col("system") === s)
+          else Timeseries.intervalDiff(
+            NetCdfClassic.readGrid(spark, Seq(cfg.ncPath(d.filePattern, s)))
+              .withColumn("cell", cellKey(None)), "cell", "epoch_s", "t_idx", "value")
+        RfieldSink.writePackaged(cut(sysDiff, d)
+            .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
+            .agg(round(sum("delta"), 4).as("value")),
+          s"$out/rfields_packaged/${d.name}/$s", "t", cfg.model, s, cfg.version)
+      }
+    }
+    Pipeline.landSeries(withId, s"$out/series", cfg.landSeriesFiles)
+    (Timeseries.stationRegistry(rain, Seq("lat", "lon"), "wrf").count(),
+      withId.count(), Timeseries.fgtWatermark(withId, "tms_id", "ts_us").count())
+  }
+
+  /** Relative path → bytes of every file under `root`, part files keyed
+    * by their directory (their names carry a random job id), zips by
+    * entry (entry timestamps differ run to run). */
+  private def contents(root: String): Map[String, Seq[Byte]] = {
+    val base = Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .filterNot(p => p.getFileName.toString.startsWith(".") ||
+        p.getFileName.toString == "_SUCCESS")
+      .flatMap { p =>
+        val rel = base.relativize(p).toString
+        if (rel.endsWith(".zip")) {
+          val zf = new java.util.zip.ZipFile(p.toFile)
+          try zf.entries().asScala.toList.map(e =>
+            s"$rel!${e.getName}" -> zf.getInputStream(e).readAllBytes().toSeq)
+          finally zf.close()
+        } else Seq((if (p.getFileName.toString.startsWith("part-"))
+          base.relativize(p.getParent).toString + "/part" else rel) ->
+          Files.readAllBytes(p).toSeq)
+      }.toMap
+  }
+
+  /** Runs `cfg` through `Pipeline.run` and through [[windowRun]] and
+    * asserts identical rfields, bundles, landed rows and counts;
+    * returns the run's result. */
+  private def assertSameAsWindow(dir: String, domains: Seq[DomainConfig],
+                                 packaged: Boolean = true): Pipeline.PipelineResult = {
+    val res = Pipeline.run(spark, config(dir, s"$dir/out", domains, packaged))
+    val expect = windowRun(config(dir, s"$dir/ref", domains, packaged), s"$dir/ref")
+    assert((res.stations, res.seriesRows, res.watermarks) === expect)
+    for (sub <- Seq("rfields") ++ (if (packaged) Seq("rfields_packaged") else Nil)) {
+      val (got, want) = (contents(s"$dir/out/$sub"), contents(s"$dir/ref/$sub"))
+      assert(got.keySet === want.keySet, sub)
+      val differ = want.keys.filter(k => got(k) != want(k))
+      assert(differ.isEmpty, s"$sub files differ: ${differ.take(5)}")
+    }
+    val (got, want) = (spark.read.parquet(s"$dir/out/series"), spark.read.parquet(s"$dir/ref/series"))
+    assert(got.schema === want.schema)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    res
+  }
+
+  test("reader-path run equals the window operators: rfields, bundles, landing, counts") {
+    val dir = Files.createTempDirectory("graft_diff_eq").toString
+    writeRun(dir, D03, grid(6, 6.8f, 0.03f), grid(7, 79.9f, 0.05f),
+      grid(9, 0f, 15f), storm)
+    writeRun(dir, D01, grid(3, 5.0f, 0.5f), grid(3, 79.0f, 0.5f),
+      grid(9, 0f, 60f), (k, t, y, x) => storm(k + 1, t, x, y))
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
+      DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92))),
+      DomainConfig("d01", D01)))
+    assert(res.diffPaths === Map(D03 -> "reader", D01 -> "reader"))
+    assert(res.stations === 42L && res.seriesRows === 4L * 42 * 8 &&
+      res.watermarks === 4L * 42)
+  }
+
+  test("XTIME stepping back falls back to the window and gives its output") {
+    val dir = Files.createTempDirectory("graft_diff_back").toString
+    writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
+      Array(0f, 15f, 30f, 20f, 45f, 60f), storm)
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)))
+    assert(res.diffPaths(D03).startsWith("window: ") &&
+      res.diffPaths(D03).contains("steps back at record 3"), res.diffPaths)
+  }
+
+  test("a repeated 6-dp latitude falls back to the window and gives its output") {
+    val dir = Files.createTempDirectory("graft_diff_lat").toString
+    // rows 1 and 2 share a latitude; their increments depend on the
+    // latitude, not the row, so the window's merged series has one
+    // order whatever its sort does with the tied rows
+    val lats = Array(6.8f, 6.83f, 6.83f, 6.86f)
+    writeRun(dir, D03, lats, grid(5, 79.9f, 0.05f), grid(6, 0f, 15f),
+      (k, t, y, x) => storm(k, t, if (y == 2) 1 else y, x))
+    // no bundles: the merged series keeps a first-record row for the
+    // shared cells only, which the positional bundle format rejects
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)), packaged = false)
+    assert(res.diffPaths(D03).startsWith("window: ") &&
+      res.diffPaths(D03).contains("repeated 6-dp latitude 6.830000"), res.diffPaths)
+  }
+
+  test("tied XTIME values keep the reader path (record order is the window's tie-break)") {
+    val dir = Files.createTempDirectory("graft_diff_tie").toString
+    writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
+      Array(0f, 15f, 15f, 30f, 30f, 45f), storm)
+    // bundles need one file per timestep, which tied steps cannot give
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)), packaged = false)
+    assert(res.diffPaths === Map(D03 -> "reader"))
+  }
+
+  test("a failing sink leaves nothing cached") {
+    val dir = Files.createTempDirectory("graft_diff_fail").toString
+    writeRun(dir, D03, grid(3, 6.8f, 0.03f), grid(3, 79.9f, 0.05f),
+      grid(4, 0f, 15f), storm)
+    val outFile = new File(dir, "out")
+    assert(outFile.createNewFile()) // rfields under a regular file cannot be written
+    spark.catalog.clearCache()
+    intercept[Exception](Pipeline.run(spark,
+      config(dir, outFile.getPath, Seq(DomainConfig("d03", D03)))))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+}

@@ -24,6 +24,46 @@ class RfieldSinkSpec extends SparkSpec {
     assert(lines === List("79.0 6.0 0.5", "79.0 6.5 1.0", "79.5 6.0 2.5")) // (lon, lat) sorted
   }
 
+  test("write spreads more timesteps than cores over tasks, one sorted file per timestep") {
+    val steps = spark.sparkContext.defaultParallelism * 3
+    val cells = Seq((79.5, 6.0), (79.0, 6.5), (79.0, 6.0), (79.5, 6.5))
+    val rf = (for (t <- 0 until steps; ((lon, lat), i) <- cells.zipWithIndex)
+      yield (900L * t, lon, lat, t + 0.25 * i)).toDF("t", "lon", "lat", "value")
+    val dir = Files.createTempDirectory("rfield_spread").toString
+    // the result stage of every job in the write's group: its task count
+    val writeTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "rfield_spread")
+          writeTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val endedBefore = ended.get()
+    try {
+      spark.sparkContext.setJobGroup("rfield_spread", "rfield write")
+      RfieldSink.write(rf, dir, "t")
+    } finally spark.sparkContext.clearJobGroup()
+    // listener events arrive asynchronously: wait for the write's jobs
+    val deadline = System.nanoTime() + 10000000000L
+    while (ended.get() - endedBefore < writeTasks.size && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    spark.sparkContext.removeSparkListener(listener)
+    // the last job of the group is the write itself
+    assert(writeTasks.asScala.toSeq.last > 1, s"write result stages: $writeTasks")
+
+    for (t <- 0 until steps) {
+      val parts = Files.list(Paths.get(dir, s"t=${900L * t}")).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toList
+      assert(parts.size === 1, s"t=${900L * t}")
+      val lines = Files.readAllLines(parts.head).asScala.toList
+      assert(lines === cells.zipWithIndex.sortBy(_._1)
+        .map { case ((lon, lat), i) => s"$lon $lat ${t + 0.25 * i}" }, s"t=${900L * t}")
+    }
+  }
+
   test("writePackaged emits xy.csv + value-only per-timestep files + zip (round-trips)") {
     // 2×2 grid over 3 timesteps (epoch seconds; 0 → LK 1970-01-01_05-30)
     val cells = Seq((79.0, 6.0), (79.0, 6.5), (79.5, 6.0), (79.5, 6.5))
