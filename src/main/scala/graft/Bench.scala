@@ -66,12 +66,6 @@ object Bench {
   private val benchExclude: Set[String] =
     Set("ann_graph_topk", "ann_graph_topk_indexed", "ann_graph_topk_seeded")
 
-  /** Larger codegen class cache: the warmup + timed phases compile
-    * >100 distinct stages and the default 100-entry cache would make
-    * every timed query pay Janino recompilation. */
-  private[graft] val codegenCacheExtra: Map[String, String] =
-    Map("spark.sql.codegen.cache.maxEntries" -> "5000")
-
   /** noop-sink wall time of one plan — the same materialization rule
     * as the catalog loop (see Methodology). */
   private[graft] def timeNoop(fn: () => org.apache.spark.sql.DataFrame): Double = {
@@ -83,8 +77,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-      extra = codegenCacheExtra)
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // deterministic per-entry cost counters (r16 verdict #2): jobs/
     // tasks/exec_s/shuffle_mb land in BENCH_FULL.json next to the wall
     // medians — the load-insensitive record that adjudicates sub-5s

@@ -57,8 +57,7 @@ object Profile {
     val sfDir = args.head
     val entries = args.toSeq.tail
     unknownNames(entries).foreach { msg => System.err.println(msg); sys.exit(2) }
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-      extra = Bench.codegenCacheExtra)
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val counters = new BenchCounters(spark.sparkContext)
     // per-entry catch (the Bench.runAll posture): one entry's failure
     // must not hide every later entry's numbers

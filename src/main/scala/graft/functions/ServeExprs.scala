@@ -1,9 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Codegen expressions that carry a graph serve's BOUNDED driver-side
@@ -131,26 +135,75 @@ object ServeExprs {
       copy(child = c)
   }
 
-  /** (a, b) pair membership — the anti-join's predicate under `!`. */
+  /** (a, b) pair membership — the anti-join's predicate under `!`.
+    *
+    * Precondition: both inputs are NON-NULL, and a null input THROWS.
+    * `!PairKnown` equals the left-anti join only on non-null keys: the
+    * anti-join KEEPS a row whose key is null (nothing matches it),
+    * while a null-propagating predicate would make the filter DROP it
+    * — a silently lost row. The serves build both keys from collected
+    * ids, so a null is a caller bug, and it fails loudly. */
   case class PairKnown(left: Expression, right: Expression,
                        set: LongPairSet) extends BinaryExpression {
     override def dataType: DataType = BooleanType
+    override def nullable: Boolean = false
     override def prettyName: String = "graft_pair_known"
     override def checkInputDataTypes(): TypeCheckResult = {
       val l = expectLong(prettyName, left)
       if (l != TypeCheckResult.TypeCheckSuccess) l
       else expectLong(prettyName, right)
     }
-    override def nullSafeEval(a: Any, b: Any): Any =
+    override def eval(input: InternalRow): Any = {
+      val a = left.eval(input)
+      val b = right.eval(input)
+      if (a == null || b == null) throw new IllegalArgumentException(PairKnown.NullKey)
       set.contains(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val s = ctx.addReferenceObj("pairSet", set,
-          classOf[LongPairSet].getName)
-        s"${ev.value} = $s.contains($a, $b);"
-      })
+    }
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val s = ctx.addReferenceObj("pairSet", set, classOf[LongPairSet].getName)
+      val a = left.genCode(ctx)
+      val b = right.genCode(ctx)
+      ev.copy(code = code"""
+        |${a.code}
+        |${b.code}
+        |if (${a.isNull} || ${b.isNull}) {
+        |  throw new IllegalArgumentException("${PairKnown.NullKey}");
+        |}
+        |boolean ${ev.value} = $s.contains(${a.value}, ${b.value});""".stripMargin,
+        isNull = FalseLiteral)
+    }
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): PairKnown = copy(left = l, right = r)
+  }
+  object PairKnown {
+    val NullKey = "graft_pair_known needs non-null keys: the left-anti join " +
+      "it stands for keeps a null-keyed row, a filter on it would drop the row"
+  }
+
+  /** A per-request long as a plan REFERENCE OBJECT. A long `Literal`
+    * is written into the generated Java source, and Spark's codegen
+    * cache keys on that source: every new query id or ingest batch id
+    * compiled a new class. This reads the value from the references
+    * array instead, so one compiled class serves every value. Not
+    * foldable, so the optimizer never turns it back into a literal. */
+  case class LongParam(value: Long) extends LeafExpression {
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = false
+    override def prettyName: String = "graft_long_param"
+    override def eval(input: InternalRow): Any = value
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val v = ctx.addReferenceObj("param", java.lang.Long.valueOf(value),
+        classOf[java.lang.Long].getName)
+      ev.copy(code = code"final long ${ev.value} = $v.longValue();",
+        isNull = FalseLiteral)
+    }
+  }
+
+  /** `value` as a [[LongParam]] column: use it where a request or batch
+    * id would otherwise be `lit(value)`. */
+  def longParam(spark: SparkSession, value: Long): Column = {
+    VecExprs.register(spark)
+    call_function("graft_long_param", lit(value))
   }
 
   /** query vector by id → array<double> (miss throws). */

@@ -1036,6 +1036,12 @@ object VecExprs {
       s"$what must be an int literal, got $other")
   }
 
+  private def longLit(e: Expression, what: String): Long = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, LongType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be a bigint literal, got $other")
+  }
+
   /** Name → builder for every graft SQL function (single source of
     * truth for both registration paths). */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -1058,20 +1064,29 @@ object VecExprs {
       HyperplaneProbes(args(0), intLit(args(1), "planes"),
         intLit(args(2), "table"), intLit(args(3), "nprobes"))),
     "graft_grams3h"     -> (args => Grams3Hashes(args(0))),
+    // (bigint literal) → the value as a plan reference object, not
+    // source text (see ServeExprs.longParam)
+    "graft_long_param"  -> (args => ServeExprs.LongParam(longLit(args(0), "value"))),
     "graft_minhash_merge32" -> (args =>
       AggExprs.MinHashMerge(args(0), 32).toAggregateExpression()))
 
   /** Register the expressions as SQL temp functions on the session's
     * registry (idempotent; survives only the session, so every operator
-    * entry point calls this — cheap map insert after the first time).
+    * entry point calls this — one registry lookup per function after
+    * the first time).
     * Going through the registry keeps us on public-ish API: `expr(...)`
     * resolves the name at analysis, no internal Column constructors.
     * Sessions built with `spark.sql.extensions=graft.GraftExtensions`
     * get the same functions without this call. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
+    // once per session: a session that already has every function
+    // (an earlier call, or GraftExtensions at build time) keeps them —
+    // replacing them logs one WARN per function on every call
+    if (!builders.forall { case (name, _) =>
+          reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)) })
+      builders.foreach { case (name, b) =>
+        reg.createOrReplaceTempFunction(name, b, "built-in")
+      }
   }
 }

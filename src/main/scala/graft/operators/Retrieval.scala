@@ -550,8 +550,10 @@ object Retrieval {
     val qRows = queryVec.select(col("vec_id")).limit(2).collect()
     require(qRows.length == 1,
       s"serve answers exactly ONE query vector, got ${qRows.length} rows")
-    val qId = qRows(0).getLong(0)
-    val cand = fused.select(lit(qId).as("q_id"), col("doc_id").as("n_id"),
+    // the query id as a plan reference, not a literal: the stage's
+    // generated code then stays the same for every query
+    val qId = graft.functions.ServeExprs.longParam(spark, qRows(0).getLong(0))
+    val cand = fused.select(qId.as("q_id"), col("doc_id").as("n_id"),
       round(col("rrf_score") * 1e6, 0).cast("long").as("rel_u"))
     Similarity.mmrGreedy(spark, vecs, cand, cfg.kOut, cfg.lamN, cfg.lamD)
       .select(col("q_id"), col("doc_id"),

@@ -1770,14 +1770,16 @@ object Similarity {
             col("v").as("dst_v"), col("n2").as("dst_n2")), Seq("dst"))
           .select(col("src"), col("dst"), col("dst_v"), col("dst_n2"))
           .withColumn("pb", graphPb(col("src"), buckets))
-          .withColumn("ingest_batch", lit(ingestBatch))
+          .withColumn("ingest_batch",
+            graft.functions.ServeExprs.longParam(spark, ingestBatch))
           .repartition(col("pb")).sortWithinPartitions(col("src"))
           .write.partitionBy("pb", "ingest_batch")
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite").parquet(s"$path/adj"),
         () => batch.select(col("vec_id"), col("v"), col("n2"))
           .withColumn("vb", graphPb(col("vec_id"), buckets))
-          .withColumn("ingest_batch", lit(ingestBatch))
+          .withColumn("ingest_batch",
+            graft.functions.ServeExprs.longParam(spark, ingestBatch))
           .repartition(col("vb")).sortWithinPartitions(col("vec_id"))
           .write.partitionBy("vb", "ingest_batch")
           .option("partitionOverwriteMode", "dynamic")
@@ -2425,14 +2427,36 @@ object Similarity {
   private def committedLists(spark: org.apache.spark.sql.SparkSession,
                              path: String,
                              excludeIngestBatch: Option[Long],
-                             h: IvfHandle): DataFrame = {
+                             h: IvfHandle,
+                             only: Option[Seq[String]] = None): DataFrame = {
     // the handle's schema: file listing only, no schema-inference job
-    val base = spark.read.schema(h.listsSchema).parquet(s"$path/lists")
+    val reader = spark.read.schema(h.listsSchema)
+    val base = only.fold(reader.parquet(s"$path/lists")) { subs =>
+      val dirs = existingListDirs(spark, path, subs)
+      if (dirs.isEmpty) reader.parquet(s"$path/lists").filter(lit(false))
+      else reader.option("basePath", s"$path/lists").parquet(dirs: _*)
+    }
     val lists = committedBatches(spark, path).fold(base)(ids =>
       base.filter(col("ingest_batch").isin(ids: _*)))
     excludeIngestBatch.fold(lists)(b =>
       lists.filter(col("ingest_batch") =!= lit(b)))
   }
+
+  /** The directories `lists/<sub>` that exist, for partition
+    * sub-paths such as `c_id=3` or `c_id=3/lbl=1`: one glob, which
+    * lists `lists/` (and each matched `c_id=` directory for a
+    * two-level pattern) once. A probed list with no members has no
+    * directory, and a read of a missing path fails. */
+  private def existingListDirs(spark: org.apache.spark.sql.SparkSession,
+                               path: String, subs: Seq[String]): Seq[String] =
+    if (subs.isEmpty) Nil
+    else {
+      import org.apache.hadoop.fs.Path
+      val pattern = new Path(s"$path/lists/{${subs.distinct.mkString(",")}}")
+      val fs = pattern.getFileSystem(spark.sessionState.newHadoopConf())
+      Option(fs.globStatus(pattern)).toSeq.flatten
+        .filter(_.isDirectory).map(_.getPath.toString)
+    }
 
   /** The written index's vector rows — COMMITTED batches only (the
     * [[writeCommitRecord]] contract), in the prepared
@@ -2501,7 +2525,7 @@ object Similarity {
     val existing = h.listsSchema
     val assigned = ivfAssignPrepared(prepared(withLabel(emb, existing)), h.cents)
       .select(col("vec_id"), col("label"), col("v"), col("n2"), col("c_id"),
-        lit(ingestBatch).as("ingest_batch"))
+        graft.functions.ServeExprs.longParam(spark, ingestBatch).as("ingest_batch"))
     // a label-bucketed index (E12 layout) buckets arrivals with the
     // FROZEN build-time B from meta/ — a drifted bucket count would
     // scatter one label across buckets and break serve-time pruning
@@ -2541,7 +2565,8 @@ object Similarity {
         .withColumn("u", transform(col("v"), x => x / sqrt(col("n2"))))
         .withColumn("codes", call_function(fn, col("u")))
         .select(col("vec_id"), col("label"), col("v"), col("n2"),
-          col("codes"), col("c_id"), lit(ingestBatch).as("ingest_batch"))
+          col("codes"), col("c_id"),
+          graft.functions.ServeExprs.longParam(spark, ingestBatch).as("ingest_batch"))
         .write.partitionBy("c_id", "ingest_batch")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(s"$path/lists")
@@ -2620,9 +2645,11 @@ object Similarity {
     * queries ([[queryProbes]] — a zero query has no defined ranking,
     * and its degenerate probe rows would inflate the probed set,
     * reading list partitions no real query needs), and return
-    * (probes, prunedLists) where the list scan carries
-    * `c_id IN (probed)` as a PartitionFilter plus the optional
-    * replayed-batch exclusion. Nothing here schedules a Spark job
+    * (probes, prunedLists) where the list scan reads only the probed
+    * `lists/c_id=<id>` directories, plus the optional replayed-batch
+    * exclusion. The probed ids are paths, not a `c_id IN (…)`
+    * literal: a literal partition predicate compiled a new predicate
+    * class for every probe set. Nothing here schedules a Spark job
     * beyond the query rows' collect (none for a local query frame):
     * the centroids and the lists schema come from the handle, the
     * probed ids from the driver probe, the committed batches from one
@@ -2635,8 +2662,8 @@ object Similarity {
     val h = ivfHandle(spark, path)
     val probes = queryProbes(queries, h.cents, nprobe)
     val probedIds = probes.collect().map(_.getInt(3)).distinct.toSeq
-    val lists = committedLists(spark, path, excludeIngestBatch, h)
-      .filter(col("c_id").isin(probedIds: _*))
+    val lists = committedLists(spark, path, excludeIngestBatch, h,
+      Some(probedIds.map(c => s"c_id=$c")))
     (probes, lists)
   }
 
@@ -2689,9 +2716,9 @@ object Similarity {
   }
 
   /** Query a written IVF index: probe the stored quantizer, then read
-    * ONLY the probed partitions (the scan's PartitionFilters carry
-    * `c_id IN (probed)` — spec-proved, with the input file set
-    * restricted to the probed directories). `queries` is any frame
+    * ONLY the probed partitions (the scan reads the probed `c_id=`
+    * directories — spec-proved, with the input file set restricted to
+    * the probed directories). `queries` is any frame
     * with (vec_id, embedding) — the external query set of a real
     * deployment. The probe runs on the driver against the index's
     * cached quantizer ([[probeAndPrune]]), so the returned frame's
@@ -2736,10 +2763,10 @@ object Similarity {
   /** E12's on-disk serve: label-FILTERED top-k from an index written
     * with `labelBuckets > 0` — the predicate PRUNES partitions instead
     * of post-filtering rows. Three prunings compose on the one list
-    * scan: `c_id IN (probed)` (IVF's "read nprobe/nlist"), `lbl IN
-    * (query labels' buckets)` (the filter's "read ~1/B of each probed
-    * list"), and the optional replayed-batch exclusion — all
-    * PartitionFilters, spec-proved with the input-file set. Probe
+    * scan: the probed `c_id=` directories (IVF's "read nprobe/nlist"),
+    * within each only the query labels' `lbl=` buckets (the filter's
+    * "read ~1/B of each probed list"), and the optional replayed-batch
+    * exclusion — spec-proved with the input-file set. Probe
     * count widens by the FROZEN build-time label cardinality from
     * `meta/` (nprobe·L, capped at nlist — [[ivfTopKFiltered]]'s
     * selectivity correction without its per-serve corpus aggregate);
@@ -2820,11 +2847,12 @@ object Similarity {
         StructField("q_label", storedLabelType),
         StructField("q_lbl", q.schema("q_lbl").dataType))))
     // both pruning sets are bounded driver metadata: probed ids by
-    // nlist, query buckets by min(distinct query labels, B)
+    // nlist, query buckets by min(distinct query labels, B); read as
+    // `c_id=<id>/lbl=<bucket>` directories (the probeAndPrune reason)
     val probedIds = rows.map(_.getInt(3)).distinct
     val qLbls = qRows.map(_.get(4)).distinct.toSeq
-    val lists = committedLists(spark, path, excludeIngestBatch, h)
-      .filter(col("c_id").isin(probedIds: _*) && col("lbl").isin(qLbls: _*))
+    val lists = committedLists(spark, path, excludeIngestBatch, h,
+        Some(for (c <- probedIds; l <- qLbls) yield s"c_id=$c/lbl=$l"))
       .filter(col("n2") > 0)
     (probes, lists)
   }

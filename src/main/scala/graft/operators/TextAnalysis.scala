@@ -886,6 +886,9 @@ object TextAnalysis {
     try {
       if (base.isEmpty) return
       val pbkt = pmod(xxhash64(col("tok")), lit(Bm25DeltaBuckets))
+      // the batch id as a plan reference, not a literal: every batch
+      // reuses the same compiled write stages
+      val batchCol = graft.functions.ServeExprs.longParam(spark, ingestBatch)
       // the postings and df segments are independent (disjoint dirs,
       // both off the persisted batch) — overlap them (r16, guide
       // §2.6); the META commit record below still lands strictly
@@ -893,14 +896,14 @@ object TextAnalysis {
       Par.run(Seq(
         () => bm25Postings(base)
           .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-            lit(ingestBatch).as("ingest_batch"), pbkt.as("pbkt"))
+            batchCol.as("ingest_batch"), pbkt.as("pbkt"))
           .write.partitionBy("ingest_batch", "pbkt")
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite")
           .parquet(tableLocation(spark, s"${table}_post") + "_delta"),
         () => bm25DfCounts(base)
           .select(col("tok"), col("df"),
-            lit(ingestBatch).as("ingest_batch"), pbkt.as("pbkt"))
+            batchCol.as("ingest_batch"), pbkt.as("pbkt"))
           .write.partitionBy("ingest_batch", "pbkt")
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite")
@@ -909,7 +912,7 @@ object TextAnalysis {
       // writes (serve and compaction treat a meta-less batch as
       // uncommitted and skip its postings/df segments)
       bm25Meta(base)
-        .select(col("n"), col("t"), lit(ingestBatch).as("ingest_batch"))
+        .select(col("n"), col("t"), batchCol.as("ingest_batch"))
         .write.partitionBy("ingest_batch")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")

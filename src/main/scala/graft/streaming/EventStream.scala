@@ -727,7 +727,8 @@ object EventStream {
         appendHybrid(batch, table, path, batchId)
         graft.operators.TextAnalysis.qualityQ6(
             dedupById(batch.select("doc_id", "text"), "doc_id"))
-          .withColumn("ingest_batch", lit(batchId))
+          .withColumn("ingest_batch",
+            graft.functions.ServeExprs.longParam(spark, batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_batch").parquet(deltaPath)

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Par, Retrieval, Similarity}
+import graft.operators.{Par, Retrieval, Similarity, TextAnalysis}
 
 /** The IVF serves' driver-resident metadata: the probe runs on the
   * driver against a cached per-path handle (centroids, lists schema,
@@ -163,5 +163,53 @@ class IndexServeSpec extends SparkSpec {
     assert(inference.isEmpty, s"schema-inference jobs on a warm serve: $inference")
     Seq("_df", "_meta", "_post").foreach(sfx =>
       spark.sql(s"DROP TABLE IF EXISTS idx_jobs_bm25$sfx"))
+  }
+
+  test("warm page and knn compile no code: fresh query ids, vectors and terms") {
+    val path = tmp("graft_idx_codegen")
+    val table = "idx_codegen_bm25"
+    val docs = Tables.documents(spark, sfDir)
+    val all = Tables.embeddings(spark, sfDir)
+    Retrieval.buildArtifacts(docs.filter(col("doc_id") % 4 =!= 0),
+      all.filter(col("vec_id") % 4 =!= 0), table, path, nlist = 8)
+    // one appended batch, so both legs also read delta segments
+    TextAnalysis.appendToBm25Index(docs.filter(col("doc_id") % 4 === 0)
+      .select("doc_id", "text"), table, ingestBatch = 0L)
+    Similarity.appendToIvfIndex(all.filter(col("vec_id") % 4 === 0)
+      .select("vec_id", "embedding"), s"$path/ivf", ingestBatch = 0L)
+    val vecs = emb.select("embedding").limit(40).collect().map(_.getSeq[Float](0).toArray)
+    // corpus words, three per page: a term count is a plan shape of its
+    // own (one comparison per term), and a term the corpus lacks empties
+    // the lexical leg, which AQE re-plans — both compile once per shape
+    val words = Seq("scan", "column", "window", "order", "sort", "part", "agg",
+      "value", "line", "key", "join", "merge", "group", "query", "vector",
+      "hash", "slow", "stream", "filter", "fast", "batch", "spark", "table",
+      "small", "data", "big", "customer", "row")
+    var next = 0
+    def fresh(): Int = { next += 1; next }
+    def compiled(f: => Unit): Long = {
+      val c0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def page(): Long = {
+      val i = fresh()
+      val terms = Seq.tabulate(3)(j => words((3 * i + j) % words.size))
+      val q = Seq((9000000L + i, vecs(i))).toDF("vec_id", "embedding")
+      compiled(Retrieval.serveFromIndex(spark, table, path, q,
+        Retrieval.ServeConfig(terms)).collect(): Unit)
+    }
+    def knn(): Long = {
+      val q = Seq.fill(4) { val i = fresh(); (9000000L + i, vecs(i)) }
+        .toDF("vec_id", "embedding")
+      compiled(Similarity.ivfTopKFromIndex(spark, s"$path/ivf", q, 5, nprobe = 4)
+        .collect(): Unit)
+    }
+    page(); knn() // warm-up: the shapes compile once
+    val counts = Seq.fill(3)((page(), knn()))
+    info(s"classes compiled per warm (page, knn): $counts")
+    assert(counts.forall(_ == ((0L, 0L))), s"warm serves compiled classes: $counts")
+    Seq("_df", "_meta", "_post").foreach(sfx =>
+      spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
   }
 }

@@ -22,6 +22,9 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the shipped codegen cache: suites see the compile behaviour a
+      // deployment gets (the IndexServeSpec compile pin depends on it)
+      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
