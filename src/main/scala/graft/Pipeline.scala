@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Timeseries
@@ -36,7 +36,10 @@ object Pipeline {
     * version of the same accounting). `stageSeconds` carries the
     * per-stage wall clock of the run so callers (Bench) can attribute
     * a regression to parse/diff vs sinks instead of reading one
-    * opaque end-to-end number. `diffPaths` records, per file pattern,
+    * opaque end-to-end number: `stations` times the one collect of the
+    * per-series summary and the registry's key count, `series` and
+    * `watermarks` the driver's tallies over those collected rows (no
+    * Spark job). `diffPaths` records, per file pattern,
     * where the interval diff ran: `reader` (inside the split reader)
     * or `window: <why>` (the shuffle-and-sort fallback, with the file
     * property that forced it). */
@@ -180,15 +183,6 @@ object Pipeline {
         p -> pinned(diffOf(spark, cfg, p, inReader = diffPaths(p) == "reader"))).toMap
       val rain = diffs(primary.filePattern)
 
-      // 3. per series (system, cell): its row count and newest ts_us.
-      //    The registry, the series count and the watermarks read these
-      //    cells·systems rows instead of every row. Cached because a
-      //    count() prunes the aggregates, after which Catalyst's
-      //    RemoveRedundantAggregates folds this aggregate into the one
-      //    above it, whose per-key work (key rendering, md5) would then
-      //    run on every row again.
-      val perSeries = pinned(rain.groupBy("system", "cell")
-        .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us")))
       // LK time (A2) + deterministic tms id (A10)
       def withMeta(df: DataFrame) = df
         .withColumn("sim_tag", lit(cfg.simTag))
@@ -203,27 +197,28 @@ object Pipeline {
         .withColumn("variable", lit(cfg.variable))
         .withColumn("unit", lit(cfg.unit))
       val metaCols = Seq("sim_tag", "cell", "source", "variable", "unit")
-      val withId = Timeseries.tmsId(
-        withMeta(Timeseries.tzShiftLk(rain, "ts_us")), metaCols)
-      // fgt watermark per series (A11), tms_id hashed once per series
-      val wm = Timeseries.fgtWatermark(
-        Timeseries.tmsId(withMeta(perSeries), metaCols), "tms_id", "ts_us")
+      // 3. per series (system, cell): its row count, newest ts_us (the
+      //    series' fgt watermark, A11) and tms id, hashed once per
+      //    series. systems × cells rows, whatever the step count: the
+      //    driver reads the registry, the series count and the
+      //    watermarks from one collect of it
+      val perSeries = Timeseries.tmsId(withMeta(rain.groupBy("system", "cell")
+          .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us"))), metaCols)
+        .select("system", "cell", "rows", "ts_us", "tms_id")
 
       // 4. sinks: per-timestep rfield files (ensemble mean across
       //    systems per cell, gen_*_mean_rfields.py flavor) — ONE mean
-      //    per file pattern, cut to each domain's bbox (a cut on the
-      //    grouping keys commutes with the mean; the Kelani basin
-      //    shares d03's pattern), cached when two domains share it
-      def bboxCut(df: DataFrame, d: DomainConfig) =
-        d.bbox.fold(df) { case (lonMin, latMin, lonMax, latMax) =>
-          df.filter(col("lon") >= lonMin && col("lon") <= lonMax &&
-            col("lat") >= latMin && col("lat") <= latMax)
+      //    per file pattern, its rows hash-partitioned on the timestep
+      //    below the groupBy so the mean and the write share one
+      //    shuffle, and ONE write for all the pattern's domains, each
+      //    bbox domain a cut of the mean's rows (a cut on the grouping
+      //    keys commutes with the mean; the Kelani basin shares d03's
+      //    pattern)
+      def inBbox(d: DomainConfig): Column =
+        d.bbox.fold(lit(true)) { case (lonMin, latMin, lonMax, latMax) =>
+          col("lon") >= lonMin && col("lon") <= lonMax &&
+            col("lat") >= latMin && col("lat") <= latMax
         }
-      val means = patterns.map { p =>
-        val mean = diffs(p).groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
-          .agg(round(avg("delta"), 4).as("value"))
-        p -> (if (domains.count(_.filePattern == p) > 1) pinned(mean) else mean)
-      }.toMap
       def rfieldDir(d: DomainConfig): String =
         if (d.name.isEmpty) s"${cfg.outDir}/rfields"
         else s"${cfg.outDir}/rfields/${d.name}"
@@ -233,8 +228,14 @@ object Pipeline {
       // action runs first, and a parse regression would masquerade as
       // an rfield-write regression in the stage breakdown
       timed("parse_diff")(rain.count())
-      timed("rfields")(domains.foreach(d =>
-        RfieldSink.write(bboxCut(means(d.filePattern), d), rfieldDir(d), "t")))
+      timed("rfields")(patterns.foreach { p =>
+        val mean = diffs(p).select(col("epoch_s").as("t"), col("lon"), col("lat"), col("delta"))
+          .repartition(spark.sparkContext.defaultParallelism, col("t"))
+          .groupBy("t", "lon", "lat").agg(round(avg("delta"), 4).as("value"))
+        RfieldSink.writeDomains(mean,
+          domains.filter(_.filePattern == p).map(d => rfieldDir(d) -> inBbox(d)),
+          s"${cfg.outDir}/_rfields_staging", "t")
+      })
       if (cfg.packagedRfields) timed("rfield_pkg") {
         // the reference's per-system bundles — per DOMAIN (it zips
         // d03, the basin cut, and d01 each per system): each system's
@@ -244,30 +245,44 @@ object Pipeline {
           val dir = if (d.name.isEmpty) s"${cfg.outDir}/rfields_packaged/$sysName"
                     else s"${cfg.outDir}/rfields_packaged/${d.name}/$sysName"
           RfieldSink.writePackaged(
-            bboxCut(diffs(d.filePattern).filter(col("system") === sysName), d)
+            diffs(d.filePattern).filter(col("system") === sysName && inBbox(d))
               .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
               .agg(round(sum("delta"), 4).as("value")),
             dir, "t", cfg.model, sysName, cfg.version)
         }
       }
       // station registry (A9) from the series' 6-dp keys: a cell key
-      // ends `_<lat6>_<lon6>`, and a %.6f rendering holds no '_'
-      val nStations = timed("stations")(Timeseries.stationRegistry6dp(
-        perSeries.select(
-          substring_index(substring_index(col("cell"), "_", -2), "_", 1).as("lat"),
-          substring_index(col("cell"), "_", -1).as("lon")),
-        Seq("lat", "lon"), "wrf").count())
-      // total + per-system series rows in one pass
-      val perSystem = timed("series") {
-        perSeries.groupBy("system").agg(sum("rows"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // ends `_<lat6>_<lon6>` and a %.6f rendering holds no '_', so the
+      // distinct key tails are the (lat, lon) pairs stationRegistry6dp
+      // dedups
+      val (series, nStations) = timed("stations") {
+        val rows = perSeries.collect()
+        val tails = rows.map { r =>
+          val cell = r.getString(1)
+          cell.substring(cell.lastIndexOf('_', cell.lastIndexOf('_') - 1) + 1)
+        }
+        (rows, tails.distinct.length.toLong)
       }
-      val nWm = timed("watermarks")(wm.count())
+      // total + per-system series rows
+      val perSystem = timed("series")(
+        series.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
+      // fgt watermark per series (A11): newest ts_us per tms id
+      val nWm = timed("watermarks")(
+        series.groupMapReduce(_.getString(4))(_.getLong(3))(math.max).size.toLong)
       // optional z-ordered series landing (r13, VERDICT r12 #5): the
       // persisted artifact the standing consumer queries read — runs
-      // off the still-cached post-diff table, so no netCDF re-parse
-      if (cfg.landSeries) timed("series_land")(
-        landSeries(withId, s"${cfg.outDir}/series", cfg.landSeriesFiles))
+      // off the still-cached post-diff table, so no netCDF re-parse.
+      // The cached table has no `path`: each system reads the one file
+      // of the primary pattern, so the system gives it back
+      if (cfg.landSeries) timed("series_land") {
+        val withId = Timeseries.tmsId(
+          withMeta(Timeseries.tzShiftLk(rain, "ts_us")), metaCols)
+        val path = cfg.systems.foldLeft(lit(null).cast("string")) { (acc, s) =>
+          when(col("system") === s, lit(cfg.ncPath(primary.filePattern, s))).otherwise(acc)
+        }
+        landSeries(withId.select(path.as("path") +: withId.columns.toSeq.map(col): _*),
+          s"${cfg.outDir}/series", cfg.landSeriesFiles)
+      }
       (nStations, perSystem, nWm)
     } finally caches.foreach(_.unpersist())
 
@@ -294,8 +309,9 @@ object Pipeline {
   }
 
   /** One file pattern's post-diff table over every system of the run:
-    * `(path, t_idx, epoch_s, lat, lon, value, system, cell, delta,
-    * ts_us)`, one row per (system, cell) series and step after its
+    * `(t_idx, epoch_s, lat, lon, value, system, cell, delta, ts_us)`
+    * (no `path`: a long string on every cached row, and the system
+    * names its file), one row per (system, cell) series and step after its
     * first, `cell` = `<system>_<lat6>_<lon6>` with the `%.6f`
     * coordinate keys. `inReader` diffs inside the split reader
     * ([[NetCdfClassic.readGridDiff]]: no shuffle, keys formatted once
@@ -324,7 +340,7 @@ object Pipeline {
           .withColumn("lon6", format_string("%.6f", col("lon")))),
         "cell", "epoch_s", "t_idx", "value")
     diff.withColumn("ts_us", col("epoch_s") * lit(1000000L))
-      .select(Seq("path", "t_idx", "epoch_s", "lat", "lon", "value", "system",
+      .select(Seq("t_idx", "epoch_s", "lat", "lon", "value", "system",
         "cell", "delta", "ts_us").map(col): _*)
   }
 

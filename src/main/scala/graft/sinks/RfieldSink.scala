@@ -4,7 +4,7 @@ import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** rfield file output — the reference's end product: one text file per
@@ -12,14 +12,24 @@ import org.apache.spark.sql.functions._
   * (`gen_rfields.py:177-229` builds exactly these under
   * `<version>/<model>/.../<timestamp>.txt`).
   *
-  * Spark-idiomatic equivalent: hash-repartition on the timestep (all
-  * rows of a timestep land in one task), sort within partitions by
+  * Spark-idiomatic equivalent: hash-partition on the timestep (all rows
+  * of a timestep land in one task), sort within partitions by
   * (timestep, lon, lat), then a partitioned write — yielding exactly
-  * one sorted file per `t=<timestep>/` directory. One shuffle total;
-  * file count = timestep count regardless of cluster size, and each
-  * file's internal order matches the reference's rfield contract.
+  * one sorted file per `t=<timestep>/` directory; file count =
+  * timestep count regardless of cluster size, and each file's internal
+  * order matches the reference's rfield contract. [[writeDomains]]
+  * writes every domain cut from one mean with one shuffle and one
+  * write. Both writers ask for `defaultParallelism` partitions hashed
+  * on the timestep; a caller that partitions the mean's input that way
+  * below its `groupBy` shares the exchange with the aggregate (the
+  * planner drops the writer's repartition), so the mean and all its
+  * domains' files cost a single shuffle.
   */
 object RfieldSink {
+
+  /** Tag column of [[writeDomains]]'s staged write: the index of the
+    * domain a row belongs to. */
+  private val DomainCol = "domain"
 
   /** Write `rfield` (must carry `lon`, `lat`, value + `timeCol`) as
     * space-separated text partitioned by `timeCol`. The shuffle gets
@@ -28,15 +38,56 @@ object RfieldSink {
     * write put every timestep's file on one task. */
   def write(rfield: DataFrame, outDir: String, timeCol: String,
             valueCol: String = "value"): Unit =
+    sortedCsv(byTimestep(rfield, timeCol, valueCol), Seq(timeCol), outDir)
+
+  /** [[write]] for several domains of one rfield at once: `domains`
+    * pairs each output directory with the predicate on `rfield`'s
+    * columns that selects its rows (`lit(true)` for the whole field).
+    * A row goes to every domain whose predicate holds — overlapping
+    * cuts share their cells. One shuffle and one partitioned write,
+    * into `staging` (removed on every exit path); then each domain's
+    * directory replaces its output directory with its own `_SUCCESS`,
+    * an empty directory for a cut that holds no row. */
+  def writeDomains(rfield: DataFrame, domains: Seq[(String, Column)], staging: String,
+                   timeCol: String, valueCol: String = "value"): Unit = {
+    val tag = explode(array(domains.map(_._2).zipWithIndex
+      .map { case (holds, i) => when(holds, lit(i)) }: _*))
+    val stage = new Path(staging)
+    val fs = stage.getFileSystem(rfield.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      sortedCsv(byTimestep(rfield, timeCol, valueCol)
+        .withColumn(DomainCol, tag).filter(col(DomainCol).isNotNull),
+        Seq(DomainCol, timeCol), staging)
+      for (((dir, _), i) <- domains.zipWithIndex) {
+        val (from, to) = (new Path(stage, s"$DomainCol=$i"), new Path(dir))
+        fs.delete(to, true)
+        if (fs.exists(from)) {
+          require(fs.mkdirs(to.getParent), s"cannot create ${to.getParent}")
+          require(fs.rename(from, to), s"rename of $from to $to failed")
+        } else require(fs.mkdirs(to), s"cannot create $to")
+        fs.create(new Path(to, "_SUCCESS")).close()
+      }
+    } finally fs.delete(stage, true)
+  }
+
+  /** `rfield`'s timestep, coordinates and value, hash-partitioned on
+    * the timestep into one partition per core. */
+  private def byTimestep(rfield: DataFrame, timeCol: String, valueCol: String): DataFrame =
     rfield
       .select(col(timeCol), col("lon"), col("lat"), col(valueCol))
       .repartition(rfield.sparkSession.sparkContext.defaultParallelism, col(timeCol))
-      .sortWithinPartitions(col(timeCol), col("lon"), col("lat"))
+
+  /** The write tail: rows sorted within their partitions by
+    * `partCols` then (lon, lat), written as space-separated text
+    * partitioned by `partCols`. */
+  private def sortedCsv(rows: DataFrame, partCols: Seq[String], dir: String): Unit =
+    rows
+      .sortWithinPartitions((partCols ++ Seq("lon", "lat")).map(col): _*)
       .write
-      .partitionBy(timeCol)
+      .partitionBy(partCols: _*)
       .option("sep", " ")
       .mode("overwrite")
-      .csv(outDir)
+      .csv(dir)
 
   /** UTC epoch-seconds → the reference's LK-time file-name stamp
     * (`datetime_utc_to_lk(...).strftime('%Y-%m-%d_%H-%M')`, +05:30). */

@@ -21,6 +21,8 @@ class PipelineDiffSpec extends SparkSpec {
   private val Systems = Seq("A", "C", "E", "SE")
   private val D03 = "d03_RAINNC_{system}.nc"
   private val D01 = "d01_RAINNC_{system}.nc"
+  /** The runs' first XTIME, 2020-01-01 00:00:00 UTC, in epoch seconds. */
+  private val Epoch0 = 1577836800L
 
   /** One cumulative (time, y, x) grid per system; `inc(system index,
     * t, y, x)` is step t's increment. */
@@ -188,6 +190,76 @@ class PipelineDiffSpec extends SparkSpec {
     assert(res.diffPaths === Map(D03 -> "reader"))
   }
 
+  test("an unnamed single-domain run writes rfields/t=… as the window operators do") {
+    val dir = Files.createTempDirectory("graft_diff_unnamed").toString
+    writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
+      grid(5, 0f, 15f), storm)
+    assertSameAsWindow(dir, Seq.empty, packaged = false)
+    val rfields = new File(dir, "out/rfields")
+    assert(rfields.list().toSet === (1 to 4).map(t => s"t=${Epoch0 + t * 900}").toSet ++
+      Set("_SUCCESS", "._SUCCESS.crc"))
+    assert(!new File(dir, "out/_rfields_staging").exists())
+  }
+
+  test("overlapping and empty bbox domains, run twice into one outDir, equal the window operators") {
+    val dir = Files.createTempDirectory("graft_diff_cuts").toString
+    writeRun(dir, D03, grid(6, 6.8f, 0.03f), grid(7, 79.9f, 0.05f),
+      grid(5, 0f, 15f), storm)
+    // west and south overlap each other and d03; nowhere holds no grid point
+    val domains = Seq(DomainConfig("d03", D03),
+      DomainConfig("west", D03, Some((79.9, 6.8, 80.05, 6.95))),
+      DomainConfig("south", D03, Some((79.9, 6.8, 80.2, 6.86))),
+      DomainConfig("nowhere", D03, Some((90.0, 1.0, 91.0, 2.0))))
+    assertSameAsWindow(dir, domains, packaged = false)
+    val out = s"$dir/out/rfields"
+    // a cell of both west and south is written to both
+    def lines(domain: String) = Files.readAllLines(Files.list(Paths.get(out, domain, s"t=${Epoch0 + 900}"))
+      .iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get).asScala.toList
+    assert(lines("west").map(_.split(' ').take(2).toSeq).toSet
+      .intersect(lines("south").map(_.split(' ').take(2).toSeq).toSet).nonEmpty)
+    assert(new File(out, "nowhere").list().toSet === Set("_SUCCESS", "._SUCCESS.crc"))
+    // a second run into the same outDir replaces each domain's directory
+    Files.write(Paths.get(out, "d03", s"t=${Epoch0 + 900}", "stray"), Array[Byte](1))
+    Files.write(Paths.get(out, "nowhere", "stray"), Array[Byte](1))
+    assertSameAsWindow(dir, domains, packaged = false)
+    for (d <- domains.map(_.name)) {
+      assert(new File(s"$out/$d/_SUCCESS").isFile, d)
+      assert(!Files.walk(Paths.get(out, d)).iterator().asScala
+        .exists(_.getFileName.toString == "stray"), d)
+    }
+    assert(new File(s"$dir/out").list().toSet === Set("rfields", "series"))
+  }
+
+  test("a warm d03 + basin run schedules 7 Spark jobs") {
+    val dir = Files.createTempDirectory("graft_diff_jobs").toString
+    writeRun(dir, D03, grid(6, 6.8f, 0.03f), grid(7, 79.9f, 0.05f),
+      grid(9, 0f, 15f), storm)
+    def cfg(out: String) = PipelineConfig(ncDir = dir, outDir = s"$dir/$out",
+      systems = Systems, domains = Seq(DomainConfig("d03", D03),
+        DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92)))))
+    val counters = new BenchCounters(spark.sparkContext)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(s"execution ${e.properties.getProperty("spark.sql.execution.id")}: " +
+          s"${e.stageInfos.size} stages")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, cfg("cold")) // warm-up: codegen, netCDF classes
+      counters.record("warm-0")(())
+      started.clear()
+      counters.record("warm")(Pipeline.run(spark, cfg("warm")))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = counters.all("warm").jobs
+    info(s"warm run: $jobs jobs")
+    // parse_diff's count (3: the cache fill as its own adaptive stage,
+    // the count's map stage, its result), the shared mean and write of
+    // both domains (2) and the per-series summary's collect (2); a write
+    // per domain, or a job per accounting stage, adds to it
+    assert(jobs === 7L, s"warm run jobs: ${started.asScala.mkString("; ")}")
+  }
+
   test("a failing sink leaves nothing cached") {
     val dir = Files.createTempDirectory("graft_diff_fail").toString
     writeRun(dir, D03, grid(3, 6.8f, 0.03f), grid(3, 79.9f, 0.05f),
@@ -198,5 +270,13 @@ class PipelineDiffSpec extends SparkSpec {
     intercept[Exception](Pipeline.run(spark,
       config(dir, outFile.getPath, Seq(DomainConfig("d03", D03)))))
     assert(spark.sharedState.cacheManager.isEmpty)
+    // the staged rfield write succeeds, its move to rfields/d03 fails:
+    // the staging directory goes too
+    val out = Files.createTempDirectory("graft_diff_fail_out").toFile
+    assert(new File(out, "rfields").createNewFile())
+    intercept[Exception](Pipeline.run(spark,
+      config(dir, out.getPath, Seq(DomainConfig("d03", D03)))))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(out.list().toSet === Set("rfields"))
   }
 }

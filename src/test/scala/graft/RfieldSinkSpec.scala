@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.lit
+
 import graft.sinks.RfieldSink
 
 class RfieldSinkSpec extends SparkSpec {
@@ -62,6 +64,39 @@ class RfieldSinkSpec extends SparkSpec {
       assert(lines === cells.zipWithIndex.sortBy(_._1)
         .map { case ((lon, lat), i) => s"$lon $lat ${t + 0.25 * i}" }, s"t=${900L * t}")
     }
+  }
+
+  test("writeDomains writes what write writes for each cut: overlapping cuts share cells, an empty cut keeps its directory") {
+    val cells = for (lon <- Seq(79.0, 79.5, 80.0); lat <- Seq(6.0, 6.5, 7.0)) yield (lon, lat)
+    val rf = (for (t <- Seq(0L, 900L, 1800L); ((lon, lat), i) <- cells.zipWithIndex)
+      yield (t, lon, lat, t / 900 + 0.125 * i)).toDF("t", "lon", "lat", "value")
+    def box(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double) =
+      $"lon" >= lonMin && $"lon" <= lonMax && $"lat" >= latMin && $"lat" <= latMax
+    val cuts = Seq("all" -> lit(true), "west" -> box(79.0, 6.0, 79.5, 7.0),
+      "south" -> box(79.0, 6.0, 80.0, 6.5), "nowhere" -> box(90.0, 0.0, 91.0, 1.0))
+    val root = Files.createTempDirectory("rfield_domains").toString
+    RfieldSink.writeDomains(rf, cuts.map { case (n, c) => s"$root/got/$n" -> c },
+      s"$root/_staging", "t")
+    for ((n, c) <- cuts) RfieldSink.write(rf.filter(c), s"$root/want/$n", "t")
+
+    /** Relative path → lines of every file under `dir`, part files
+      * keyed by their directory (their names carry a job id). */
+    def tree(dir: String): Map[String, List[String]] = {
+      val base = Paths.get(dir)
+      Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString.startsWith("."))
+        .map { f =>
+          val rel = base.relativize(f).toString
+          (if (f.getFileName.toString.startsWith("part-")) s"${base.relativize(f.getParent)}/part"
+           else rel) -> Files.readAllLines(f).asScala.toList
+        }.toMap
+    }
+    for ((n, _) <- cuts) assert(tree(s"$root/got/$n") === tree(s"$root/want/$n"), n)
+    // the cell (79.0, 6.0) is in both overlapping cuts, and written to both
+    for (n <- Seq("all", "west", "south"))
+      assert(tree(s"$root/got/$n")("t=900/part").contains("79.0 6.0 1.0"), n)
+    assert(tree(s"$root/got/nowhere").keySet === Set("_SUCCESS"))
+    assert(!Files.exists(Paths.get(root, "_staging")))
   }
 
   test("writePackaged emits xy.csv + value-only per-timestep files + zip (round-trips)") {
