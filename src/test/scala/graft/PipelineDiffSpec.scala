@@ -90,15 +90,46 @@ class PipelineDiffSpec extends SparkSpec {
           else Timeseries.intervalDiff(
             NetCdfClassic.readGrid(spark, Seq(cfg.ncPath(d.filePattern, s)))
               .withColumn("cell", cellKey(None)), "cell", "epoch_s", "t_idx", "value")
-        RfieldSink.writePackaged(cut(sysDiff, d)
+        writeBundle(cut(sysDiff, d)
             .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
             .agg(round(sum("delta"), 4).as("value")),
-          s"$out/rfields_packaged/${d.name}/$s", "t", cfg.model, s, cfg.version)
+          s"$out/rfields_packaged/${d.name}/$s", s"${cfg.model}_${s}_${cfg.version}")
       }
     }
     Pipeline.landSeries(withId, s"$out/series", cfg.landSeriesFiles)
     (Timeseries.stationRegistry(rain, Seq("lat", "lon"), "wrf").count(),
       withId.count(), Timeseries.fgtWatermark(withId, "tms_id", "ts_us").count())
+  }
+
+  /** The reference's bundle (`gen_rfields.py:198-219`), written on the
+    * driver: `xy.csv` holds every cell of `rfield` as `lon,lat` sorted
+    * by (lon, lat); one `{prefix}_{LK time}.txt` per timestep holds its
+    * values rounded to 3 dp in xy.csv's order; `{dir}.zip` holds those
+    * files. */
+  private def writeBundle(rfield: DataFrame, dir: String, prefix: String): Unit = {
+    def num(v: Any) = v.asInstanceOf[Number].doubleValue
+    val rows = rfield.select(col("t"), col("lon"), col("lat"),
+        round(col("value").cast("double"), 3).as("value")).collect()
+      .map(r => (r.getLong(0), r.get(1), r.get(2), r.getDouble(3)))
+      .sortBy { case (t, lon, lat, _) => (t, num(lon), num(lat)) }
+    val cells = rows.map { case (_, lon, lat, _) => (lon, lat) }.distinct
+      .sortBy { case (lon, lat) => (num(lon), num(lat)) }
+    val files = ("xy.csv" -> cells.map { case (lon, lat) => s"$lon,$lat" }.toSeq) +:
+      rows.groupBy(_._1).toSeq.map { case (t, step) =>
+        val lk = java.time.LocalDateTime.ofEpochSecond(t + 19800L, 0, java.time.ZoneOffset.UTC)
+          .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm"))
+        s"${prefix}_$lk.txt" -> step.map(_._4.toString).toSeq
+      }
+    val out = Paths.get(dir)
+    Files.createDirectories(out)
+    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(Paths.get(s"$dir.zip")))
+    try for ((name, lines) <- files.sortBy(_._1)) {
+      val bytes = lines.map(_ + "\n").mkString.getBytes("UTF-8")
+      Files.write(out.resolve(name), bytes)
+      zip.putNextEntry(new java.util.zip.ZipEntry(name))
+      zip.write(bytes)
+      zip.closeEntry()
+    } finally zip.close()
   }
 
   /** Relative path → bytes of every file under `root`, part files keyed
