@@ -5,9 +5,12 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 private[graft] object BenchCounters {
   /** One entry's deterministic cost: jobs run, tasks run, summed
     * executor run time, shuffle bytes (read+write kept separately),
-    * input bytes read. */
+    * input bytes read. `quiesceTimeout` flags counters taken while the
+    * listener bus was still busy at the quiesce bound, so possibly
+    * skewed; the JSON carries `"quiesce_timeout":true` only then. */
   final case class Snapshot(jobs: Long, tasks: Long, execRunMs: Long,
-                            shufReadB: Long, shufWriteB: Long, inputB: Long) {
+                            shufReadB: Long, shufWriteB: Long, inputB: Long,
+                            quiesceTimeout: Boolean = false) {
     def -(o: Snapshot): Snapshot = Snapshot(jobs - o.jobs, tasks - o.tasks,
       execRunMs - o.execRunMs, shufReadB - o.shufReadB,
       shufWriteB - o.shufWriteB, inputB - o.inputB)
@@ -15,7 +18,8 @@ private[graft] object BenchCounters {
       s"""{"jobs":$jobs,"tasks":$tasks,""" +
         s""""exec_s":${Jsons.num(execRunMs / 1e3, 2)},""" +
         s""""shuffle_mb":${Jsons.num((shufReadB + shufWriteB) / 1e6, 2)},""" +
-        s""""input_mb":${Jsons.num(inputB / 1e6, 2)}}"""
+        s""""input_mb":${Jsons.num(inputB / 1e6, 2)}""" +
+        (if (quiesceTimeout) ""","quiesce_timeout":true}""" else "}")
   }
 }
 
@@ -40,7 +44,9 @@ private[graft] object BenchCounters {
   *
   * Counters include work submitted from Par-overlapped driver
   * threads inside the entry (the bench runs entries sequentially, so
-  * everything between the snapshots belongs to the entry). */
+  * everything between the snapshots belongs to the entry); a
+  * concurrent or nested [[record]] is refused, since its snapshots
+  * would take in the other entry's work. */
 private[graft] final class BenchCounters(sc: org.apache.spark.SparkContext) {
   import BenchCounters.Snapshot
 
@@ -55,6 +61,7 @@ private[graft] final class BenchCounters(sc: org.apache.spark.SparkContext) {
   private val events = new AtomicLong
   private val recorded =
     scala.collection.concurrent.TrieMap[String, Snapshot]()
+  private val recording = new java.util.concurrent.atomic.AtomicBoolean
 
   sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
     override def onJobStart(
@@ -81,8 +88,8 @@ private[graft] final class BenchCounters(sc: org.apache.spark.SparkContext) {
   /** Wait (bounded) until the listener bus has drained the work that
     * ran so far: all started jobs ended, then ~30ms of event silence.
     * Bounded at `maxWaitMs` so a stuck bus degrades to a skewed
-    * counter, never a hung bench. */
-  private def quiesce(maxWaitMs: Long = 3000): Unit = {
+    * counter, never a hung bench; false when the bound was reached. */
+  private def quiesce(maxWaitMs: Long = 3000): Boolean = {
     val deadline = System.nanoTime() + maxWaitMs * 1000000L
     var lastEvents = -1L
     var silentSince = System.nanoTime()
@@ -90,9 +97,10 @@ private[graft] final class BenchCounters(sc: org.apache.spark.SparkContext) {
       val e = events.get()
       if (e != lastEvents) { lastEvents = e; silentSince = System.nanoTime() }
       val balanced = jobsStarted.get() == jobsEnded.get()
-      if (balanced && System.nanoTime() - silentSince > 30L * 1000000L) return
+      if (balanced && System.nanoTime() - silentSince > 30L * 1000000L) return true
       Thread.sleep(5)
     }
+    false
   }
 
   private def snap(): Snapshot = Snapshot(jobsEnded.get(), tasks.get(),
@@ -100,13 +108,24 @@ private[graft] final class BenchCounters(sc: org.apache.spark.SparkContext) {
 
   /** Run `f`, attributing its counter delta to `name` (a repeat
     * overwrites — with the bench's cache discipline every rep runs
-    * the identical computation, so "last rep wins" is "any rep"). */
+    * the identical computation, so "last rep wins" is "any rep"). A
+    * quiesce that reaches its bound flags the entry's counters and
+    * names the entry on stderr. Refuses to start while another
+    * record runs, on this thread or another. */
   def record[A](name: String)(f: => A): A = {
-    quiesce(); val before = snap()
-    val a = f
-    quiesce(); val after = snap()
-    recorded(name) = after - before
-    a
+    if (!recording.compareAndSet(false, true))
+      throw new IllegalStateException(
+        s"BenchCounters.record($name) while another record runs: counters would mix entries")
+    try {
+      val quietBefore = quiesce(); val before = snap()
+      val a = f
+      val quietAfter = quiesce(); val after = snap()
+      val timedOut = !(quietBefore && quietAfter)
+      if (timedOut) System.err.println(
+        s"[counters] $name: listener bus still busy at the quiesce bound, counters flagged quiesce_timeout")
+      recorded(name) = (after - before).copy(quiesceTimeout = timedOut)
+      a
+    } finally recording.set(false)
   }
 
   /** Every recorded entry's counters. */

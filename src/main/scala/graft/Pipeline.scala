@@ -236,21 +236,22 @@ object Pipeline {
           domains.filter(_.filePattern == p).map(d => rfieldDir(d) -> inBbox(d)),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
-      if (cfg.packagedRfields) timed("rfield_pkg") {
-        // the reference's per-system bundles — per DOMAIN (it zips
-        // d03, the basin cut, and d01 each per system): each system's
-        // own diffs (one row per cell per step — the agg normalizes
-        // shape)
-        for (d <- domains; sysName <- cfg.systems) {
-          val dir = if (d.name.isEmpty) s"${cfg.outDir}/rfields_packaged/$sysName"
-                    else s"${cfg.outDir}/rfields_packaged/${d.name}/$sysName"
-          RfieldSink.writePackaged(
-            diffs(d.filePattern).filter(col("system") === sysName && inBbox(d))
-              .groupBy(col("epoch_s").as("t"), col("lon"), col("lat"))
-              .agg(round(sum("delta"), 4).as("value")),
-            dir, "t", cfg.model, sysName, cfg.version)
-        }
-      }
+      // the reference's per-system bundles, per DOMAIN (it zips d03,
+      // the basin cut and d01 each per system): per file pattern, ONE
+      // sum per (system, cell, step) — its rows hash-partitioned on the
+      // timestep below the groupBy, as the mean's — and ONE write of
+      // every (domain, system) bundle, each a cut of the sums' rows
+      if (cfg.packagedRfields) timed("rfield_pkg")(patterns.foreach { p =>
+        val sums = diffs(p)
+          .select(col("system"), col("epoch_s").as("t"), col("lon"), col("lat"), col("delta"))
+          .repartition(spark.sparkContext.defaultParallelism, col("t"))
+          .groupBy("system", "t", "lon", "lat").agg(round(sum("delta"), 4).as("value"))
+        RfieldSink.writePackaged(sums,
+          for (d <- domains.filter(_.filePattern == p); s <- cfg.systems) yield RfieldSink.Bundle(
+            s"${cfg.outDir}/rfields_packaged/${if (d.name.isEmpty) "" else s"${d.name}/"}$s",
+            col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}"),
+          s"${cfg.outDir}/_rfields_staging", "t")
+      })
       // station registry (A9) from the series' 6-dp keys: a cell key
       // ends `_<lat6>_<lon6>` and a %.6f rendering holds no '_', so the
       // distinct key tails are the (lat, lon) pairs stationRegistry6dp

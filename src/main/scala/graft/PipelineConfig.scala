@@ -21,7 +21,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * @param packagedRfields also emit the reference's per-system file
   *                        contract (xy.csv + value-only files + zip,
   *                        `gen_rfields.py:198-219`) next to the
-  *                        ensemble-mean rfields.
+  *                        ensemble-mean rfields: a bundle per (domain,
+  *                        system) at `outDir/rfields_packaged/[<domain>/]
+  *                        <system>` (+ `.zip`), every bundle of a file
+  *                        pattern from one shuffle and one staged write
+  *                        (`RfieldSink.writePackaged`).
   * @param landSeries also land the post-diff series table as a
   *                    Z-ORDERED parquet artifact at `outDir/series`
   *                    (`Pipeline.landSeries` — clustered on

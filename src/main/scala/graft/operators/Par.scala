@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 /** Run INDEPENDENT Spark actions concurrently from the driver
   * (optimization guide §2.6: actions are only sequential because
   * driver code calls them sequentially — submitting independent jobs
@@ -78,22 +80,73 @@ private[graft] object Par {
     (out, pinned)
   }
 
-  /** Start ONE independent action now, join it later — the two-phase
-    * overlap [[run]] cannot express (the caller has other driver work
-    * to do between start and join; r17, guide §2.6). The returned
-    * joiner rethrows the thunk's failure unwrapped, like [[run]].
-    * Same independence contract: the thunk must not read state the
-    * caller writes before joining. */
-  private[graft] def async[A](thunk: () => A): () => A = {
-    val task = new java.util.concurrent.FutureTask(
-      new java.util.concurrent.Callable[A] { def call(): A = thunk() })
-    val th = new Thread(task, "graft-par-async")
-    th.setDaemon(true)
-    th.start()
-    () => try task.get()
+  /** Threads of the shared pool behind [[Overlap.async]]: enough for
+    * two serves' startup reads at once; more thunks queue. */
+  private val AsyncThreads = 4
+
+  /** The shared pool behind [[Overlap.async]]: at most [[AsyncThreads]]
+    * daemon threads, each ending after a minute idle. */
+  private lazy val asyncPool = {
+    val threads = java.util.concurrent.Executors.defaultThreadFactory()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(AsyncThreads, AsyncThreads,
+      60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => { val th = threads.newThread(r); th.setDaemon(true); th })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** The thunks [[overlap]]'s body started. */
+  private[graft] final class Overlap private[Par] () {
+    private[Par] val started = new java.util.concurrent.ConcurrentLinkedQueue[Started[_]]
+
+    /** Start ONE independent action now on the shared pool, join it
+      * later — the two-phase overlap [[run]] cannot express (the caller
+      * has other driver work to do between start and join; r17, guide
+      * §2.6). The returned joiner waits for the thunk and rethrows its
+      * failure unwrapped, like [[run]]. Same independence contract: the
+      * thunk must not read state the caller writes before joining. */
+    def async[A](thunk: () => A): () => A = {
+      val s = new Started(asyncPool.submit(
+        new java.util.concurrent.Callable[A] { def call(): A = thunk() }))
+      started.add(s)
+      () => s.join()
+    }
+  }
+
+  /** One started thunk, and whether its caller joined it. */
+  private[Par] final class Started[A](future: java.util.concurrent.Future[A]) {
+    @volatile private[Par] var joined = false
+    def join(): A = {
+      joined = true
+      try future.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).getOrElse(e)
+      }
+    }
+  }
+
+  /** Runs `body`, whose [[Overlap.async]] thunks are all finished when
+    * this returns, on every exit path — a value, a throw, or a `return`
+    * out of `body` before it joined them: none leaves a Spark job
+    * running behind the caller. A thunk's failure is never dropped:
+    * one `body` did not join is rethrown after `body` returns, or
+    * added as suppressed to the exception `body` threw. */
+  private[graft] def overlap[B](body: Overlap => B): B = {
+    val scope = new Overlap
+    var failure: Throwable = null
+    try body(scope)
     catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
+      // a `return` out of body is a normal exit, not a failure
+      case e: Throwable if !e.isInstanceOf[scala.util.control.ControlThrowable] =>
+        failure = e; throw e
+    }
+    finally {
+      val unjoined = scope.started.asScala.toSeq.filterNot(_.joined)
+      val failed = unjoined.flatMap(s => scala.util.Try(s.join()).failed.toOption)
+      if (failure != null) failed.foreach(failure.addSuppressed)
+      else failed.headOption.foreach { e => failed.tail.foreach(e.addSuppressed); throw e }
     }
   }
 

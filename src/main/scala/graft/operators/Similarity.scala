@@ -1285,10 +1285,12 @@ object Similarity {
     // ledger + adj listing, the bounded query-page collect) and each
     // is a fixed-latency driver action — overlap them (r17, guide
     // §2.6); the joins below preserve the old failure order (meta
-    // joined before the empty-page return, adj only consumed when a
-    // page exists — exactly when the sequential spelling read it)
-    val metaJoin = Par.async(() => spark.read.parquet(s"$path/meta").head())
-    val adjJoin = Par.async(() =>
+    // joined before the empty-page return, adj consumed when a page
+    // exists); an empty page's return still waits for the adj read
+    // and rethrows its failure
+    Par.overlap { par =>
+    val metaJoin = par.async(() => spark.read.parquet(s"$path/meta").head())
+    val adjJoin = par.async(() =>
       graphCommittedRead(spark, path, "adj", excludeIngestBatch))
     // the query page is bounded driver metadata — collect it ONCE and
     // re-enter as a local relation: left as lineage, every hop's
@@ -1383,6 +1385,7 @@ object Similarity {
         }
       })
     }}
+    }
   }
 
   /** [[graphTopKFromIndex]] with the hop-0 frontier seeded from the
@@ -1660,7 +1663,8 @@ object Similarity {
     // independent of the admission collect — overlap the three
     // fixed-latency actions (r17, guide §2.6); joins preserve the
     // sequential failure order (meta consumed right after admission)
-    val metaJoin = Par.async(() => spark.read.parquet(s"$path/meta").head())
+    Par.overlap { par =>
+    val metaJoin = par.async(() => spark.read.parquet(s"$path/meta").head())
     val embL = withNullLabel(emb)
     val batch = preparedNonZero(embL).cache()
     try {
@@ -1678,7 +1682,7 @@ object Similarity {
       // page — start it beside the admission collect, check subset
       // containment once both are in hand
       val pageQJoin = precomputedNeighbors.map { page =>
-        Par.async(() => {
+        par.async(() => {
           require(Seq("q_id", "n_id", "cos_sim")
               .forall(page.columns.contains),
             s"precomputedNeighbors must be a graphTopKFromIndex page " +
@@ -1787,6 +1791,7 @@ object Similarity {
       // commit record last — see appendToIvfIndex
       writeCommitRecord(spark, path, ingestBatch)
     } finally batch.unpersist(false): Unit
+    }
   }
 
   /** Compact the graph index's ingest partitions: fold every

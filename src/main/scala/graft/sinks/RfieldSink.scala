@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 /** rfield file output — the reference's end product: one text file per
   * forecast timestep holding `lon lat value` rows sorted by (lon, lat)
   * (`gen_rfields.py:177-229` builds exactly these under
-  * `<version>/<model>/.../<timestamp>.txt`).
+  * `<version>/<model>/.../<timestamp>.txt`), and the zipped per-system
+  * bundle of value-only files beside one `xy.csv` ([[writePackaged]]).
   *
   * Spark-idiomatic equivalent: hash-partition on the timestep (all rows
   * of a timestep land in one task), sort within partitions by
@@ -18,27 +19,34 @@ import org.apache.spark.sql.functions._
   * one sorted file per `t=<timestep>/` directory; file count =
   * timestep count regardless of cluster size, and each file's internal
   * order matches the reference's rfield contract. [[writeDomains]]
-  * writes every domain cut from one mean with one shuffle and one
-  * write. Both writers ask for `defaultParallelism` partitions hashed
-  * on the timestep; a caller that partitions the mean's input that way
-  * below its `groupBy` shares the exchange with the aggregate (the
-  * planner drops the writer's repartition), so the mean and all its
-  * domains' files cost a single shuffle.
+  * writes every domain cut from one mean, and [[writePackaged]] every
+  * bundle of one field, with one shuffle and one write: each row is
+  * tagged with every target that holds it and the write is partitioned
+  * by (tag, timestep). Every writer asks for `defaultParallelism`
+  * partitions hashed on the timestep; a caller that partitions its
+  * aggregate's input that way below the `groupBy` shares the exchange
+  * with the aggregate (the planner drops the writer's repartition), so
+  * the aggregate and all its targets' files cost a single shuffle.
   */
 object RfieldSink {
 
-  /** Tag column of [[writeDomains]]'s staged write: the index of the
-    * domain a row belongs to. */
-  private val DomainCol = "domain"
+  /** Tag column of the staged writes: the index of the domain or
+    * bundle a row belongs to. */
+  private val TagCol = "tag"
 
-  /** Write `rfield` (must carry `lon`, `lat`, value + `timeCol`) as
+  /** One bundle of [[writePackaged]]: the directory it is written to
+    * (zipped into `{dir}.zip`), the predicate on the field's columns
+    * that selects its rows, and its value files' name prefix
+    * `{model}_{system}_{version}`. */
+  final case class Bundle(dir: String, holds: Column, prefix: String)
+
+  /** Write `rfield` (must carry `lon`, `lat`, `value` + `timeCol`) as
     * space-separated text partitioned by `timeCol`. The shuffle gets
     * one partition per core, not AQE's coalescing: a run's rfields are
     * a few MB, under AQE's minimum partition size, so a coalesced
     * write put every timestep's file on one task. */
-  def write(rfield: DataFrame, outDir: String, timeCol: String,
-            valueCol: String = "value"): Unit =
-    sortedCsv(byTimestep(rfield, timeCol, valueCol), Seq(timeCol), outDir)
+  def write(rfield: DataFrame, outDir: String, timeCol: String): Unit =
+    sortedCsv(byTimestep(fieldCols(rfield, timeCol), timeCol), Seq(timeCol), outDir)
 
   /** [[write]] for several domains of one rfield at once: `domains`
     * pairs each output directory with the predicate on `rfield`'s
@@ -49,17 +57,11 @@ object RfieldSink {
     * directory replaces its output directory with its own `_SUCCESS`,
     * an empty directory for a cut that holds no row. */
   def writeDomains(rfield: DataFrame, domains: Seq[(String, Column)], staging: String,
-                   timeCol: String, valueCol: String = "value"): Unit = {
-    val tag = explode(array(domains.map(_._2).zipWithIndex
-      .map { case (holds, i) => when(holds, lit(i)) }: _*))
-    val stage = new Path(staging)
-    val fs = stage.getFileSystem(rfield.sparkSession.sparkContext.hadoopConfiguration)
-    try {
-      sortedCsv(byTimestep(rfield, timeCol, valueCol)
-        .withColumn(DomainCol, tag).filter(col(DomainCol).isNotNull),
-        Seq(DomainCol, timeCol), staging)
+                   timeCol: String): Unit =
+    staged(tagged(byTimestep(fieldCols(rfield, timeCol), timeCol), domains.map(_._2)),
+        staging, timeCol) { (fs, stagedDir) =>
       for (((dir, _), i) <- domains.zipWithIndex) {
-        val (from, to) = (new Path(stage, s"$DomainCol=$i"), new Path(dir))
+        val (from, to) = (stagedDir(i), new Path(dir))
         fs.delete(to, true)
         if (fs.exists(from)) {
           require(fs.mkdirs(to.getParent), s"cannot create ${to.getParent}")
@@ -67,27 +69,47 @@ object RfieldSink {
         } else require(fs.mkdirs(to), s"cannot create $to")
         fs.create(new Path(to, "_SUCCESS")).close()
       }
+    }
+
+  /** `rfield`'s timestep, coordinates and value. */
+  private def fieldCols(rfield: DataFrame, timeCol: String): DataFrame =
+    rfield.select(col(timeCol), col("lon"), col("lat"), col("value"))
+
+  /** `rows` hash-partitioned on the timestep into one partition per
+    * core. */
+  private def byTimestep(rows: DataFrame, timeCol: String): DataFrame =
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, col(timeCol))
+
+  /** `rows` with the [[TagCol]] of every target whose predicate holds:
+    * one row per such target, none for a row no target holds. */
+  private def tagged(rows: DataFrame, targets: Seq[Column]): DataFrame =
+    rows.withColumn(TagCol, explode(array(targets.zipWithIndex
+        .map { case (holds, i) => when(holds, lit(i)) }: _*)))
+      .filter(col(TagCol).isNotNull)
+
+  /** Writes tagged `rows` once into `staging`, partitioned by (tag,
+    * `timeCol`), without the `dropped` columns; then `place` moves each
+    * target's staged directory (`stagedDir(index)`, absent for a
+    * target with no row) into place. `staging` is removed on every exit
+    * path. */
+  private def staged(rows: DataFrame, staging: String, timeCol: String, dropped: String*)
+                    (place: (FileSystem, Int => Path) => Unit): Unit = {
+    val stage = new Path(staging)
+    val fs = stage.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      sortedCsv(rows, Seq(TagCol, timeCol), staging, dropped: _*)
+      place(fs, i => new Path(stage, s"$TagCol=$i"))
     } finally fs.delete(stage, true)
   }
 
-  /** `rfield`'s timestep, coordinates and value, hash-partitioned on
-    * the timestep into one partition per core. */
-  private def byTimestep(rfield: DataFrame, timeCol: String, valueCol: String): DataFrame =
-    rfield
-      .select(col(timeCol), col("lon"), col("lat"), col(valueCol))
-      .repartition(rfield.sparkSession.sparkContext.defaultParallelism, col(timeCol))
-
   /** The write tail: rows sorted within their partitions by
-    * `partCols` then (lon, lat), written as space-separated text
-    * partitioned by `partCols`. */
-  private def sortedCsv(rows: DataFrame, partCols: Seq[String], dir: String): Unit =
-    rows
-      .sortWithinPartitions((partCols ++ Seq("lon", "lat")).map(col): _*)
-      .write
-      .partitionBy(partCols: _*)
-      .option("sep", " ")
-      .mode("overwrite")
-      .csv(dir)
+    * `partCols` then (lon, lat), written without the `dropped` columns
+    * (a narrow projection above the sort keeps its order) as
+    * space-separated text partitioned by `partCols`. */
+  private def sortedCsv(rows: DataFrame, partCols: Seq[String], dir: String,
+                        dropped: String*): Unit =
+    rows.sortWithinPartitions((partCols ++ Seq("lon", "lat")).map(col): _*).drop(dropped: _*)
+      .write.partitionBy(partCols: _*).option("sep", " ").mode("overwrite").csv(dir)
 
   /** UTC epoch-seconds → the reference's LK-time file-name stamp
     * (`datetime_utc_to_lk(...).strftime('%Y-%m-%d_%H-%M')`, +05:30). */
@@ -95,96 +117,73 @@ object RfieldSink {
     LocalDateTime.ofEpochSecond(epochS + 19800L, 0, ZoneOffset.UTC)
       .format(DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm"))
 
-  /** The reference's exact file contract (`gen_rfields.py:198-219`):
-    * one shared `xy.csv` (lon,lat of every grid cell, sorted by
-    * (lon, lat), no header) written ONCE, plus a value-only
-    * `{model}_{system}_{version}_{LK timestamp}.txt` per timestep whose
-    * line i is the value of xy.csv's line-i cell, then the whole
-    * directory zipped into `{outDir}.zip` — the bundle the reference
-    * ships per system.
+  /** The reference's exact file contract (`gen_rfields.py:198-219`),
+    * for every bundle of `rfield` at once: a bundle's directory holds
+    * one `xy.csv` (lon,lat of each of its cells, sorted by (lon, lat),
+    * no header) and a value-only `{prefix}_{LK timestamp}.txt` per
+    * timestep whose line i is the value (rounded to 3 dp) of xy.csv's
+    * line-i cell, and is zipped into `{dir}.zip` — the bundle the
+    * reference ships per system. A row goes to every bundle whose
+    * predicate holds.
     *
-    * Distributed where it matters: values are shuffled once on the
-    * timestep and written sorted by Spark (one task per timestep, the
-    * same shape as [[write]] — 100 TB of timesteps just means more
-    * parallel tasks). Only the O(#timesteps) file renames, the
-    * O(#cells) xy.csv, and the zip run on the driver — the zip is
-    * inherently a single-stream artifact (it exists to be scp'd), not
-    * a data-path operation.
+    * Distributed where it matters: the rows are tagged with their
+    * bundles, shuffled once on the timestep and written sorted by Spark
+    * in one write partitioned by (bundle, timestep), into `staging`
+    * (removed on every exit path). One aggregate over all bundles
+    * yields each bundle's cells with their row and timestep counts.
+    * Only the O(#timesteps) file renames, the O(#cells) xy.csv, and
+    * the zip run on the driver — the zip is inherently a single-stream
+    * artifact (it exists to be scp'd), not a data-path operation.
     *
-    * The value-only format is positional, so every timestep must cover
-    * every cell exactly once; this is checked and a gap fails fast
-    * rather than silently misaligning every later line. */
-  def writePackaged(rfield: DataFrame, outDir: String, timeCol: String,
-                    model: String, system: String, version: String,
-                    valueCol: String = "value", zip: Boolean = true,
-                    tsName: Long => String = lkStamp): Unit = {
-    val spark = rfield.sparkSession
-    // Path.getFileSystem, not URI.new (the Retention rationale: a
-    // space in outDir is a legal path but an illegal URI)
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(out, true); fs.mkdirs(out)
-
-    // three jobs read the input below (cells distinct, the coverage
-    // check, the staged write) — cache so an uncached upstream plan
-    // isn't recomputed per job
-    val cached = rfield.cache()
-    val staging = new Path(out, "_staging")
-    try {
-      // shared coordinate file: the grid is O(cells) — bounded by the
-      // model domain, not the data volume — so a single sorted file is
-      // the contract AND cheap
-      val cells = cached.select(col("lon"), col("lat")).distinct()
-        .orderBy(col("lon"), col("lat"))
-      val cellRows = cells.collect()
-      val xy = fs.create(new Path(out, "xy.csv"))
-      try cellRows.foreach(r => xy.write(s"${r.get(0)},${r.get(1)}\n".getBytes("UTF-8")))
-      finally xy.close()
-
-      // positional-format safety: every timestep must cover every cell
-      // EXACTLY once — the distinct count catches a duplicated cell
-      // masking a missing one (a bare count() would pass that file and
-      // misalign every line after the dup)
-      val nCells = cellRows.length.toLong
-      val bad = cached.groupBy(col(timeCol))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("lon"), col("lat")).as("n_cells"))
-        .filter(col("n") =!= nCells || col("n_cells") =!= nCells)
-        .limit(5).collect()
-      require(bad.isEmpty,
-        s"rfield has timesteps not covering all $nCells cells exactly " +
-          s"once (value-only files would misalign): ${bad.mkString(", ")}")
-      // per-timestep value files: shuffle once on t, Spark sorts within
-      // the single task per timestep, one file per t=… directory
-      cached
-        .select(col(timeCol), col("lon"), col("lat"),
-          round(col(valueCol).cast("double"), 3).as("value"))
-        .repartition(col(timeCol))
-        .sortWithinPartitions(col(timeCol), col("lon"), col("lat"))
-        .select(col(timeCol), col("value")) // narrow projection above the sort keeps order
-        .write.partitionBy(timeCol).mode("overwrite").csv(staging.toString)
-    } finally cached.unpersist(false)
-
-    // rename t=<epoch>/part-* → {model}_{system}_{version}_{stamp}.txt
-    fs.listStatus(staging).filter(_.isDirectory).foreach { d =>
-      val t = d.getPath.getName.stripPrefix(s"$timeCol=").toLong
-      val part = fs.listStatus(d.getPath)
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-      require(part.length == 1, s"expected 1 file for $timeCol=$t, got ${part.length}")
-      val dest = new Path(out, s"${model}_${system}_${version}_${tsName(t)}.txt")
-      // rename returns false (no throw) when dest exists — e.g. two
-      // timesteps inside one LK minute collapsing to one file name;
-      // failing loud beats shipping a bundle with a step missing
-      require(fs.rename(part.head, dest),
-        s"rename to $dest failed (name collision from sub-minute timesteps?)")
+    * The value-only format is positional, so every timestep of a bundle
+    * must hold every cell of the bundle exactly once: each cell must
+    * have one row in each of the bundle's staged timesteps. This is
+    * checked for every bundle before any is moved into place, and a gap
+    * fails fast rather than silently misaligning every later line. */
+  def writePackaged(rfield: DataFrame, bundles: Seq[Bundle], staging: String,
+                    timeCol: String): Unit = {
+    val rows = tagged(byTimestep(rfield, timeCol), bundles.map(_.holds)).select(col(TagCol),
+      col(timeCol), col("lon"), col("lat"), round(col("value").cast("double"), 3).as("value"))
+    staged(rows, staging, timeCol, "lon", "lat") { (fs, stagedDir) =>
+      val cells = tagged(rfield, bundles.map(_.holds))
+        .groupBy(col(TagCol), col("lon"), col("lat"))
+        .agg(count(lit(1)).as("n"), countDistinct(col(timeCol)).as("steps"))
+        .collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+      // each bundle's staged value files by timestep
+      val steps = bundles.indices.map(i => fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*"))
+        .map(_.getPath).groupBy(_.getParent.getName.stripPrefix(s"$timeCol=").toLong))
+      // a cell with one row in each of the bundle's timesteps: the
+      // distinct count catches a duplicated cell masking a missing one
+      for ((b, i) <- bundles.zipWithIndex) {
+        val bad = cells(i).filter(r => r.getLong(3) != steps(i).size || r.getLong(4) != steps(i).size)
+        require(bad.isEmpty, s"bundle ${b.dir} has cells not in each of its ${steps(i).size} " +
+          s"timesteps exactly once (value-only files would misalign): ${bad.take(5).mkString(", ")}")
+      }
+      for ((b, i) <- bundles.zipWithIndex) {
+        // Path.getFileSystem's fs, not URI.new (the Retention rationale:
+        // a space in a dir is a legal path but an illegal URI)
+        val out = new Path(b.dir)
+        fs.delete(out, true); fs.mkdirs(out)
+        val xy = fs.create(new Path(out, "xy.csv"))
+        try cells(i).sortBy(r => (r.getAs[Number](1).doubleValue, r.getAs[Number](2).doubleValue))
+          .foreach(r => xy.write(s"${r.get(1)},${r.get(2)}\n".getBytes("UTF-8")))
+        finally xy.close()
+        for ((t, parts) <- steps(i)) {
+          require(parts.length == 1, s"expected 1 file for $timeCol=$t, got ${parts.length}")
+          val dest = new Path(out, s"${b.prefix}_${lkStamp(t)}.txt")
+          // rename returns false (no throw) when dest exists — e.g. two
+          // timesteps inside one LK minute collapsing to one file name;
+          // failing loud beats shipping a bundle with a step missing
+          require(fs.rename(parts.head, dest),
+            s"rename to $dest failed (name collision from sub-minute timesteps?)")
+        }
+        // zip path from the NORMALIZED Path: "$dir.zip" on a
+        // trailing-slash dir resolves to a hidden ".zip" INSIDE the
+        // directory, which zipDirectory's listing would then include as
+        // a partially-written entry of itself
+        zipDirectory(fs, out, new Path(out.toString + ".zip"))
+      }
     }
-    fs.delete(staging, true)
-
-    // zip path from the NORMALIZED Path: "$outDir.zip" on a
-    // trailing-slash outDir resolves to a hidden ".zip" INSIDE the
-    // directory, which zipDirectory's listing would then include as a
-    // partially-written entry of itself
-    if (zip) zipDirectory(fs, out, new Path(out.toString + ".zip"))
   }
 
   /** `zip_folder` equivalent (gen_rfields.py:219 via shutil): flat zip

@@ -60,4 +60,36 @@ class BenchCountersSpec extends SparkSpec {
       assert(a.jobs > 0 && a.tasks > 0, s"$name: counters saw no work")
     }
   }
+
+  test("record refuses a nested or a concurrent call") {
+    val c = new BenchCounters(spark.sparkContext)
+    c.record("outer") {
+      intercept[IllegalStateException](c.record("nested")(()))
+      val other = scala.concurrent.Future(c.record("concurrent")(()))(
+        scala.concurrent.ExecutionContext.global)
+      intercept[IllegalStateException](scala.concurrent.Await.result(other,
+        scala.concurrent.duration.Duration(10, "s")))
+    }
+    assert(c.all.keySet === Set("outer"))
+  }
+
+  test("a quiesce that reaches its bound flags the entry and names it on stderr") {
+    val c = new BenchCounters(spark.sparkContext)
+    // a job running through the entry's first quiesce keeps started and
+    // ended jobs unbalanced past its 3 s bound
+    val sc = spark.sparkContext
+    val running = scala.concurrent.Future(
+      sc.parallelize(1 to 1, 1).map { i => Thread.sleep(4000); i }.count())(
+      scala.concurrent.ExecutionContext.global)
+    while (sc.statusTracker.getActiveJobIds().isEmpty) Thread.sleep(10)
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try c.record("busy")(()) finally System.setErr(stderr)
+    scala.concurrent.Await.result(running, scala.concurrent.duration.Duration(30, "s"))
+    c.record("quiet")(())
+    assert(c.all("busy").quiesceTimeout && c.all("busy").json.contains("\"quiesce_timeout\":true"))
+    assert(err.toString.linesIterator.count(_.contains("[counters] busy:")) === 1, err.toString)
+    assert(!c.all("quiet").quiesceTimeout && !c.all("quiet").json.contains("quiesce_timeout"))
+  }
 }

@@ -101,8 +101,8 @@ class PipelineDiffSpec extends SparkSpec {
       withId.count(), Timeseries.fgtWatermark(withId, "tms_id", "ts_us").count())
   }
 
-  /** The reference's bundle (`gen_rfields.py:198-219`), written on the
-    * driver: `xy.csv` holds every cell of `rfield` as `lon,lat` sorted
+  /** The reference's bundle (`gen_rfields.py:198-219`), written in
+    * plain Scala from the collected rows: `xy.csv` holds every cell of `rfield` as `lon,lat` sorted
     * by (lon, lat); one `{prefix}_{LK time}.txt` per timestep holds its
     * values rounded to 3 dp in xy.csv's order; `{dir}.zip` holds those
     * files. */
@@ -261,14 +261,12 @@ class PipelineDiffSpec extends SparkSpec {
     assert(new File(s"$dir/out").list().toSet === Set("rfields", "series"))
   }
 
-  test("a warm d03 + basin run schedules 7 Spark jobs") {
-    val dir = Files.createTempDirectory("graft_diff_jobs").toString
-    writeRun(dir, D03, grid(6, 6.8f, 0.03f), grid(7, 79.9f, 0.05f),
-      grid(9, 0f, 15f), storm)
-    def cfg(out: String) = PipelineConfig(ncDir = dir, outDir = s"$dir/$out",
-      systems = Systems, domains = Seq(DomainConfig("d03", D03),
-        DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92)))))
-    val counters = new BenchCounters(spark.sparkContext)
+  private lazy val counters = new BenchCounters(spark.sparkContext)
+
+  /** The Spark jobs of a warm run of `cfg(outDir name)` after one run
+    * that warms codegen and the netCDF classes, and each job's
+    * execution id and stage count. */
+  private def warmJobs(cfg: String => PipelineConfig): (Long, String) = {
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -277,18 +275,49 @@ class PipelineDiffSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Pipeline.run(spark, cfg("cold")) // warm-up: codegen, netCDF classes
+      Pipeline.run(spark, cfg("cold"))
       counters.record("warm-0")(())
       started.clear()
       counters.record("warm")(Pipeline.run(spark, cfg("warm")))
     } finally spark.sparkContext.removeSparkListener(listener)
-    val jobs = counters.all("warm").jobs
+    (counters.all("warm").jobs, started.asScala.mkString("; "))
+  }
+
+  private def jobsRun(dir: String) =
+    writeRun(dir, D03, grid(6, 6.8f, 0.03f), grid(7, 79.9f, 0.05f), grid(9, 0f, 15f), storm)
+  private val D03Basin = Seq(DomainConfig("d03", D03),
+    DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92))))
+
+  test("a warm d03 + basin run schedules 7 Spark jobs") {
+    val dir = Files.createTempDirectory("graft_diff_jobs").toString
+    jobsRun(dir)
+    val (jobs, started) = warmJobs(out => PipelineConfig(ncDir = dir, outDir = s"$dir/$out",
+      systems = Systems, domains = D03Basin))
     info(s"warm run: $jobs jobs")
     // parse_diff's count (3: the cache fill as its own adaptive stage,
     // the count's map stage, its result), the shared mean and write of
     // both domains (2) and the per-series summary's collect (2); a write
     // per domain, or a job per accounting stage, adds to it
-    assert(jobs === 7L, s"warm run jobs: ${started.asScala.mkString("; ")}")
+    assert(jobs === 7L, s"warm run jobs: $started")
+  }
+
+  test("a warm d03 + basin run with bundles schedules 12 Spark jobs, as many bundle jobs for 1 system × 1 domain as for 4 × 2") {
+    val dir = Files.createTempDirectory("graft_diff_pkg_jobs").toString
+    jobsRun(dir)
+    def jobs(systems: Seq[String], domains: Seq[DomainConfig], packaged: Boolean) =
+      warmJobs(out => PipelineConfig(ncDir = dir, outDir = s"$dir/$out", systems = systems,
+        domains = domains, packagedRfields = packaged))
+    val (all, started) = jobs(Systems, D03Basin, packaged = true)
+    val bundleJobs = all - jobs(Systems, D03Basin, packaged = false)._1
+    val oneBundleJobs = jobs(Seq("A"), D03Basin.take(1), packaged = true)._1 -
+      jobs(Seq("A"), D03Basin.take(1), packaged = false)._1
+    info(s"warm run with bundles: $all jobs, $bundleJobs for 8 bundles, $oneBundleJobs for 1")
+    // the run's 7 and the bundle pass's 5: the sums' exchange and the
+    // write of every bundle (2), the coverage aggregate over every
+    // bundle (3: the sums' exchange, its own, its collect); a write or
+    // a check per bundle adds to it
+    assert(all === 12L, s"warm run jobs: $started")
+    assert(bundleJobs === oneBundleJobs)
   }
 
   test("a failing sink leaves nothing cached") {
