@@ -219,9 +219,15 @@ object Pipeline {
           col("lon") >= lonMin && col("lon") <= lonMax &&
             col("lat") >= latMin && col("lat") <= latMax
         }
-      def rfieldDir(d: DomainConfig): String =
-        if (d.name.isEmpty) s"${cfg.outDir}/rfields"
-        else s"${cfg.outDir}/rfields/${d.name}"
+      def domainDir(root: String, d: DomainConfig): String =
+        if (d.name.isEmpty) s"${cfg.outDir}/$root"
+        else s"${cfg.outDir}/$root/${d.name}"
+      // `agg` of pattern `p`'s deltas per (`keys`, step, cell), its
+      // rows hash-partitioned on the step below the groupBy
+      def perCell(p: String, keys: Seq[Column], agg: Column): DataFrame = diffs(p)
+        .select(keys ++ Seq(col("epoch_s").as("t"), col("lon"), col("lat"), col("delta")): _*)
+        .repartition(spark.sparkContext.defaultParallelism, col("t"))
+        .groupBy(keys ++ Seq(col("t"), col("lon"), col("lat")): _*).agg(round(agg, 4).as("value"))
 
       // materialize the cached post-diff table as its OWN stage: the
       // netCDF parse + A1 diff otherwise hide inside whichever sink
@@ -229,11 +235,8 @@ object Pipeline {
       // an rfield-write regression in the stage breakdown
       timed("parse_diff")(rain.count())
       timed("rfields")(patterns.foreach { p =>
-        val mean = diffs(p).select(col("epoch_s").as("t"), col("lon"), col("lat"), col("delta"))
-          .repartition(spark.sparkContext.defaultParallelism, col("t"))
-          .groupBy("t", "lon", "lat").agg(round(avg("delta"), 4).as("value"))
-        RfieldSink.writeDomains(mean,
-          domains.filter(_.filePattern == p).map(d => rfieldDir(d) -> inBbox(d)),
+        RfieldSink.writeDomains(perCell(p, Nil, avg("delta")),
+          domains.filter(_.filePattern == p).map(d => domainDir("rfields", d) -> inBbox(d)),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
       // the reference's per-system bundles, per DOMAIN (it zips d03,
@@ -242,14 +245,10 @@ object Pipeline {
       // timestep below the groupBy, as the mean's — and ONE write of
       // every (domain, system) bundle, each a cut of the sums' rows
       if (cfg.packagedRfields) timed("rfield_pkg")(patterns.foreach { p =>
-        val sums = diffs(p)
-          .select(col("system"), col("epoch_s").as("t"), col("lon"), col("lat"), col("delta"))
-          .repartition(spark.sparkContext.defaultParallelism, col("t"))
-          .groupBy("system", "t", "lon", "lat").agg(round(sum("delta"), 4).as("value"))
-        RfieldSink.writePackaged(sums,
-          for (d <- domains.filter(_.filePattern == p); s <- cfg.systems) yield RfieldSink.Bundle(
-            s"${cfg.outDir}/rfields_packaged/${if (d.name.isEmpty) "" else s"${d.name}/"}$s",
-            col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}"),
+        RfieldSink.writePackaged(perCell(p, Seq(col("system")), sum("delta")),
+          for (d <- domains.filter(_.filePattern == p); s <- cfg.systems)
+            yield RfieldSink.Bundle(s"${domainDir("rfields_packaged", d)}/$s",
+              col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}"),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
       // station registry (A9) from the series' 6-dp keys: a cell key

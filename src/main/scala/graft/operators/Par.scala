@@ -80,34 +80,31 @@ private[graft] object Par {
     (out, pinned)
   }
 
-  /** Threads of the shared pool behind [[Overlap.async]]: enough for
-    * two serves' startup reads at once; more thunks queue. */
-  private val AsyncThreads = 4
-
-  /** The shared pool behind [[Overlap.async]]: at most [[AsyncThreads]]
-    * daemon threads, each ending after a minute idle. */
-  private lazy val asyncPool = {
-    val threads = java.util.concurrent.Executors.defaultThreadFactory()
-    val pool = new java.util.concurrent.ThreadPoolExecutor(AsyncThreads, AsyncThreads,
-      60L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => { val th = threads.newThread(r); th.setDaemon(true); th })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-
-  /** The thunks [[overlap]]'s body started. */
+  /** The thunks [[overlap]]'s body started, and the scope's pool. */
   private[graft] final class Overlap private[Par] () {
     private[Par] val started = new java.util.concurrent.ConcurrentLinkedQueue[Started[_]]
 
-    /** Start ONE independent action now on the shared pool, join it
+    /** At most 4 daemon threads, made on the first [[async]] and shut
+      * down when [[overlap]] returns. A pool thread is made by the
+      * thread that submits to it, so it inherits that caller's Spark
+      * local properties (job group, SQL execution id) as they are
+      * now; a pool that outlived the scope would keep some earlier
+      * caller's. */
+    private[Par] var pool: java.util.concurrent.ExecutorService = null
+
+    /** Start ONE independent action now on the scope's pool, join it
       * later — the two-phase overlap [[run]] cannot express (the caller
       * has other driver work to do between start and join; r17, guide
       * §2.6). The returned joiner waits for the thunk and rethrows its
       * failure unwrapped, like [[run]]. Same independence contract: the
       * thunk must not read state the caller writes before joining. */
-    def async[A](thunk: () => A): () => A = {
-      val s = new Started(asyncPool.submit(
+    def async[A](thunk: () => A): () => A = synchronized {
+      if (pool == null) {
+        val threads = java.util.concurrent.Executors.defaultThreadFactory()
+        pool = java.util.concurrent.Executors.newFixedThreadPool(4,
+          (r: Runnable) => { val th = threads.newThread(r); th.setDaemon(true); th })
+      }
+      val s = new Started(pool.submit(
         new java.util.concurrent.Callable[A] { def call(): A = thunk() }))
       started.add(s)
       () => s.join()
@@ -145,6 +142,7 @@ private[graft] object Par {
     finally {
       val unjoined = scope.started.asScala.toSeq.filterNot(_.joined)
       val failed = unjoined.flatMap(s => scala.util.Try(s.join()).failed.toOption)
+      scope.synchronized { if (scope.pool != null) scope.pool.shutdown() }
       if (failure != null) failed.foreach(failure.addSuppressed)
       else failed.headOption.foreach { e => failed.tail.foreach(e.addSuppressed); throw e }
     }

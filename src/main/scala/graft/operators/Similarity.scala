@@ -1701,7 +1701,13 @@ object Similarity {
       // frontier contract is beam ≥ k, so widen rather than refuse
       // (r14 review — a k=33 index was un-appendable at the default)
       val b0 = math.max(beam, k)
-      if (idRows.isEmpty) { writeCommitRecord(spark, path, ingestBatch); return }
+      // a handed-in page is still validated before an empty batch
+      // commits: its failure must throw before the commit, not after
+      if (idRows.isEmpty) {
+        pageQJoin.foreach(_())
+        writeCommitRecord(spark, path, ingestBatch)
+        return
+      }
       require(idRows.length <= 4096,
         "appendToGraphIndex attaches a bounded batch (got > 4096 nonzero " +
           "vector rows, ceiling 4096 — the serve-page posture); split " +

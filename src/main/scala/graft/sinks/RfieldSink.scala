@@ -78,7 +78,8 @@ object RfieldSink {
   /** `rows` hash-partitioned on the timestep into one partition per
     * core. */
   private def byTimestep(rows: DataFrame, timeCol: String): DataFrame =
-    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, col(timeCol))
+    rows
+      .repartition(rows.sparkSession.sparkContext.defaultParallelism, col(timeCol))
 
   /** `rows` with the [[TagCol]] of every target whose predicate holds:
     * one row per such target, none for a row no target holds. */
@@ -104,12 +105,17 @@ object RfieldSink {
 
   /** The write tail: rows sorted within their partitions by
     * `partCols` then (lon, lat), written without the `dropped` columns
-    * (a narrow projection above the sort keeps its order) as
-    * space-separated text partitioned by `partCols`. */
+    * as space-separated text partitioned by `partCols`. */
   private def sortedCsv(rows: DataFrame, partCols: Seq[String], dir: String,
                         dropped: String*): Unit =
-    rows.sortWithinPartitions((partCols ++ Seq("lon", "lat")).map(col): _*).drop(dropped: _*)
-      .write.partitionBy(partCols: _*).option("sep", " ").mode("overwrite").csv(dir)
+    rows
+      .sortWithinPartitions((partCols ++ Seq("lon", "lat")).map(col): _*)
+      .drop(dropped: _*) // a narrow projection above the sort keeps its order
+      .write
+      .partitionBy(partCols: _*)
+      .option("sep", " ")
+      .mode("overwrite")
+      .csv(dir)
 
   /** UTC epoch-seconds → the reference's LK-time file-name stamp
     * (`datetime_utc_to_lk(...).strftime('%Y-%m-%d_%H-%M')`, +05:30). */
@@ -142,31 +148,35 @@ object RfieldSink {
     * fails fast rather than silently misaligning every later line. */
   def writePackaged(rfield: DataFrame, bundles: Seq[Bundle], staging: String,
                     timeCol: String): Unit = {
-    val rows = tagged(byTimestep(rfield, timeCol), bundles.map(_.holds)).select(col(TagCol),
-      col(timeCol), col("lon"), col("lat"), round(col("value").cast("double"), 3).as("value"))
+    val rows = tagged(byTimestep(rfield, timeCol), bundles.map(_.holds))
+      .select(col(TagCol), col(timeCol), col("lon"), col("lat"),
+        round(col("value").cast("double"), 3).as("value"))
     staged(rows, staging, timeCol, "lon", "lat") { (fs, stagedDir) =>
       val cells = tagged(rfield, bundles.map(_.holds))
         .groupBy(col(TagCol), col("lon"), col("lat"))
         .agg(count(lit(1)).as("n"), countDistinct(col(timeCol)).as("steps"))
-        .collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+        .collect()
+        .sortBy(r => (r.getAs[Number](1).doubleValue, r.getAs[Number](2).doubleValue))
+        .groupBy(_.getInt(0)) // keeps the (lon, lat) order within a bundle
+        .withDefaultValue(Array.empty)
       // each bundle's staged value files by timestep
-      val steps = bundles.indices.map(i => fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*"))
-        .map(_.getPath).groupBy(_.getParent.getName.stripPrefix(s"$timeCol=").toLong))
-      // a cell with one row in each of the bundle's timesteps: the
+      val steps = bundles.indices.map(i =>
+        fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*")).map(_.getPath)
+          .groupBy(_.getParent.getName.stripPrefix(s"$timeCol=").toLong))
+      // a cell with one row in each of its bundle's timesteps: the
       // distinct count catches a duplicated cell masking a missing one
-      for ((b, i) <- bundles.zipWithIndex) {
-        val bad = cells(i).filter(r => r.getLong(3) != steps(i).size || r.getLong(4) != steps(i).size)
-        require(bad.isEmpty, s"bundle ${b.dir} has cells not in each of its ${steps(i).size} " +
-          s"timesteps exactly once (value-only files would misalign): ${bad.take(5).mkString(", ")}")
-      }
+      val bad = bundles.indices.flatMap(i => cells(i)
+        .filter(r => r.getLong(3) != steps(i).size || r.getLong(4) != steps(i).size)
+        .map(r => s"${bundles(i).dir} of ${steps(i).size} timesteps: $r"))
+      require(bad.isEmpty, "bundles have cells not in each of their timesteps exactly " +
+        s"once (value-only files would misalign): ${bad.take(5).mkString(", ")}")
       for ((b, i) <- bundles.zipWithIndex) {
         // Path.getFileSystem's fs, not URI.new (the Retention rationale:
         // a space in a dir is a legal path but an illegal URI)
         val out = new Path(b.dir)
         fs.delete(out, true); fs.mkdirs(out)
         val xy = fs.create(new Path(out, "xy.csv"))
-        try cells(i).sortBy(r => (r.getAs[Number](1).doubleValue, r.getAs[Number](2).doubleValue))
-          .foreach(r => xy.write(s"${r.get(1)},${r.get(2)}\n".getBytes("UTF-8")))
+        try cells(i).foreach(r => xy.write(s"${r.get(1)},${r.get(2)}\n".getBytes("UTF-8")))
         finally xy.close()
         for ((t, parts) <- steps(i)) {
           require(parts.length == 1, s"expected 1 file for $timeCol=$t, got ${parts.length}")

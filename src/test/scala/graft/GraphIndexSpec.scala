@@ -361,6 +361,22 @@ class GraphIndexSpec extends SparkSpec {
     assert(arrivIds.subsetOf(landedSrcs))
   }
 
+  test("an all-zero batch with a malformed neighbor page throws and commits nothing") {
+    val path = freshDir()
+    Similarity.writeGraphIndex(synth(16), path, k = 4)
+    // every vector zero: the admission collect is empty, the early
+    // return's path
+    val zeros = Seq((100L, Array.fill(8)(0.0f), "c")).toDF("vec_id", "embedding", "label")
+    val malformed = Seq((1L, 2L)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.appendToGraphIndex(zeros, path, ingestBatch = 7L,
+        precomputedNeighbors = Some(malformed))
+    }
+    assert(e.getMessage.contains("must be a graphTopKFromIndex page"))
+    val marker = new org.apache.hadoop.fs.Path(s"$path/commits/ingest_batch=7")
+    assert(!marker.getFileSystem(spark.sessionState.newHadoopConf()).exists(marker))
+  }
+
   test("E14c seeded serve ≡ frozen serve ≡ brute force at exhaustive config (r16 — one engine, two hop-0 strategies)") {
     val all = synth(48)
     val isQ = col("vec_id") % 9 === 0

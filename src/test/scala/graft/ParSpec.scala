@@ -54,7 +54,7 @@ class ParSpec extends SparkSpec {
     assert(got === "thunk failed")
   }
 
-  test("thunks run on a bounded pool of shared daemon threads") {
+  test("thunks run on a bounded pool of daemon threads") {
     val (running, most) = (new AtomicInteger, new AtomicInteger)
     val daemon = new AtomicBoolean(true)
     Par.overlap { par =>
@@ -67,5 +67,23 @@ class ParSpec extends SparkSpec {
     }
     assert(most.get() <= 4 && most.get() >= 2, s"most at once: ${most.get()}")
     assert(daemon.get())
+  }
+
+  test("a thunk's job carries the caller's job group as it is at each overlap") {
+    val sc = spark.sparkContext
+    /** The job group of a job each of 4 thunks of one overlap runs. */
+    def groups(): Set[String] = Par.overlap { par =>
+      (1 to 4).map(_ => par.async { () =>
+        sc.parallelize(1 to 1, 1)
+          .map(_ => org.apache.spark.TaskContext.get().getLocalProperty("spark.jobGroup.id"))
+          .collect().head
+      }).map(_()).toSet
+    }
+    try {
+      sc.setJobGroup("first", "first overlap")
+      assert(groups() === Set("first"))
+      sc.setJobGroup("second", "second overlap")
+      assert(groups() === Set("second"))
+    } finally sc.clearJobGroup()
   }
 }
