@@ -36,10 +36,13 @@ object Pipeline {
     * version of the same accounting). `stageSeconds` carries the
     * per-stage wall clock of the run so callers (Bench) can attribute
     * a regression to parse/diff vs sinks instead of reading one
-    * opaque end-to-end number: `stations` times the one collect of the
-    * per-series summary and the registry's key count, `series` and
-    * `watermarks` the driver's tallies over those collected rows (no
-    * Spark job). `diffPaths` records, per file pattern,
+    * opaque end-to-end number. Its keys do not depend on the diff
+    * path: `parse_diff` times the fill of the cached diffs and reads 0
+    * when no diff is cached (the parse then runs inside `rfields`); on
+    * the reader path `stations`, `series` and `watermarks` are driver
+    * tallies over the primary pattern's grid headers (no Spark job), on
+    * the window path over one collect of the per-series summary, which
+    * `stations` times. `diffPaths` records, per file pattern,
     * where the interval diff ran: `reader` (inside the split reader)
     * or `window: <why>` (the shuffle-and-sort fallback, with the file
     * property that forced it). */
@@ -155,18 +158,24 @@ object Pipeline {
     val missing = allPaths.filterNot(p => new java.io.File(p).exists())
     require(missing.isEmpty, s"missing netCDF inputs: ${missing.mkString(", ")}")
 
-    // how each file pattern's diff runs, decided on the driver from
-    // the file headers and axis vectors (see diffOf)
+    // every input's grid header, read once on the driver: how each
+    // file pattern's diff runs (see diffOf), the split reader's plan,
+    // and on the reader path the accounting and the bundles' cells
     val patterns = domains.map(_.filePattern).distinct
+    val headers = patterns.map(p =>
+      p -> cfg.systems.map(s => NetCdfClassic.gridHeader(cfg.ncPath(p, s)))).toMap
     val diffPaths = patterns.map(p =>
-      p -> diffBlocker(cfg, p).fold("reader")(why => s"window: $why")).toMap
+      p -> diffBlocker(cfg, p, headers(p)).fold("reader")(why => s"window: $why")).toMap
+    val primaryInReader = diffPaths(primary.filePattern) == "reader"
 
     val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
+    def stage(label: String, secs: Double): Unit = {
       stageSecs(label) = secs
       println(f"PIPELINE stage $label%-12s $secs%6.1fs")
+    }
+    def timed[T](label: String)(f: => T): T = {
+      val t0 = System.nanoTime(); val r = f
+      stage(label, (System.nanoTime() - t0) / 1e9)
       r
     }
     // every frame this run caches, released on success AND failure: a
@@ -176,11 +185,18 @@ object Pipeline {
 
     val (nStations, perSystem, nWm) = try {
       // 1-2. per file pattern, every system's grid diffed per
-      //    (system, cell) series (A1), cached: the primary's feeds the
-      //    rfield and bundle writes, the per-series summary and the
-      //    landing; a non-primary pattern's feeds its mean and bundles
-      val diffs = patterns.map(p =>
-        p -> pinned(diffOf(spark, cfg, p, inReader = diffPaths(p) == "reader"))).toMap
+      //    (system, cell) series (A1). Its mean always reads it; so do
+      //    its bundles, and the primary's also feeds the landing and,
+      //    on the window path, the per-series summary. A diff two of
+      //    these read is cached; one only the mean reads streams
+      //    straight into the rfield write
+      def reads(p: String): Int = 1 + (if (cfg.packagedRfields) 1 else 0) +
+        (if (p != primary.filePattern) 0
+        else (if (cfg.landSeries) 1 else 0) + (if (primaryInReader) 0 else 1))
+      val diffs = patterns.map { p =>
+        val diff = diffOf(spark, cfg, p, headers(p), inReader = diffPaths(p) == "reader")
+        p -> (if (reads(p) > 1) pinned(diff) else diff)
+      }.toMap
       val rain = diffs(primary.filePattern)
 
       // LK time (A2) + deterministic tms id (A10)
@@ -197,14 +213,6 @@ object Pipeline {
         .withColumn("variable", lit(cfg.variable))
         .withColumn("unit", lit(cfg.unit))
       val metaCols = Seq("sim_tag", "cell", "source", "variable", "unit")
-      // 3. per series (system, cell): its row count, newest ts_us (the
-      //    series' fgt watermark, A11) and tms id, hashed once per
-      //    series. systems × cells rows, whatever the step count: the
-      //    driver reads the registry, the series count and the
-      //    watermarks from one collect of it
-      val perSeries = Timeseries.tmsId(withMeta(rain.groupBy("system", "cell")
-          .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us"))), metaCols)
-        .select("system", "cell", "rows", "ts_us", "tms_id")
 
       // 4. sinks: per-timestep rfield files (ensemble mean across
       //    systems per cell, gen_*_mean_rfields.py flavor) — ONE mean
@@ -219,6 +227,11 @@ object Pipeline {
           col("lon") >= lonMin && col("lon") <= lonMax &&
             col("lat") >= latMin && col("lat") <= latMax
         }
+      // the same cut of one (lon, lat) on the driver
+      def holds(d: DomainConfig, lon: Double, lat: Double): Boolean =
+        d.bbox.forall { case (lonMin, latMin, lonMax, latMax) =>
+          lon >= lonMin && lon <= lonMax && lat >= latMin && lat <= latMax
+        }
       def domainDir(root: String, d: DomainConfig): String =
         if (d.name.isEmpty) s"${cfg.outDir}/$root"
         else s"${cfg.outDir}/$root/${d.name}"
@@ -229,11 +242,13 @@ object Pipeline {
         .repartition(spark.sparkContext.defaultParallelism, col("t"))
         .groupBy(keys ++ Seq(col("t"), col("lon"), col("lat")): _*).agg(round(agg, 4).as("value"))
 
-      // materialize the cached post-diff table as its OWN stage: the
+      // fill the cached post-diff tables as their OWN stage: the
       // netCDF parse + A1 diff otherwise hide inside whichever sink
-      // action runs first, and a parse regression would masquerade as
-      // an rfield-write regression in the stage breakdown
-      timed("parse_diff")(rain.count())
+      // action runs first. With nothing cached the parse runs inside
+      // `rfields` (its one pass over the files) and `parse_diff` reads 0
+      val cached = patterns.filter(reads(_) > 1)
+      if (cached.isEmpty) stage("parse_diff", 0.0)
+      else timed("parse_diff")(cached.foreach(diffs(_).count()))
       timed("rfields")(patterns.foreach { p =>
         RfieldSink.writeDomains(perCell(p, Nil, avg("delta")),
           domains.filter(_.filePattern == p).map(d => domainDir("rfields", d) -> inBbox(d)),
@@ -243,32 +258,61 @@ object Pipeline {
       // the basin cut and d01 each per system): per file pattern, ONE
       // sum per (system, cell, step) — its rows hash-partitioned on the
       // timestep below the groupBy, as the mean's — and ONE write of
-      // every (domain, system) bundle, each a cut of the sums' rows
+      // every (domain, system) bundle, each a cut of the sums' rows. On
+      // the reader path every record holds the header's whole grid, so
+      // a bundle's cells are its system's grid cut by the domain's bbox
+      // (none for a file of fewer than 2 records, which has no diff row)
+      def cells(d: DomainConfig, s: String): Option[Seq[(Double, Double)]] =
+        if (diffPaths(d.filePattern) != "reader") None
+        else {
+          val h = headers(d.filePattern)(cfg.systems.indexOf(s))
+          Some(if (h.numRecs < 2) Nil
+            else for (lat <- h.lats.toSeq; lon <- h.lons if holds(d, lon, lat)) yield (lon, lat))
+        }
       if (cfg.packagedRfields) timed("rfield_pkg")(patterns.foreach { p =>
         RfieldSink.writePackaged(perCell(p, Seq(col("system")), sum("delta")),
           for (d <- domains.filter(_.filePattern == p); s <- cfg.systems)
             yield RfieldSink.Bundle(s"${domainDir("rfields_packaged", d)}/$s",
-              col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}"),
+              col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}",
+              cells(d, s)),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
-      // station registry (A9) from the series' 6-dp keys: a cell key
-      // ends `_<lat6>_<lon6>` and a %.6f rendering holds no '_', so the
-      // distinct key tails are the (lat, lon) pairs stationRegistry6dp
-      // dedups
-      val (series, nStations) = timed("stations") {
-        val rows = perSeries.collect()
-        val tails = rows.map { r =>
-          val cell = r.getString(1)
-          cell.substring(cell.lastIndexOf('_', cell.lastIndexOf('_') - 1) + 1)
+      // 3. the registry (A9), the series rows and the fgt watermarks
+      //    (A11). On the reader path they follow from the primary
+      //    pattern's headers: a file of n ≥ 2 records gives one series
+      //    per cell with n - 1 rows, the registry is the distinct 6-dp
+      //    (lat, lon) keys, and each series has its own tms id (the
+      //    cell, system included, is part of its hashed key). The window
+      //    path merges series the headers cannot predict: one collect
+      //    of a summary per series (system, cell) gives its rows, newest
+      //    ts_us and tms id
+      val (nStations, perSystem, nWm) =
+        if (primaryInReader) {
+          val hs = cfg.systems.zip(headers(primary.filePattern))
+          (timed("stations")(hs.iterator.flatMap(_._2.diffKeys).toSet.size.toLong),
+            timed("series")(hs.collect { case (s, h) if h.diffRows > 0 => s -> h.diffRows }.toMap),
+            timed("watermarks")(hs.map(_._2.diffCells).sum))
+        } else {
+          val perSeries = Timeseries.tmsId(withMeta(rain.groupBy("system", "cell")
+              .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us"))), metaCols)
+            .select("system", "cell", "rows", "ts_us", "tms_id")
+          // a cell key ends `_<lat6>_<lon6>` and a %.6f rendering holds
+          // no '_', so the distinct key tails are the (lat, lon) pairs
+          // stationRegistry6dp dedups
+          val (series, nStations) = timed("stations") {
+            val rows = perSeries.collect()
+            val tails = rows.map { r =>
+              val cell = r.getString(1)
+              cell.substring(cell.lastIndexOf('_', cell.lastIndexOf('_') - 1) + 1)
+            }
+            (rows, tails.distinct.length.toLong)
+          }
+          (nStations,
+            timed("series")(series.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _)),
+            // newest ts_us per tms id
+            timed("watermarks")(
+              series.groupMapReduce(_.getString(4))(_.getLong(3))(math.max).size.toLong))
         }
-        (rows, tails.distinct.length.toLong)
-      }
-      // total + per-system series rows
-      val perSystem = timed("series")(
-        series.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
-      // fgt watermark per series (A11): newest ts_us per tms id
-      val nWm = timed("watermarks")(
-        series.groupMapReduce(_.getString(4))(_.getLong(3))(math.max).size.toLong)
       // optional z-ordered series landing (r13, VERDICT r12 #5): the
       // persisted artifact the standing consumer queries read — runs
       // off the still-cached post-diff table, so no netCDF re-parse.
@@ -290,14 +334,13 @@ object Pipeline {
       Seq("id", "time", "fgt", "value"), Seq("id", "time"))
     val nSeries = perSystem.values.sum
     // the residual OUTSIDE every timed stage (config discovery,
-    // readiness gate, the diff-path checks, netCDF header parsing
-    // during plan construction, analyzer/optimizer time, inter-job
+    // readiness gate, the driver's netCDF header reads and diff-path
+    // checks, analyzer/optimizer time, inter-job
     // gaps) — tracked as its own stage so the bench sub-entries sum
     // to the e2e wall and a regression can never hide in unattributed
     // time
     val runSecs = (System.nanoTime() - runT0) / 1e9
-    stageSecs("other") = math.max(0.0, runSecs - stageSecs.values.sum)
-    println(f"PIPELINE stage other        ${stageSecs("other")}%6.1fs")
+    stage("other", math.max(0.0, runSecs - stageSecs.values.sum))
     val diffKind = if (diffPaths.values.forall(_ == "reader")) "reader" else "window"
     println(s"PIPELINE stations=$nStations series_rows=$nSeries watermarks=$nWm diff=$diffKind")
     patterns.foreach(p => println(s"PIPELINE diff $p: ${diffPaths(p)}"))
@@ -319,8 +362,8 @@ object Pipeline {
     * over the cell key, ordered by (epoch_s, t_idx)) — the same rows
     * whenever [[diffBlocker]] finds nothing. */
   private def diffOf(spark: SparkSession, cfg: PipelineConfig, pattern: String,
-                     inReader: Boolean): DataFrame = {
-    val paths = cfg.systems.map(s => cfg.ncPath(pattern, s))
+                     headers: Seq[NetCdfClassic.GridHeader], inReader: Boolean): DataFrame = {
+    val paths = headers.map(_.path)
     // tag each row with its system by matching the path (verbatim —
     // the readers echo the strings they were given) back to the
     // config entry
@@ -333,9 +376,9 @@ object Pipeline {
     def keyed(g: DataFrame) = g.withColumn("system", system)
       .withColumn("cell", concat_ws("_", col("system"), col("lat6"), col("lon6")))
     val diff =
-      if (inReader) keyed(NetCdfClassic.readGridDiff(spark, paths))
+      if (inReader) keyed(NetCdfClassic.readGridDiff(spark, headers, NetCdfClassic.RecordsPerSplit))
       else Timeseries.intervalDiff(
-        keyed(NetCdfClassic.readGrid(spark, paths)
+        keyed(NetCdfClassic.readGrid(spark, headers, NetCdfClassic.RecordsPerSplit)
           .withColumn("lat6", format_string("%.6f", col("lat")))
           .withColumn("lon6", format_string("%.6f", col("lon")))),
         "cell", "epoch_s", "t_idx", "value")
@@ -344,18 +387,16 @@ object Pipeline {
         "cell", "delta", "ts_us").map(col): _*)
   }
 
-  /** Why `pattern`'s files must take the window diff, or None: the
-    * split reader diffs each FILE's grid points in record order, which
-    * is the window's series and order when the systems read distinct
-    * files and every file passes [[NetCdfClassic.recordOrderBlocker]]. */
-  private def diffBlocker(cfg: PipelineConfig, pattern: String): Option[String] = {
-    val paths = cfg.systems.map(s => cfg.ncPath(pattern, s))
-    if (paths.distinct.size < paths.size)
+  /** Why `pattern`'s files (their `headers`, one per system) must take
+    * the window diff, or None: the split reader diffs each FILE's grid
+    * points in record order, which is the window's series and order
+    * when the systems read distinct files and every file passes
+    * [[NetCdfClassic.recordOrderBlocker]]. */
+  private def diffBlocker(cfg: PipelineConfig, pattern: String,
+                          headers: Seq[NetCdfClassic.GridHeader]): Option[String] =
+    if (headers.map(_.path).distinct.size < headers.size)
       Some(s"systems ${cfg.systems.mkString(",")} do not read distinct files of $pattern")
-    else paths.iterator.map(NetCdfClassic.recordOrderBlocker(_)).collectFirst {
-      case Some(why) => why
-    }
-  }
+    else headers.iterator.flatMap(h => NetCdfClassic.recordOrderBlocker(h)).nextOption()
 
   /** Land the post-diff series table as a Z-ORDERED parquet artifact
     * (r13, VERDICT r12 #5 — the layout operator wired into its

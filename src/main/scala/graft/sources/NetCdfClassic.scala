@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, element_at, expr, lit, pmod, posexplode}
 import org.apache.spark.sql.types._
@@ -185,44 +185,6 @@ object NetCdfClassic {
         }
       }
       ((r1 - r0) +: tail, out)
-    }
-
-    /** Read records [r0, r1) of SEVERAL record variables from ONE
-      * ranged fetch: the span between two records already contains
-      * every record variable's interleaved slabs, so decoding them
-      * together halves the per-split I/O that one-variable-at-a-time
-      * [[readRecords]] calls pay (readGrid reads value AND time for
-      * every split — two near-identical span fetches otherwise). */
-    def readRecordsMulti(names: Seq[String], r0: Int, r1: Int)
-        : Map[String, (Seq[Int], Array[Double])] = {
-      val vs = names.map(variable)
-      vs.foreach(v =>
-        require(isRecordVar(v), s"${v.name} is not a record variable"))
-      require(r0 >= 0 && r1 <= numRecs && r0 <= r1, s"bad record range [$r0,$r1)")
-      val tails = vs.map(v => shape(v).drop(1))
-      if (r1 == r0)
-        return names.zip(tails).map { case (n, tail) =>
-          n -> ((0 +: tail, Array.emptyDoubleArray)) }.toMap
-      val minBegin = vs.map(_.begin).min
-      val spanStart = minBegin + r0.toLong * recSize
-      val spanLen = (r1 - 1 - r0).toLong * recSize + vs.zip(tails).map {
-        case (v, tail) =>
-          v.begin - minBegin + tail.product.toLong * typeSize(v.ncType)
-      }.max
-      require(spanLen <= Int.MaxValue, s"record range [$r0,$r1) too large")
-      val buf = fetch(spanStart, spanLen.toInt)
-      names.zip(vs).zip(tails).map { case ((n, v), tail) =>
-        val perRec = tail.product
-        val out = new Array[Double]((r1 - r0) * perRec)
-        var r = r0
-        while (r < r1) {
-          decode(v, buf,
-            (v.begin - minBegin + (r - r0).toLong * recSize).toInt,
-            perRec, out, (r - r0) * perRec)
-          r += 1
-        }
-        n -> (((r1 - r0) +: tail, out))
-      }.toMap
     }
 
     /** One contiguous slab: fetch exactly count elements at offset. */
@@ -422,6 +384,59 @@ object NetCdfClassic {
     (secs, ldt.toEpochSecond(java.time.ZoneOffset.UTC))
   }
 
+  /** The header of `path`'s (time, y, x) grid `valueVar`, as
+    * [[gridHeader]] reads it on the driver: the record count, the axis
+    * vectors (`XLAT[0, :, 0]` and `XLONG[0, 0, :]`, or the whole vector
+    * when a coordinate variable is 1-D; empty when the file holds no
+    * record) and each record's epoch second. The split readers plan
+    * their splits and take axes and times from it, so a split task
+    * reads only its value slabs; [[recordOrderBlocker]] checks it, and
+    * a caller can count what [[readGridDiff]] emits from it without a
+    * Spark job. */
+  final case class GridHeader(path: String, valueVar: String, numRecs: Int,
+                              lats: Array[Double], lons: Array[Double],
+                              epochs: Array[Long]) {
+    /** Cells [[readGridDiff]] emits rows for: every grid cell, or none
+      * when the file holds fewer than 2 records. */
+    def diffCells: Long = if (numRecs < 2) 0L else lats.length.toLong * lons.length
+
+    /** Rows [[readGridDiff]] emits: one per cell and record after the
+      * first. */
+    def diffRows: Long = if (numRecs < 2) 0L else diffCells * (numRecs - 1)
+
+    /** The `%.6f` (lat, lon) keys of the cells [[readGridDiff]] emits
+      * rows for: none when the file holds fewer than 2 records. */
+    def diffKeys: Iterator[(String, String)] =
+      if (numRecs < 2) Iterator.empty
+      else {
+        val lon6 = lons.map(sixDp)
+        lats.iterator.map(sixDp).flatMap(lat6 => lon6.iterator.map(lat6 -> _))
+      }
+  }
+
+  /** `path`'s [[GridHeader]], from one [[withSeekable]]: the header,
+    * the axis vectors and one time value per record. */
+  def gridHeader(path: String, valueVar: String = "RAINNC",
+                 latVar: String = "XLAT", lonVar: String = "XLONG",
+                 timeVar: String = "XTIME"): GridHeader =
+    withSeekable(path) { nc =>
+      val shp = nc.shape(nc.variable(valueVar))
+      require(shp.size == 3, s"$valueVar must be (time, y, x), got $shp")
+      val Seq(n, ny, nx) = shp
+      val epochs = epochSeconds(nc, timeVar,
+        Array.tabulate(n)(r => nc.readRecords(timeVar, r, r + 1)._2(0)))
+      val (lats, lons) =
+        if (n == 0) (Array.emptyDoubleArray, Array.emptyDoubleArray)
+        else gridAxes(nc, ny, nx, latVar, lonVar)
+      require(n == 0 || (lats.length == ny && lons.length == nx),
+        s"$path: $latVar/$lonVar hold ${lats.length}/${lons.length} values " +
+          s"for $valueVar's $ny×$nx grid")
+      GridHeader(path, valueVar, n, lats, lons, epochs)
+    }
+
+  /** The split size of [[readGrid]] and [[readGridDiff]] by default. */
+  val RecordsPerSplit = 24
+
   /** Distributed grid extraction over many classic netCDF files:
     * DataFrame of `(path, t_idx, epoch_s, lat, lon, value)`.
     *
@@ -432,30 +447,32 @@ object NetCdfClassic {
     * within each file — classic netCDF's fixed record stride makes any
     * [r0, r1) slab independently readable via positioned reads, so a
     * handful of large files still saturates every core and a split
-    * task's I/O is proportional to ITS slab, not the file. Split
-    * descriptors are enumerated executor-side from header-only reads
-    * and reshuffled to spread them. Coordinate variables may be 1-D
-    * vectors or (time, y, x) grids (both occur in WRF output); 3-D
-    * coords use the t=0 slice exactly as the reference does.
-    * [[readGridDiff]] is the same scan with each step's interval diff
-    * and 6-dp coordinate keys computed in the split reader.
+    * task's I/O is proportional to ITS slab, not the file. The driver
+    * reads each file's [[GridHeader]] and plans the splits from it
+    * ([[gridSplits]]); building the frame runs no Spark job. Coordinate
+    * variables may be 1-D vectors or (time, y, x) grids (both occur in
+    * WRF output); 3-D coords use the t=0 slice exactly as the reference
+    * does. [[readGridDiff]] is the same scan with each step's interval
+    * diff and 6-dp coordinate keys computed in the split reader.
     */
   def readGrid(spark: SparkSession, paths: Seq[String],
                valueVar: String = "RAINNC", latVar: String = "XLAT",
                lonVar: String = "XLONG", timeVar: String = "XTIME",
-               recordsPerSplit: Int = 24): DataFrame = {
-    val rdd = gridSplits(spark, paths, recordsPerSplit).flatMap { case (path, r0, r1) =>
-      withSeekable(path) { nc =>
-        val s = readSlab(nc, r0, r1, valueVar, latVar, lonVar, timeVar)
-        val cells = s.ny * s.nx
-        // materialized per split (the rows must not outlive the
-        // channel closed by withSeekable): ONE row per timestep,
-        // carrying the step's value slab
-        (r0 until r1).map { t =>
-          val at = (t - r0) * cells
-          Row(path, t, s.epochs(t - r0), s.nx, s.lats, s.lons,
-            java.util.Arrays.copyOfRange(s.values, at, at + cells))
-        }
+               recordsPerSplit: Int = RecordsPerSplit): DataFrame =
+    readGrid(spark, paths.map(gridHeader(_, valueVar, latVar, lonVar, timeVar)),
+      recordsPerSplit)
+
+  /** [[readGrid]] over headers the caller has read. */
+  def readGrid(spark: SparkSession, headers: Seq[GridHeader],
+               recordsPerSplit: Int): DataFrame = {
+    val rdd = gridSplits(spark, headers, recordsPerSplit).flatMap { case (h, r0, r1) =>
+      val (nx, values) = slab(h, r0, r1)
+      val cells = h.lats.length * nx
+      // ONE row per timestep, carrying the step's value slab
+      (r0 until r1).map { t =>
+        val at = (t - r0) * cells
+        Row(h.path, t, h.epochs(t), nx, h.lats, h.lons,
+          java.util.Arrays.copyOfRange(values, at, at + cells))
       }
     }
     explodeCells(spark.createDataFrame(rdd, StructType(stepFields)),
@@ -479,26 +496,30 @@ object NetCdfClassic {
   def readGridDiff(spark: SparkSession, paths: Seq[String],
                    valueVar: String = "RAINNC", latVar: String = "XLAT",
                    lonVar: String = "XLONG", timeVar: String = "XTIME",
-                   recordsPerSplit: Int = 24): DataFrame = {
-    val rdd = gridSplits(spark, paths, recordsPerSplit).flatMap { case (path, r0, r1) =>
-      withSeekable(path) { nc =>
-        val lo = math.max(r0 - 1, 0) // the predecessor of the split's first step
-        val s = readSlab(nc, lo, r1, valueVar, latVar, lonVar, timeVar)
-        val cells = s.ny * s.nx
-        val lat6 = s.lats.map(sixDp)
-        val lon6 = s.lons.map(sixDp)
-        (math.max(r0, 1) until r1).map { t =>
-          val at = (t - lo) * cells
-          val delta = new Array[Double](cells)
-          var i = 0
-          while (i < cells) {
-            delta(i) = s.values(at + i) - s.values(at - cells + i)
-            i += 1
-          }
-          Row(path, t, s.epochs(t - lo), s.nx, s.lats, s.lons,
-            java.util.Arrays.copyOfRange(s.values, at, at + cells),
-            lat6, lon6, delta)
+                   recordsPerSplit: Int = RecordsPerSplit): DataFrame =
+    readGridDiff(spark, paths.map(gridHeader(_, valueVar, latVar, lonVar, timeVar)),
+      recordsPerSplit)
+
+  /** [[readGridDiff]] over headers the caller has read. */
+  def readGridDiff(spark: SparkSession, headers: Seq[GridHeader],
+                   recordsPerSplit: Int): DataFrame = {
+    val rdd = gridSplits(spark, headers, recordsPerSplit).flatMap { case (h, r0, r1) =>
+      val lo = math.max(r0 - 1, 0) // the predecessor of the split's first step
+      val (nx, values) = slab(h, lo, r1)
+      val cells = h.lats.length * nx
+      val lat6 = h.lats.map(sixDp)
+      val lon6 = h.lons.map(sixDp)
+      (math.max(r0, 1) until r1).map { t =>
+        val at = (t - lo) * cells
+        val delta = new Array[Double](cells)
+        var i = 0
+        while (i < cells) {
+          delta(i) = values(at + i) - values(at - cells + i)
+          i += 1
         }
+        Row(h.path, t, h.epochs(t), nx, h.lats, h.lons,
+          java.util.Arrays.copyOfRange(values, at, at + cells),
+          lat6, lon6, delta)
       }
     }
     val schema = StructType(stepFields ++ Seq(
@@ -518,71 +539,62 @@ object NetCdfClassic {
     * decrease in record order (ties keep record order, as the window's
     * t_idx tie-break does) and the 6-dp lat keys are distinct, and so
     * are the lon keys (otherwise two grid points would share one
-    * window series). Reads the header, the axis vectors and one time
-    * value per record. */
+    * window series). */
   def recordOrderBlocker(path: String, valueVar: String = "RAINNC",
                          latVar: String = "XLAT", lonVar: String = "XLONG",
                          timeVar: String = "XTIME"): Option[String] =
-    withSeekable(path) { nc =>
-      val shp = nc.shape(nc.variable(valueVar))
-      require(shp.size == 3, s"$valueVar must be (time, y, x), got $shp")
-      val Seq(n, ny, nx) = shp
-      val epochs = epochSeconds(nc, timeVar,
-        Array.tabulate(n)(r => nc.readRecords(timeVar, r, r + 1)._2(0)))
-      val (lats, lons) = gridAxes(nc, ny, nx, latVar, lonVar)
-      def repeated(axis: String, vs: Array[Double]) =
-        vs.map(sixDp).groupBy(identity).collectFirst {
-          case (k, ks) if ks.length > 1 => s"$path: repeated 6-dp $axis $k"
-        }
-      (1 until n).find(r => epochs(r) < epochs(r - 1))
-        .map(r => s"$path: $timeVar steps back at record $r")
-        .orElse(repeated("latitude", lats))
-        .orElse(repeated("longitude", lons))
-    }
+    recordOrderBlocker(gridHeader(path, valueVar, latVar, lonVar, timeVar))
+
+  /** [[recordOrderBlocker]] over a header the caller has read. */
+  def recordOrderBlocker(h: GridHeader): Option[String] = {
+    def repeated(axis: String, vs: Array[Double]) =
+      vs.map(sixDp).groupBy(identity).collectFirst {
+        case (k, ks) if ks.length > 1 => s"${h.path}: repeated 6-dp $axis $k"
+      }
+    (1 until h.numRecs).find(r => h.epochs(r) < h.epochs(r - 1))
+      .map(r => s"${h.path}: time steps back at record $r")
+      .orElse(repeated("latitude", h.lats))
+      .orElse(repeated("longitude", h.lons))
+  }
 
   /** `%.6f` exactly as Spark's `format_string` renders a double. */
   private def sixDp(v: Double): String =
     String.format(java.util.Locale.US, "%.6f", Double.box(v))
 
-  /** (path, r0, r1) record-range splits of every file, enumerated
-    * executor-side from header-only reads and dealt round-robin over
-    * twice the cores: split k of file f goes to slot f + k·files, so
-    * files with equal record counts fill every slot once before any
-    * slot gets a second split (`repartition`'s seeded pseudo-random
-    * start slots put two of four one-split files on one task). */
-  private def gridSplits(spark: SparkSession, paths: Seq[String],
-                         recordsPerSplit: Int) = {
+  /** (header, r0, r1) record-range splits of every file, planned on
+    * the driver and dealt round-robin: ordered by slot f + k·files for
+    * split k of file f, the i-th goes to partition i mod P, with P the
+    * split count capped at twice the cores. So files with equal record
+    * counts fill every partition once before any partition gets a
+    * second split (`repartition`'s seeded pseudo-random start slots put
+    * two of four one-split files on one task). No Spark job runs: the
+    * dealt splits are the partitions of a `parallelize`, one slice per
+    * partition. */
+  private def gridSplits(spark: SparkSession, headers: Seq[GridHeader],
+                         recordsPerSplit: Int): RDD[(GridHeader, Int, Int)] = {
     require(recordsPerSplit > 0, "recordsPerSplit must be positive")
-    val files = paths.size
-    spark.sparkContext
-      .parallelize(paths.zipWithIndex, math.min(files, 1024).max(1))
-      .flatMap { case (path, f) =>
-        val n = withSeekable(path)(_.numRecs) // header-only read
-        (0 until n by recordsPerSplit).zipWithIndex.map { case (r0, k) =>
-          (f.toLong + k.toLong * files, (path, r0, math.min(r0 + recordsPerSplit, n)))
-        }
+    val files = headers.size
+    val dealt = headers.zipWithIndex.flatMap { case (h, f) =>
+      (0 until h.numRecs by recordsPerSplit).zipWithIndex.map { case (r0, k) =>
+        (f.toLong + k.toLong * files, (h, r0, math.min(r0 + recordsPerSplit, h.numRecs)))
       }
-      .partitionBy(new HashPartitioner(spark.sparkContext.defaultParallelism * 2))
-      .values
+    }.sortBy(_._1).map(_._2).toVector
+    val parts = math.min(dealt.size, spark.sparkContext.defaultParallelism * 2).max(1)
+    spark.sparkContext
+      .parallelize((0 until parts).map(p => (p until dealt.size by parts).map(dealt)), parts)
+      .flatMap(identity)
   }
 
-  /** Records [r0, r1) of a (time, y, x) grid: value slab row-major,
-    * epoch second per record, and the axis vectors. */
-  private final case class Slab(ny: Int, nx: Int, lats: Array[Double],
-                                lons: Array[Double], epochs: Array[Long],
-                                values: Array[Double])
-
-  private def readSlab(nc: NcFile, r0: Int, r1: Int, valueVar: String,
-                       latVar: String, lonVar: String, timeVar: String): Slab = {
-    // value + time decoded from ONE span fetch (readRecordsMulti)
-    // instead of two near-identical ranged reads per split
-    val multi = nc.readRecordsMulti(Seq(valueVar, timeVar), r0, r1)
-    val (vShape, values) = multi(valueVar)
-    require(vShape.size == 3, s"$valueVar must be (time, y, x), got $vShape")
-    val Seq(_, ny, nx) = vShape
-    val (lats, lons) = gridAxes(nc, ny, nx, latVar, lonVar)
-    Slab(ny, nx, lats, lons, epochSeconds(nc, timeVar, multi(timeVar)._2), values)
-  }
+  /** Records [r0, r1) of `h`'s value grid, row-major, and its x extent,
+    * read from one ranged fetch on the split's executor. */
+  private def slab(h: GridHeader, r0: Int, r1: Int): (Int, Array[Double]) =
+    withSeekable(h.path) { nc =>
+      val (shp, values) = nc.readRecords(h.valueVar, r0, r1)
+      require(shp.drop(1) == Seq(h.lats.length, h.lons.length),
+        s"${h.path}: ${h.valueVar} is ${shp.drop(1).mkString("×")} " +
+          s"but its header was ${h.lats.length}×${h.lons.length}")
+      (shp(2), values)
+    }
 
   /** `XLAT[0, :, 0]` and `XLONG[0, 0, :]` — or the whole vector when
     * the coordinate variable is 1-D. */

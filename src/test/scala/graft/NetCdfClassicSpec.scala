@@ -148,4 +148,70 @@ class NetCdfClassicSpec extends SparkSpec {
     }
     Files.delete(f)
   }
+
+  /** A `ny`×`nx` WRF file of `nt` fifteen-minute records. */
+  private def wrfFile(prefix: String, nt: Int, ny: Int = 2, nx: Int = 3): String = {
+    val f = Files.createTempFile(prefix, ".nc").toString
+    graft.sources.NetCdfClassicWriter.writeWrfGrid(f,
+      Array.tabulate(ny)(y => 6.0f + 0.25f * y), Array.tabulate(nx)(x => 79.0f + 0.125f * x),
+      Array.tabulate(nt)(t => 15f * t), "2020-01-01 00:00:00", "RAINNC",
+      Array.tabulate(nt * ny * nx)(i => (i / (ny * nx)) * (1f + i % 3)))
+    f
+  }
+
+  private lazy val counters = new BenchCounters(spark.sparkContext)
+
+  test("building the readGridDiff frame runs no Spark job: the splits are planned on the driver") {
+    import org.apache.spark.sql.functions._
+    val paths = Seq(wrfFile("graft_plan", 5), wrfFile("graft_plan", 30))
+    val df = counters.record("build")(NetCdfClassic.readGridDiff(spark, paths, recordsPerSplit = 24))
+    assert(counters.all("build").jobs === 0L)
+    // the counter sees the action's job
+    assert(counters.record("count")(df.count()) === 6L * (4 + 29))
+    assert(counters.all("count").jobs > 0L)
+    val h = NetCdfClassic.gridHeader(paths(1))
+    assert(h.numRecs === 30 && h.lats.toSeq === Seq(6.0, 6.25) &&
+      h.lons.toSeq === Seq(79.0, 79.125, 79.25))
+    assert(h.epochs.toSeq === (0 until 30).map(t => 1577836800L + 900L * t))
+    assert(h.diffRows === 6L * 29 && h.diffKeys.toSeq.distinct.size === 6)
+    assert(df.filter(col("path") === paths(1)).count() === h.diffRows)
+    paths.foreach(p => Files.delete(java.nio.file.Paths.get(p)))
+  }
+
+  test("four one-split files land in four non-empty partitions, one file each") {
+    import org.apache.spark.sql.functions._
+    val paths = (1 to 4).map(_ => wrfFile("graft_deal", 5))
+    val df = NetCdfClassic.readGridDiff(spark, paths)
+    val byPart = df.select(spark_partition_id().as("p"), col("path")).distinct().collect()
+      .groupMap(_.getInt(0))(_.getString(1))
+    assert(df.rdd.getNumPartitions === 4)
+    assert(byPart.size === 4 && byPart.values.forall(_.length == 1), byPart)
+    assert(byPart.values.flatten.toSet === paths.toSet)
+    paths.foreach(p => Files.delete(java.nio.file.Paths.get(p)))
+  }
+
+  test("a 50-record file at 24 records per split gives 3 splits dealt round-robin") {
+    import org.apache.spark.sql.functions._
+    val f = wrfFile("graft_split", 50)
+    val df = NetCdfClassic.readGridDiff(spark, Seq(f), recordsPerSplit = 24)
+    assert(df.rdd.getNumPartitions === 3)
+    // each split diffs its first record against the record before it
+    val ranges = df.groupBy(spark_partition_id().as("p"))
+      .agg(min("t_idx"), max("t_idx"), count(lit(1))).orderBy("p").collect().map(_.toSeq)
+    assert(ranges.toSeq === Seq(Seq(0, 1, 23, 23L * 6), Seq(1, 24, 47, 24L * 6),
+      Seq(2, 48, 49, 2L * 6)))
+    Files.delete(java.nio.file.Paths.get(f))
+  }
+
+  test("a zero-record file yields no rows and no error") {
+    val empty = wrfFile("graft_empty", 0)
+    val full = wrfFile("graft_full", 3)
+    val h = NetCdfClassic.gridHeader(empty)
+    assert(h.numRecs === 0 && h.diffRows === 0L && h.diffKeys.isEmpty)
+    assert(NetCdfClassic.recordOrderBlocker(empty).isEmpty)
+    assert(NetCdfClassic.readGridDiff(spark, Seq(empty)).count() === 0L)
+    assert(NetCdfClassic.readGrid(spark, Seq(empty)).count() === 0L)
+    assert(NetCdfClassic.readGridDiff(spark, Seq(empty, full)).count() === 2L * 6)
+    Seq(empty, full).foreach(p => Files.delete(java.nio.file.Paths.get(p)))
+  }
 }

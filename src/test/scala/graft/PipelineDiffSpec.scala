@@ -24,12 +24,13 @@ class PipelineDiffSpec extends SparkSpec {
   /** The runs' first XTIME, 2020-01-01 00:00:00 UTC, in epoch seconds. */
   private val Epoch0 = 1577836800L
 
-  /** One cumulative (time, y, x) grid per system; `inc(system index,
-    * t, y, x)` is step t's increment. */
+  /** One cumulative (time, y, x) grid per system of `systems`;
+    * `inc(system index, t, y, x)` is step t's increment. */
   private def writeRun(dir: String, pattern: String, lats: Array[Float],
                        lons: Array[Float], times: Array[Float],
-                       inc: (Int, Int, Int, Int) => Float): Unit =
-    for ((s, k) <- Systems.zipWithIndex) {
+                       inc: (Int, Int, Int, Int) => Float,
+                       systems: Seq[String] = Systems): Unit =
+    for (s <- systems; k = Systems.indexOf(s)) {
       val (ny, nx) = (lats.length, lons.length)
       val values = new Array[Float](times.length * ny * nx)
       for (t <- times.indices; y <- 0 until ny; x <- 0 until nx) {
@@ -221,6 +222,35 @@ class PipelineDiffSpec extends SparkSpec {
     assert(res.diffPaths === Map(D03 -> "reader"))
   }
 
+  test("a system whose file holds one record contributes no series and no stations") {
+    val dir = Files.createTempDirectory("graft_diff_onerec").toString
+    writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f), grid(6, 0f, 15f), storm)
+    // SE: one record on a grid of its own, whose keys no other system has
+    writeRun(dir, D03, grid(3, 5.0f, 0.03f), grid(5, 79.9f, 0.05f), Array(0f), storm,
+      systems = Seq("SE"))
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
+      DomainConfig("basin", D03, Some((79.9, 6.8, 80.0, 6.86)))))
+    assert(res.diffPaths === Map(D03 -> "reader"))
+    assert(res.stations === 20L && res.seriesRows === 3L * 20 * 5 && res.watermarks === 3L * 20)
+    assert(res.perSystem === Map("A" -> 100L, "C" -> 100L, "E" -> 100L))
+    // its bundle is an xy.csv-only bundle with no cell
+    assert(Files.readAllBytes(Paths.get(dir, "out/rfields_packaged/d03/SE/xy.csv")).isEmpty)
+  }
+
+  test("two systems with different d03 grids give stations = the union of their 6-dp keys") {
+    val dir = Files.createTempDirectory("graft_diff_union").toString
+    val lats = grid(6, 6.8f, 0.03f)
+    val lons = grid(7, 79.9f, 0.05f)
+    writeRun(dir, D03, lats, lons, grid(5, 0f, 15f), storm, systems = Seq("A", "C"))
+    // E and SE: the last 4 latitude rows of A's grid and 2 rows north of it
+    writeRun(dir, D03, lats.drop(2) ++ grid(2, 7.0f, 0.03f), lons, grid(5, 0f, 15f), storm,
+      systems = Seq("E", "SE"))
+    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
+      DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92)))))
+    assert(res.diffPaths === Map(D03 -> "reader"))
+    assert(res.stations === 8L * 7 && res.seriesRows === 4L * 42 * 4 && res.watermarks === 4L * 42)
+  }
+
   test("an unnamed single-domain run writes rfields/t=… as the window operators do") {
     val dir = Files.createTempDirectory("graft_diff_unnamed").toString
     writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
@@ -288,20 +318,22 @@ class PipelineDiffSpec extends SparkSpec {
   private val D03Basin = Seq(DomainConfig("d03", D03),
     DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92))))
 
-  test("a warm d03 + basin run schedules 7 Spark jobs") {
+  test("a warm d03 + basin run schedules 2 Spark jobs") {
     val dir = Files.createTempDirectory("graft_diff_jobs").toString
     jobsRun(dir)
     val (jobs, started) = warmJobs(out => PipelineConfig(ncDir = dir, outDir = s"$dir/$out",
       systems = Systems, domains = D03Basin))
     info(s"warm run: $jobs jobs")
-    // parse_diff's count (3: the cache fill as its own adaptive stage,
-    // the count's map stage, its result), the shared mean and write of
-    // both domains (2) and the per-series summary's collect (2); a write
-    // per domain, or a job per accounting stage, adds to it
-    assert(jobs === 7L, s"warm run jobs: $started")
+    // the shared mean and write of both domains (2: the mean's
+    // exchange, the write); the diff streams into it uncached, and the
+    // accounting is a driver tally over the grid headers. Caching the
+    // diff adds 3 (its fill, the count's map stage and result), a
+    // summary collect 2, and a write per domain or a header-reading
+    // split-planning job 1 each
+    assert(jobs === 2L, s"warm run jobs: $started")
   }
 
-  test("a warm d03 + basin run with bundles schedules 12 Spark jobs, as many bundle jobs for 1 system × 1 domain as for 4 × 2") {
+  test("a warm d03 + basin run with bundles schedules 7 Spark jobs, as many bundle jobs for 1 system × 1 domain as for 4 × 2") {
     val dir = Files.createTempDirectory("graft_diff_pkg_jobs").toString
     jobsRun(dir)
     def jobs(systems: Seq[String], domains: Seq[DomainConfig], packaged: Boolean) =
@@ -312,11 +344,12 @@ class PipelineDiffSpec extends SparkSpec {
     val oneBundleJobs = jobs(Seq("A"), D03Basin.take(1), packaged = true)._1 -
       jobs(Seq("A"), D03Basin.take(1), packaged = false)._1
     info(s"warm run with bundles: $all jobs, $bundleJobs for 8 bundles, $oneBundleJobs for 1")
-    // the run's 7 and the bundle pass's 5: the sums' exchange and the
-    // write of every bundle (2), the coverage aggregate over every
-    // bundle (3: the sums' exchange, its own, its collect); a write or
-    // a check per bundle adds to it
-    assert(all === 12L, s"warm run jobs: $started")
+    // the run's 2 and 5 for the bundles: the diff, read by the mean
+    // and the bundles, is cached (3: its fill, the count's map stage
+    // and result), and the bundle pass is the sums' exchange and the
+    // write of every bundle (2), with no coverage aggregate on the
+    // reader path; a write or a check per bundle adds to it
+    assert(all === 7L, s"warm run jobs: $started")
     assert(bundleJobs === oneBundleJobs)
   }
 

@@ -225,4 +225,24 @@ class RfieldSinkSpec extends SparkSpec {
     finally zf.close()
     assert(names(root) === List("all", "all.zip", "none", "none.zip"))
   }
+
+  test("writePackaged writes a bundle that lists its cells as it writes the counted one, without the aggregate") {
+    val cells = Seq((79.0, 6.0), (79.0, 6.5), (79.5, 6.0), (79.5, 6.5))
+    val rf = (for (t <- Seq(0L, 900L, 1800L); ((lon, lat), i) <- cells.zipWithIndex)
+      yield (t, lon, lat, t / 900 * 10 + i + 0.125)).toDF("t", "lon", "lat", "value")
+    val root = Files.createTempDirectory("rfield_listed").toString
+    val counters = new BenchCounters(spark.sparkContext)
+    counters.record("counted")(RfieldSink.writePackaged(rf,
+      Seq(RfieldSink.Bundle(s"$root/counted", lit(true), "WRF_A_4.0")), s"$root/_staging", "t"))
+    counters.record("listed")(RfieldSink.writePackaged(rf,
+      Seq(RfieldSink.Bundle(s"$root/listed", lit(true), "WRF_A_4.0", Some(cells.reverse))),
+      s"$root/_staging", "t"))
+    def files(dir: String) = Files.list(Paths.get(dir)).iterator().asScala
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+    assert(files(s"$root/listed").keySet.size === 4)
+    assert(files(s"$root/listed") === files(s"$root/counted"))
+    assert(counters.all("listed").jobs < counters.all("counted").jobs,
+      s"${counters.all("listed").jobs} jobs listed, ${counters.all("counted").jobs} counted")
+  }
 }

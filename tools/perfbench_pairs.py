@@ -9,12 +9,14 @@ skipped). Run i of the parent is paired with run i of the change, so run
 the pairs alternately and append each side's line as it finishes.
 
 For every metric both sides report, prints each side's median and quartiles,
-the share of pairs the change wins (ties count for neither), and whether the
-gain rule holds: the change wins at least 9/10 of the pairs AND the medians
-differ by more than the parent's interquartile range. For an end-to-end
-metric with a `bound` in BENCHMARK.json it also prints the regression side:
-`WORSE` when the change median is worse than the parent median by more than
-that bound (a fraction of the parent median), else `ok`. Which way is better
+the share of pairs the change wins (ties count for neither), whether the
+gain rule holds (the change wins at least 9/10 of the pairs AND the medians
+differ by more than the parent's interquartile range), and the relative
+change of the median, (change - parent) / |parent|, as a signed percentage
+(`n/a` when the parent median is 0). For an end-to-end metric with a `bound`
+in BENCHMARK.json it also prints that bound as a percentage and the
+regression side: `WORSE` when the change median is worse than the parent
+median by more than the bound (a fraction of the parent median), else `ok`. Which way is better
 comes from the metric's `better` field in BENCHMARK.json (lower when not
 listed). `--each` adds every pair's parent -> change values per metric.
 Exit status is 0 unless a file has no result line.
@@ -60,8 +62,9 @@ def directions(benchmark):
 
 def compare(parent, change, better):
     """One row per metric present on both sides of every pair: (name, parent
-    quartiles, change quartiles, wins, pairs, gain rule holds, regression
-    verdict or None when the metric has no bound, the pairs)."""
+    quartiles, change quartiles, wins, pairs, gain rule holds, relative
+    median change or None when the parent median is 0, bound or None,
+    regression verdict or None when the metric has no bound, the pairs)."""
     n = min(len(parent), len(change))
     names = [k for k in parent[0] if all(k in r for r in parent[:n] + change[:n])]
     rows = []
@@ -76,7 +79,8 @@ def compare(parent, change, better):
         gain = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
         holds = wins * 10 >= 9 * n and gain > iqr
         regress = None if bound is None else -gain > bound * abs(pq[1])
-        rows.append((name, pq, cq, wins, n, holds, regress, list(zip(p, c))))
+        delta = None if pq[1] == 0 else (cq[1] - pq[1]) / abs(pq[1])
+        rows.append((name, pq, cq, wins, n, holds, delta, bound, regress, list(zip(p, c))))
     return rows
 
 
@@ -100,11 +104,12 @@ def main():
     fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
     rows = compare(parent, change, better)
     print(f"{'metric':42s} {'parent median [q1, q3]':32s} {'change median [q1, q3]':32s} "
-          f"{'wins':>7s}  rule   bound")
-    for name, pq, cq, wins, n, holds, regress, _ in rows:
-        verdict = "" if regress is None else ("WORSE" if regress else "ok")
+          f"{'wins':>7s}  rule   {'Δ%':>7s}  bound")
+    for name, pq, cq, wins, n, holds, delta, bound, regress, _ in rows:
+        pct = "n/a" if delta is None else f"{100 * delta:+.1f}%"
+        verdict = "" if regress is None else f"{100 * bound:g}% " + ("WORSE" if regress else "ok")
         print(f"{name:42s} {fmt(pq):32s} {fmt(cq):32s} {wins:>3d}/{n:<3d}  "
-              f"{'holds' if holds else 'no':5s}  {verdict}".rstrip())
+              f"{'holds' if holds else 'no':5s}  {pct:>7s}  {verdict}".rstrip())
     if args.each:
         for name, *_, pairs in rows:
             print(f"{name}: " + ", ".join(f"{a:.4g} -> {b:.4g}" for a, b in pairs))

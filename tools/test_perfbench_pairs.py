@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Tests of tools/perfbench_pairs.py: the gain rule, the regression side and
---each. Run from the repository root:
+"""Tests of tools/perfbench_pairs.py: the gain rule, the regression side, the
+relative median change and --each. Run from the repository root:
 
     python3 -m unittest tools/test_perfbench_pairs.py
 """
@@ -81,6 +81,21 @@ class PairsTest(unittest.TestCase):
         row = self.row(self.run_tool(parent, change), "recall")
         self.assertIn("3/3", row)
         self.assertFalse(row.endswith("ok") or row.endswith("WORSE"), row)
+
+    def test_relative_median_change_prints_next_to_the_bound(self):
+        parent = [line(run_s=2.0, recall=0.5) for _ in range(4)]
+        change = [line(run_s=1.5, recall=0.55) for _ in range(4)]
+        out = self.run_tool(parent, change)
+        self.assertIn("Δ%", out.splitlines()[0])
+        self.assertTrue(self.row(out, "run_s").endswith("-25.0%  24% ok"), self.row(out, "run_s"))
+        # a per-layer metric has a change but no bound
+        self.assertTrue(self.row(out, "recall").endswith("+10.0%"), self.row(out, "recall"))
+        worse = self.row(self.run_tool(parent, [line(run_s=2.5, recall=0.5)] * 4), "run_s")
+        self.assertTrue(worse.endswith("+25.0%  24% WORSE"), worse)
+
+    def test_a_zero_parent_median_has_no_relative_change(self):
+        out = self.run_tool([line(run_s=0.0)] * 2, [line(run_s=0.5)] * 2)
+        self.assertIn(" n/a ", self.row(out, "run_s"))
 
     def test_each_prints_every_pair_in_run_order(self):
         out = self.run_tool([line(run_s=3.0), line(run_s=3.5)],
