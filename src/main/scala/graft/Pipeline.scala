@@ -214,7 +214,7 @@ object Pipeline {
         .withColumn("unit", lit(cfg.unit))
       val metaCols = Seq("sim_tag", "cell", "source", "variable", "unit")
 
-      // 4. sinks: per-timestep rfield files (ensemble mean across
+      // 3. sinks: per-timestep rfield files (ensemble mean across
       //    systems per cell, gen_*_mean_rfields.py flavor) — ONE mean
       //    per file pattern, its rows hash-partitioned on the timestep
       //    below the groupBy so the mean and the write share one
@@ -277,7 +277,7 @@ object Pipeline {
               cells(d, s)),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
-      // 3. the registry (A9), the series rows and the fgt watermarks
+      // 4. the registry (A9), the series rows and the fgt watermarks
       //    (A11). On the reader path they follow from the primary
       //    pattern's headers: a file of n ≥ 2 records gives one series
       //    per cell with n - 1 rows, the registry is the distinct 6-dp

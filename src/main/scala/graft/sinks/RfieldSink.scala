@@ -143,9 +143,9 @@ object RfieldSink {
     * its xy.csv from them; one aggregate over the bundles that do not
     * yields their cells with their row and timestep counts, and runs
     * only when there is such a bundle. Only the O(#timesteps) file
-    * renames, the O(#cells) xy.csv, and
-    * the zip run on the driver — the zip is inherently a single-stream
-    * artifact (it exists to be scp'd), not a data-path operation.
+    * renames, the O(#cells) xy.csv, and the zip run on the driver — the
+    * zip is inherently a single-stream artifact (it exists to be
+    * scp'd), not a data-path operation.
     *
     * The value-only format is positional, so every timestep of a bundle
     * must hold every cell of the bundle exactly once: each cell must
@@ -170,11 +170,6 @@ object RfieldSink {
           .sortBy(r => (r.getAs[Number](1).doubleValue, r.getAs[Number](2).doubleValue))
           .groupBy(_.getInt(0)) // keeps the (lon, lat) order within a bundle
         ).withDefaultValue(Array.empty)
-      // each bundle's xy.csv lines
-      val xyLines = bundles.zipWithIndex.map { case (b, i) =>
-        b.cells.fold(counted(i).toSeq.map(r => s"${r.get(1)},${r.get(2)}"))(
-          _.sorted.map { case (lon, lat) => s"$lon,$lat" })
-      }
       // each bundle's staged value files by timestep
       val steps = bundles.indices.map(i =>
         fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*")).map(_.getPath)
@@ -191,8 +186,10 @@ object RfieldSink {
         // a space in a dir is a legal path but an illegal URI)
         val out = new Path(b.dir)
         fs.delete(out, true); fs.mkdirs(out)
+        val cells = b.cells.fold(counted(i).toSeq.map(r => s"${r.get(1)},${r.get(2)}"))(
+          _.sorted.map { case (lon, lat) => s"$lon,$lat" })
         val xy = fs.create(new Path(out, "xy.csv"))
-        try xyLines(i).foreach(line => xy.write(s"$line\n".getBytes("UTF-8")))
+        try cells.foreach(line => xy.write(s"$line\n".getBytes("UTF-8")))
         finally xy.close()
         for ((t, parts) <- steps(i)) {
           require(parts.length == 1, s"expected 1 file for $timeCol=$t, got ${parts.length}")
