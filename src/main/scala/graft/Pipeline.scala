@@ -36,20 +36,14 @@ object Pipeline {
     * version of the same accounting). `stageSeconds` carries the
     * per-stage wall clock of the run so callers (Bench) can attribute
     * a regression to parse/diff vs sinks instead of reading one
-    * opaque end-to-end number. Its keys do not depend on the diff
-    * path: `parse_diff` times the fill of the cached diffs and reads 0
-    * when no diff is cached (the parse then runs inside `rfields`); on
-    * the reader path `stations`, `series` and `watermarks` are driver
-    * tallies over the primary pattern's grid headers (no Spark job), on
-    * the window path over one collect of the per-series summary, which
-    * `stations` times. `diffPaths` records, per file pattern,
-    * where the interval diff ran: `reader` (inside the split reader)
-    * or `window: <why>` (the shuffle-and-sort fallback, with the file
-    * property that forced it). */
+    * opaque end-to-end number. `parse_diff` times the fill of the
+    * cached diffs and reads 0 when no diff is cached (the parse then
+    * runs inside `rfields`); `stations`, `series` and `watermarks` are
+    * driver tallies over the primary pattern's grid headers (no Spark
+    * job). */
   final case class PipelineResult(stations: Long, seriesRows: Long,
                                   watermarks: Long, perSystem: Map[String, Long],
-                                  stageSeconds: Map[String, Double] = Map.empty,
-                                  diffPaths: Map[String, String] = Map.empty)
+                                  stageSeconds: Map[String, Double] = Map.empty)
 
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(
@@ -158,15 +152,11 @@ object Pipeline {
     val missing = allPaths.filterNot(p => new java.io.File(p).exists())
     require(missing.isEmpty, s"missing netCDF inputs: ${missing.mkString(", ")}")
 
-    // every input's grid header, read once on the driver: how each
-    // file pattern's diff runs (see diffOf), the split reader's plan,
-    // and on the reader path the accounting and the bundles' cells
+    // every input's grid header, read once on the driver: the split
+    // reader's plan, the accounting and the bundles' cells
     val patterns = domains.map(_.filePattern).distinct
     val headers = patterns.map(p =>
       p -> cfg.systems.map(s => NetCdfClassic.gridHeader(cfg.ncPath(p, s)))).toMap
-    val diffPaths = patterns.map(p =>
-      p -> diffBlocker(cfg, p, headers(p)).fold("reader")(why => s"window: $why")).toMap
-    val primaryInReader = diffPaths(primary.filePattern) == "reader"
 
     val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
     def stage(label: String, secs: Double): Unit = {
@@ -186,15 +176,13 @@ object Pipeline {
     val (nStations, perSystem, nWm) = try {
       // 1-2. per file pattern, every system's grid diffed per
       //    (system, cell) series (A1). Its mean always reads it; so do
-      //    its bundles, and the primary's also feeds the landing and,
-      //    on the window path, the per-series summary. A diff two of
-      //    these read is cached; one only the mean reads streams
+      //    its bundles, and the primary's also feeds the landing. A diff
+      //    two of these read is cached; one only the mean reads streams
       //    straight into the rfield write
       def reads(p: String): Int = 1 + (if (cfg.packagedRfields) 1 else 0) +
-        (if (p != primary.filePattern) 0
-        else (if (cfg.landSeries) 1 else 0) + (if (primaryInReader) 0 else 1))
+        (if (p == primary.filePattern && cfg.landSeries) 1 else 0)
       val diffs = patterns.map { p =>
-        val diff = diffOf(spark, cfg, p, headers(p), inReader = diffPaths(p) == "reader")
+        val diff = diffOf(spark, cfg, headers(p))
         p -> (if (reads(p) > 1) pinned(diff) else diff)
       }.toMap
       val rain = diffs(primary.filePattern)
@@ -258,61 +246,34 @@ object Pipeline {
       // the basin cut and d01 each per system): per file pattern, ONE
       // sum per (system, cell, step) — its rows hash-partitioned on the
       // timestep below the groupBy, as the mean's — and ONE write of
-      // every (domain, system) bundle, each a cut of the sums' rows. On
-      // the reader path every record holds the header's whole grid, so
-      // a bundle's cells are its system's grid cut by the domain's bbox
-      // (none for a file of fewer than 2 records, which has no diff row)
-      def cells(d: DomainConfig, s: String): Option[Seq[(Double, Double)]] =
-        if (diffPaths(d.filePattern) != "reader") None
-        else {
-          val h = headers(d.filePattern)(cfg.systems.indexOf(s))
-          Some(if (h.numRecs < 2) Nil
-            else for (lat <- h.lats.toSeq; lon <- h.lons if holds(d, lon, lat)) yield (lon, lat))
-        }
+      // every (domain, system) bundle, each a cut of the sums' rows.
+      // Every record holds the header's whole grid, so a bundle's cells
+      // are its system's grid cut by the domain's bbox (none for a file
+      // of fewer than 2 records, which has no diff row)
+      def cells(d: DomainConfig, s: String): Seq[(Double, Double)] = {
+        val h = headers(d.filePattern)(cfg.systems.indexOf(s))
+        if (h.numRecs < 2) Nil
+        else for (lat <- h.lats.toSeq; lon <- h.lons if holds(d, lon, lat)) yield (lon, lat)
+      }
       if (cfg.packagedRfields) timed("rfield_pkg")(patterns.foreach { p =>
         RfieldSink.writePackaged(perCell(p, Seq(col("system")), sum("delta")),
           for (d <- domains.filter(_.filePattern == p); s <- cfg.systems)
             yield RfieldSink.Bundle(s"${domainDir("rfields_packaged", d)}/$s",
               col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}",
-              cells(d, s)),
+              Some(cells(d, s))),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
       // 4. the registry (A9), the series rows and the fgt watermarks
-      //    (A11). On the reader path they follow from the primary
-      //    pattern's headers: a file of n ≥ 2 records gives one series
-      //    per cell with n - 1 rows, the registry is the distinct 6-dp
-      //    (lat, lon) keys, and each series has its own tms id (the
-      //    cell, system included, is part of its hashed key). The window
-      //    path merges series the headers cannot predict: one collect
-      //    of a summary per series (system, cell) gives its rows, newest
-      //    ts_us and tms id
-      val (nStations, perSystem, nWm) =
-        if (primaryInReader) {
-          val hs = cfg.systems.zip(headers(primary.filePattern))
-          (timed("stations")(hs.iterator.flatMap(_._2.diffKeys).toSet.size.toLong),
-            timed("series")(hs.collect { case (s, h) if h.diffRows > 0 => s -> h.diffRows }.toMap),
-            timed("watermarks")(hs.map(_._2.diffCells).sum))
-        } else {
-          val perSeries = Timeseries.tmsId(withMeta(rain.groupBy("system", "cell")
-              .agg(count(lit(1)).as("rows"), max("ts_us").as("ts_us"))), metaCols)
-            .select("system", "cell", "rows", "ts_us", "tms_id")
-          // a cell key ends `_<lat6>_<lon6>` and a %.6f rendering holds
-          // no '_', so the distinct key tails are the (lat, lon) pairs
-          // stationRegistry6dp dedups
-          val (series, nStations) = timed("stations") {
-            val rows = perSeries.collect()
-            val tails = rows.map { r =>
-              val cell = r.getString(1)
-              cell.substring(cell.lastIndexOf('_', cell.lastIndexOf('_') - 1) + 1)
-            }
-            (rows, tails.distinct.length.toLong)
-          }
-          (nStations,
-            timed("series")(series.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _)),
-            // newest ts_us per tms id
-            timed("watermarks")(
-              series.groupMapReduce(_.getString(4))(_.getLong(3))(math.max).size.toLong))
-        }
+      //    (A11), from the primary pattern's headers: a file of n ≥ 2
+      //    records gives one series per cell with n - 1 rows, the
+      //    registry is the distinct 6-dp (lat, lon) keys, and each series
+      //    has its own tms id (the cell, system included, is part of its
+      //    hashed key)
+      val hs = cfg.systems.zip(headers(primary.filePattern))
+      val nStations = timed("stations")(hs.iterator.flatMap(_._2.diffKeys).toSet.size.toLong)
+      val perSystem =
+        timed("series")(hs.collect { case (s, h) if h.diffRows > 0 => s -> h.diffRows }.toMap)
+      val nWm = timed("watermarks")(hs.map(_._2.diffCells).sum)
       // optional z-ordered series landing (r13, VERDICT r12 #5): the
       // persisted artifact the standing consumer queries read — runs
       // off the still-cached post-diff table, so no netCDF re-parse.
@@ -334,69 +295,47 @@ object Pipeline {
       Seq("id", "time", "fgt", "value"), Seq("id", "time"))
     val nSeries = perSystem.values.sum
     // the residual OUTSIDE every timed stage (config discovery,
-    // readiness gate, the driver's netCDF header reads and diff-path
-    // checks, analyzer/optimizer time, inter-job
+    // readiness gate, the driver's netCDF header reads,
+    // analyzer/optimizer time, inter-job
     // gaps) — tracked as its own stage so the bench sub-entries sum
     // to the e2e wall and a regression can never hide in unattributed
     // time
     val runSecs = (System.nanoTime() - runT0) / 1e9
     stage("other", math.max(0.0, runSecs - stageSecs.values.sum))
-    val diffKind = if (diffPaths.values.forall(_ == "reader")) "reader" else "window"
-    println(s"PIPELINE stations=$nStations series_rows=$nSeries watermarks=$nWm diff=$diffKind")
-    patterns.foreach(p => println(s"PIPELINE diff $p: ${diffPaths(p)}"))
+    println(s"PIPELINE stations=$nStations series_rows=$nSeries watermarks=$nWm")
     cfg.systems.foreach(s =>
       println(s"PIPELINE system $s: series_rows=${perSystem.getOrElse(s, 0L)}"))
     println(s"PIPELINE upsert: $upsertSql")
     println(s"PIPELINE rfields at ${cfg.outDir}/rfields")
-    PipelineResult(nStations, nSeries, nWm, perSystem, stageSecs.toMap, diffPaths)
+    PipelineResult(nStations, nSeries, nWm, perSystem, stageSecs.toMap)
   }
 
-  /** One file pattern's post-diff table over every system of the run:
+  /** One file pattern's post-diff table over every system of the run,
+    * from the split reader ([[NetCdfClassic.readGridDiff]] over the
+    * systems' `headers`: no shuffle, keys from the headers):
     * `(t_idx, epoch_s, lat, lon, value, system, cell, delta, ts_us)`
     * (no `path`: a long string on every cached row, and the system
     * names its file), one row per (system, cell) series and step after its
     * first, `cell` = `<system>_<lat6>_<lon6>` with the `%.6f`
-    * coordinate keys. `inReader` diffs inside the split reader
-    * ([[NetCdfClassic.readGridDiff]]: no shuffle, keys formatted once
-    * per axis value); otherwise the window ([[Timeseries.intervalDiff]]
-    * over the cell key, ordered by (epoch_s, t_idx)) — the same rows
-    * whenever [[diffBlocker]] finds nothing. */
-  private def diffOf(spark: SparkSession, cfg: PipelineConfig, pattern: String,
-                     headers: Seq[NetCdfClassic.GridHeader], inReader: Boolean): DataFrame = {
-    val paths = headers.map(_.path)
+    * coordinate keys. */
+  private def diffOf(spark: SparkSession, cfg: PipelineConfig,
+                     headers: Seq[NetCdfClassic.GridHeader]): DataFrame = {
     // tag each row with its system by matching the path (verbatim —
-    // the readers echo the strings they were given) back to the
-    // config entry
-    val system = cfg.systems.zip(paths)
+    // the reader echoes the strings it was given) back to the config
+    // entry; the config gives each system its own file
+    val system = cfg.systems.zip(headers.map(_.path))
       .foldLeft(lit(null).cast("string")) {
         case (acc, (s, p)) => when(col("path") === p, lit(s)).otherwise(acc)
       }
     // system folded into the cell key — two systems sharing a
     // (lat, lon) are SEPARATE series
-    def keyed(g: DataFrame) = g.withColumn("system", system)
+    NetCdfClassic.readGridDiff(spark, headers, NetCdfClassic.RecordsPerSplit)
+      .withColumn("system", system)
       .withColumn("cell", concat_ws("_", col("system"), col("lat6"), col("lon6")))
-    val diff =
-      if (inReader) keyed(NetCdfClassic.readGridDiff(spark, headers, NetCdfClassic.RecordsPerSplit))
-      else Timeseries.intervalDiff(
-        keyed(NetCdfClassic.readGrid(spark, headers, NetCdfClassic.RecordsPerSplit)
-          .withColumn("lat6", format_string("%.6f", col("lat")))
-          .withColumn("lon6", format_string("%.6f", col("lon")))),
-        "cell", "epoch_s", "t_idx", "value")
-    diff.withColumn("ts_us", col("epoch_s") * lit(1000000L))
+      .withColumn("ts_us", col("epoch_s") * lit(1000000L))
       .select(Seq("t_idx", "epoch_s", "lat", "lon", "value", "system",
         "cell", "delta", "ts_us").map(col): _*)
   }
-
-  /** Why `pattern`'s files (their `headers`, one per system) must take
-    * the window diff, or None: the split reader diffs each FILE's grid
-    * points in record order, which is the window's series and order
-    * when the systems read distinct files and every file passes
-    * [[NetCdfClassic.recordOrderBlocker]]. */
-  private def diffBlocker(cfg: PipelineConfig, pattern: String,
-                          headers: Seq[NetCdfClassic.GridHeader]): Option[String] =
-    if (headers.map(_.path).distinct.size < headers.size)
-      Some(s"systems ${cfg.systems.mkString(",")} do not read distinct files of $pattern")
-    else headers.iterator.flatMap(h => NetCdfClassic.recordOrderBlocker(h)).nextOption()
 
   /** Land the post-diff series table as a Z-ORDERED parquet artifact
     * (r13, VERDICT r12 #5 — the layout operator wired into its

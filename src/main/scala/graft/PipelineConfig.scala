@@ -15,6 +15,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *                    (the reference nests per-system directories —
   *                    `…/output/wrf/{system}/d03_RAINNC.nc`; the flat
   *                    default matches this repo's synthetic runs).
+  *                    Every system must read its own file under every
+  *                    domain's pattern, so a pattern without `{system}`
+  *                    serves a one-system run only.
   * @param waitReadyMs when > 0, gate the run on all inputs being
   *                    complete (header-committed bytes present) for up
   *                    to this long — `is_netcdf_ready.sh` semantics.
@@ -72,6 +75,14 @@ final case class PipelineConfig(
     s"land_series_files=$landSeriesFiles must be positive")
   require(domains.map(_.name).distinct.size == domains.size,
     s"domain names must be distinct: ${domains.map(_.name)}")
+  // a file read by two systems would be counted, meaned and bundled
+  // once per system under whichever system matched its path last
+  for (d <- runDomains) {
+    val files = systems.map(ncPath(d.filePattern, _))
+    val shared = files.diff(files.distinct)
+    require(shared.isEmpty, s"systems ${systems.mkString(",")} must read distinct " +
+      s"files of '${d.filePattern}': ${shared.headOption.orNull} is read by more than one")
+  }
 
   /** reference: `source_name = "{model}_{system}"` (wrf_data_pusher.py:287). */
   def sourceName(system: String): String = s"${model}_$system"

@@ -388,14 +388,23 @@ object NetCdfClassic {
     * [[gridHeader]] reads it on the driver: the record count, the axis
     * vectors (`XLAT[0, :, 0]` and `XLONG[0, 0, :]`, or the whole vector
     * when a coordinate variable is 1-D; empty when the file holds no
-    * record) and each record's epoch second. The split readers plan
-    * their splits and take axes and times from it, so a split task
-    * reads only its value slabs; [[recordOrderBlocker]] checks it, and
-    * a caller can count what [[readGridDiff]] emits from it without a
-    * Spark job. */
+    * record), each record's epoch second, and what follows from them
+    * there: the axes' `%.6f` keys and the file's time order. The split
+    * readers plan their splits and take axes, keys and times from it, so
+    * a split task reads only its value slabs, and a caller can count
+    * what [[readGridDiff]] emits from it without a Spark job. */
   final case class GridHeader(path: String, valueVar: String, numRecs: Int,
                               lats: Array[Double], lons: Array[Double],
                               epochs: Array[Long]) {
+    /** `lats` and `lons` rendered `%.6f`: the registry's station keys. */
+    val lat6: Array[String] = lats.map(sixDp)
+    val lon6: Array[String] = lons.map(sixDp)
+
+    /** The record indices sorted by (epoch second, record index): the
+      * order [[readGridDiff]] diffs in, the identity unless XTIME steps
+      * back. */
+    val order: Array[Int] = Array.range(0, numRecs).sortBy(r => (epochs(r), r))
+
     /** Cells [[readGridDiff]] emits rows for: every grid cell, or none
       * when the file holds fewer than 2 records. */
     def diffCells: Long = if (numRecs < 2) 0L else lats.length.toLong * lons.length
@@ -408,10 +417,7 @@ object NetCdfClassic {
       * rows for: none when the file holds fewer than 2 records. */
     def diffKeys: Iterator[(String, String)] =
       if (numRecs < 2) Iterator.empty
-      else {
-        val lon6 = lons.map(sixDp)
-        lats.iterator.map(sixDp).flatMap(lat6 => lon6.iterator.map(lat6 -> _))
-      }
+      else lat6.iterator.flatMap(lat => lon6.iterator.map(lat -> _))
   }
 
   /** `path`'s [[GridHeader]], from one [[withSeekable]]: the header,
@@ -458,20 +464,15 @@ object NetCdfClassic {
   def readGrid(spark: SparkSession, paths: Seq[String],
                valueVar: String = "RAINNC", latVar: String = "XLAT",
                lonVar: String = "XLONG", timeVar: String = "XTIME",
-               recordsPerSplit: Int = RecordsPerSplit): DataFrame =
-    readGrid(spark, paths.map(gridHeader(_, valueVar, latVar, lonVar, timeVar)),
-      recordsPerSplit)
-
-  /** [[readGrid]] over headers the caller has read. */
-  def readGrid(spark: SparkSession, headers: Seq[GridHeader],
-               recordsPerSplit: Int): DataFrame = {
+               recordsPerSplit: Int = RecordsPerSplit): DataFrame = {
+    val headers = paths.map(gridHeader(_, valueVar, latVar, lonVar, timeVar))
     val rdd = gridSplits(spark, headers, recordsPerSplit).flatMap { case (h, r0, r1) =>
-      val (nx, values) = slab(h, r0, r1)
-      val cells = h.lats.length * nx
+      val values = slab(h, r0 until r1)
+      val cells = h.lats.length * h.lons.length
       // ONE row per timestep, carrying the step's value slab
       (r0 until r1).map { t =>
         val at = (t - r0) * cells
-        Row(h.path, t, h.epochs(t), nx, h.lats, h.lons,
+        Row(h.path, t, h.epochs(t), h.lons.length, h.lats, h.lons,
           java.util.Arrays.copyOfRange(values, at, at + cells))
       }
     }
@@ -482,17 +483,21 @@ object NetCdfClassic {
   /** [[readGrid]] with the interval diff (A1, `prcp[1:] - prcp[:-1]`,
     * wrf_data_pusher.py:63-65) taken inside the split reader:
     * `(path, t_idx, epoch_s, lat, lon, value, delta, lat6, lon6)`,
-    * one row per cell and step except each file's first record (it has
-    * no predecessor), `delta` = the cell's value minus its value at
-    * the previous RECORD, `lat6`/`lon6` the coordinates rendered
-    * `%.6f` (the Formatter and locale of Spark's `format_string`),
-    * formatted once per axis value per split instead of once per row.
-    * Each split also reads the record before its range, so no shuffle
-    * or sort is needed.
+    * one row per cell and record except each file's first in its
+    * header's time order ([[GridHeader.order]]: by epoch second, ties
+    * in record order), which has no predecessor; `delta` = the cell's
+    * value minus its value at the record before in that order,
+    * `lat6`/`lon6` the header's `%.6f` keys (the Formatter and locale of
+    * Spark's `format_string`). The splits are ranges of positions in the
+    * time order, and each also reads the record before its range, so no
+    * shuffle or sort is needed; in a file whose XTIME never steps back a
+    * split's records are one ascending run, read in one fetch.
     *
     * Equal to [[graft.operators.Timeseries.intervalDiff]] keyed by
-    * (file, lat6, lon6) and ordered by (epoch_s, t_idx) exactly when
-    * [[recordOrderBlocker]] finds nothing in any of `paths`. */
+    * (file, lat6, lon6) and ordered by (epoch_s, t_idx) whenever the
+    * 6-dp keys are distinct. A file whose lat or lon keys repeat would
+    * merge two grid points into one series: it is rejected on the
+    * driver, before the frame is built. */
   def readGridDiff(spark: SparkSession, paths: Seq[String],
                    valueVar: String = "RAINNC", latVar: String = "XLAT",
                    lonVar: String = "XLONG", timeVar: String = "XTIME",
@@ -503,23 +508,27 @@ object NetCdfClassic {
   /** [[readGridDiff]] over headers the caller has read. */
   def readGridDiff(spark: SparkSession, headers: Seq[GridHeader],
                    recordsPerSplit: Int): DataFrame = {
-    val rdd = gridSplits(spark, headers, recordsPerSplit).flatMap { case (h, r0, r1) =>
-      val lo = math.max(r0 - 1, 0) // the predecessor of the split's first step
-      val (nx, values) = slab(h, lo, r1)
-      val cells = h.lats.length * nx
-      val lat6 = h.lats.map(sixDp)
-      val lon6 = h.lons.map(sixDp)
-      (math.max(r0, 1) until r1).map { t =>
-        val at = (t - lo) * cells
+    for (h <- headers; (axis, keys) <- Seq("latitude" -> h.lat6, "longitude" -> h.lon6)) {
+      val repeated = keys.diff(keys.distinct)
+      require(repeated.isEmpty, s"${h.path}: repeated 6-dp $axis ${repeated.head}: " +
+        "two grid points would share one series")
+    }
+    val rdd = gridSplits(spark, headers, recordsPerSplit).flatMap { case (h, p0, p1) =>
+      val lo = math.max(p0 - 1, 0) // the predecessor of the split's first position
+      val values = slab(h, h.order.slice(lo, p1).toSeq)
+      val cells = h.lats.length * h.lons.length
+      (math.max(p0, 1) until p1).map { p =>
+        val at = (p - lo) * cells
         val delta = new Array[Double](cells)
         var i = 0
         while (i < cells) {
           delta(i) = values(at + i) - values(at - cells + i)
           i += 1
         }
-        Row(h.path, t, h.epochs(t), nx, h.lats, h.lons,
+        val t = h.order(p)
+        Row(h.path, t, h.epochs(t), h.lons.length, h.lats, h.lons,
           java.util.Arrays.copyOfRange(values, at, at + cells),
-          lat6, lon6, delta)
+          h.lat6, h.lon6, delta)
       }
     }
     val schema = StructType(stepFields ++ Seq(
@@ -532,37 +541,14 @@ object NetCdfClassic {
       element_at(col("lon6s"), x).as("lon6")))
   }
 
-  /** Why diffing the file at `path` in record order ([[readGridDiff]])
-    * could differ from [[graft.operators.Timeseries.intervalDiff]]
-    * keyed by (file, lat6, lon6) and ordered by (epoch_s, t_idx), or
-    * None when it cannot. The two agree when the epoch seconds never
-    * decrease in record order (ties keep record order, as the window's
-    * t_idx tie-break does) and the 6-dp lat keys are distinct, and so
-    * are the lon keys (otherwise two grid points would share one
-    * window series). */
-  def recordOrderBlocker(path: String, valueVar: String = "RAINNC",
-                         latVar: String = "XLAT", lonVar: String = "XLONG",
-                         timeVar: String = "XTIME"): Option[String] =
-    recordOrderBlocker(gridHeader(path, valueVar, latVar, lonVar, timeVar))
-
-  /** [[recordOrderBlocker]] over a header the caller has read. */
-  def recordOrderBlocker(h: GridHeader): Option[String] = {
-    def repeated(axis: String, vs: Array[Double]) =
-      vs.map(sixDp).groupBy(identity).collectFirst {
-        case (k, ks) if ks.length > 1 => s"${h.path}: repeated 6-dp $axis $k"
-      }
-    (1 until h.numRecs).find(r => h.epochs(r) < h.epochs(r - 1))
-      .map(r => s"${h.path}: time steps back at record $r")
-      .orElse(repeated("latitude", h.lats))
-      .orElse(repeated("longitude", h.lons))
-  }
-
   /** `%.6f` exactly as Spark's `format_string` renders a double. */
   private def sixDp(v: Double): String =
     String.format(java.util.Locale.US, "%.6f", Double.box(v))
 
-  /** (header, r0, r1) record-range splits of every file, planned on
-    * the driver and dealt round-robin: ordered by slot f + k·files for
+  /** (header, p0, p1) splits of every file's positions 0 until its
+    * record count (records for [[readGrid]], places in the time order
+    * for [[readGridDiff]]), planned on the driver and dealt
+    * round-robin: ordered by slot f + k·files for
     * split k of file f, the i-th goes to partition i mod P, with P the
     * split count capped at twice the cores. So files with equal record
     * counts fill every partition once before any partition gets a
@@ -585,15 +571,22 @@ object NetCdfClassic {
       .flatMap(identity)
   }
 
-  /** Records [r0, r1) of `h`'s value grid, row-major, and its x extent,
-    * read from one ranged fetch on the split's executor. */
-  private def slab(h: GridHeader, r0: Int, r1: Int): (Int, Array[Double]) =
+  /** Records `rs` of `h`'s value grid, row-major in the order of `rs`,
+    * read on the split's executor: one ranged fetch when `rs` is an
+    * ascending run, one per record otherwise. */
+  private def slab(h: GridHeader, rs: Seq[Int]): Array[Double] =
     withSeekable(h.path) { nc =>
-      val (shp, values) = nc.readRecords(h.valueVar, r0, r1)
-      require(shp.drop(1) == Seq(h.lats.length, h.lons.length),
-        s"${h.path}: ${h.valueVar} is ${shp.drop(1).mkString("×")} " +
-          s"but its header was ${h.lats.length}×${h.lons.length}")
-      (shp(2), values)
+      val ranges =
+        if (rs.indices.forall(i => rs(i) == rs.head + i)) Seq(rs.head -> (rs.last + 1))
+        else rs.map(r => r -> (r + 1))
+      val parts = ranges.map { case (r0, r1) =>
+        val (shp, values) = nc.readRecords(h.valueVar, r0, r1)
+        require(shp.drop(1) == Seq(h.lats.length, h.lons.length),
+          s"${h.path}: ${h.valueVar} is ${shp.drop(1).mkString("×")} " +
+            s"but its header was ${h.lats.length}×${h.lons.length}")
+        values
+      }
+      if (parts.size == 1) parts.head else Array.concat(parts: _*)
     }
 
   /** `XLAT[0, :, 0]` and `XLONG[0, 0, :]` — or the whole vector when

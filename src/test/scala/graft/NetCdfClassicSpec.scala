@@ -123,30 +123,45 @@ class NetCdfClassicSpec extends SparkSpec {
 
   test("readGridDiff equals readGrid → intervalDiff across split boundaries") {
     import org.apache.spark.sql.functions._
-    val f = Files.createTempFile("graft_diff", ".nc")
     val (ny, nx, nt) = (2, 3, 7)
-    // tied XTIME at records 2-3: the window orders ties by t_idx
-    val times = Array(0f, 15f, 30f, 30f, 45f, 60f, 75f)
     val values = Array.tabulate(nt * ny * nx)(i => (i / (ny * nx)) * (1.5f + i % 4))
-    graft.sources.NetCdfClassicWriter.writeWrfGrid(f.toString,
-      Array(6.0f, 6.25f), Array(79.0f, 79.125f, 79.25f), times,
-      "2020-01-01 00:00:00", "RAINNC", values)
-    assert(NetCdfClassic.recordOrderBlocker(f.toString).isEmpty)
-    val cols = Seq("path", "t_idx", "epoch_s", "lat", "lon", "value", "delta")
-    val expect = graft.operators.Timeseries.intervalDiff(
-        NetCdfClassic.readGrid(spark, Seq(f.toString))
-          .withColumn("cell", concat_ws("_", col("lat"), col("lon"))),
-        "cell", "epoch_s", "t_idx", "value")
-      .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    assert(expect.length === (nt - 1) * ny * nx)
-    for (perSplit <- Seq(1, 2, 3, 24)) {
-      val got = NetCdfClassic.readGridDiff(spark, Seq(f.toString), recordsPerSplit = perSplit)
-      assert(got.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq === expect,
-        s"recordsPerSplit=$perSplit")
-      assert(got.filter(col("lat6") =!= format_string("%.6f", col("lat")) ||
-        col("lon6") =!= format_string("%.6f", col("lon"))).isEmpty)
+    // tied XTIME at records 2-3: the window orders ties by t_idx; XTIME
+    // stepping back at records 3 and 5: the window orders by epoch_s
+    for (times <- Seq(Array(0f, 15f, 30f, 30f, 45f, 60f, 75f),
+                      Array(0f, 15f, 45f, 30f, 60f, 20f, 75f))) {
+      val f = Files.createTempFile("graft_diff", ".nc")
+      graft.sources.NetCdfClassicWriter.writeWrfGrid(f.toString,
+        Array(6.0f, 6.25f), Array(79.0f, 79.125f, 79.25f), times,
+        "2020-01-01 00:00:00", "RAINNC", values)
+      val order = NetCdfClassic.gridHeader(f.toString).order.toSeq
+      assert(order === (0 until nt).sortBy(t => (times(t), t)))
+      val cols = Seq("path", "t_idx", "epoch_s", "lat", "lon", "value", "delta")
+      val expect = graft.operators.Timeseries.intervalDiff(
+          NetCdfClassic.readGrid(spark, Seq(f.toString))
+            .withColumn("cell", concat_ws("_", col("lat"), col("lon"))),
+          "cell", "epoch_s", "t_idx", "value")
+        .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      assert(expect.length === (nt - 1) * ny * nx)
+      for (perSplit <- Seq(1, 2, 3, 24)) {
+        val got = NetCdfClassic.readGridDiff(spark, Seq(f.toString), recordsPerSplit = perSplit)
+        assert(got.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq === expect,
+          s"order=$order recordsPerSplit=$perSplit")
+        assert(got.filter(col("lat6") =!= format_string("%.6f", col("lat")) ||
+          col("lon6") =!= format_string("%.6f", col("lon"))).isEmpty)
+      }
+      Files.delete(f)
     }
-    Files.delete(f)
+  }
+
+  test("readGridDiff rejects a file whose latitudes share a 6-dp key, naming the key") {
+    val f = Files.createTempFile("graft_dup", ".nc").toString
+    // 6.8300001 and 6.8300004 as floats both render 6.830000
+    graft.sources.NetCdfClassicWriter.writeWrfGrid(f,
+      Array(6.8f, 6.8300001f, 6.8300004f), Array(79.0f, 79.125f), Array(0f, 15f, 30f),
+      "2020-01-01 00:00:00", "RAINNC", Array.tabulate(3 * 3 * 2)(i => (i / 6).toFloat))
+    val e = intercept[IllegalArgumentException](NetCdfClassic.readGridDiff(spark, Seq(f)))
+    assert(e.getMessage.contains(s"$f: repeated 6-dp latitude 6.830000"), e.getMessage)
+    Files.delete(java.nio.file.Paths.get(f))
   }
 
   /** A `ny`×`nx` WRF file of `nt` fifteen-minute records. */
@@ -208,7 +223,6 @@ class NetCdfClassicSpec extends SparkSpec {
     val full = wrfFile("graft_full", 3)
     val h = NetCdfClassic.gridHeader(empty)
     assert(h.numRecs === 0 && h.diffRows === 0L && h.diffKeys.isEmpty)
-    assert(NetCdfClassic.recordOrderBlocker(empty).isEmpty)
     assert(NetCdfClassic.readGridDiff(spark, Seq(empty)).count() === 0L)
     assert(NetCdfClassic.readGrid(spark, Seq(empty)).count() === 0L)
     assert(NetCdfClassic.readGridDiff(spark, Seq(empty, full)).count() === 2L * 6)

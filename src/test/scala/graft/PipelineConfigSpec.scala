@@ -33,6 +33,23 @@ class PipelineConfigSpec extends SparkSpec {
     assert(cfg.model === "WRF" && cfg.unit === "mm")
   }
 
+  test("systems that would read one file are rejected, naming it; one system needs no placeholder") {
+    val dir = Files.createTempDirectory("graft_cfg")
+    val p = dir.resolve("run.json")
+    def parse(systems: String) = {
+      Files.write(p, s"""{"nc_dir": "/n", "out_dir": "/o", "wrf_systems": $systems,
+        | "file_pattern": "d03_RAINNC.nc"}""".stripMargin.getBytes)
+      PipelineConfig.fromJson(p.toString)
+    }
+    val e = intercept[IllegalArgumentException](parse("\"A,C\""))
+    assert(e.getMessage.contains("/n/d03_RAINNC.nc is read by more than one"), e.getMessage)
+    assert(parse("\"A\"").ncPath("A") === "/n/d03_RAINNC.nc")
+    // a system listed twice reads its file twice
+    val twice = intercept[IllegalArgumentException](
+      PipelineConfig(ncDir = "/n", outDir = "/o", systems = Seq("A", "C", "A")))
+    assert(twice.getMessage.contains("/n/d03_RAINNC_A.nc"), twice.getMessage)
+  }
+
   test("legacy ncDir entry discovers every system present, not just the defaults") {
     val dir = Files.createTempDirectory("graft_disc").toString
     Pipeline.generateSyntheticRun(dir, ny = 2, nx = 2, nt = 3,

@@ -14,8 +14,7 @@ import graft.sources.{NetCdfClassic, NetCdfClassicWriter}
 /** `Pipeline.run` against the run as the window operators compute it:
   * readGrid → intervalDiff per (system, cell) → stationRegistry /
   * tmsId / fgtWatermark, and each domain's mean from its own diff.
-  * Outputs must be identical whichever diff path the run takes, and
-  * the path taken is recorded. */
+  * Outputs must be identical, a file whose XTIME steps back included. */
 class PipelineDiffSpec extends SparkSpec {
 
   private val Systems = Seq("A", "C", "E", "SE")
@@ -184,33 +183,27 @@ class PipelineDiffSpec extends SparkSpec {
     val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
       DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92))),
       DomainConfig("d01", D01)))
-    assert(res.diffPaths === Map(D03 -> "reader", D01 -> "reader"))
     assert(res.stations === 42L && res.seriesRows === 4L * 42 * 8 &&
       res.watermarks === 4L * 42)
   }
 
-  test("XTIME stepping back falls back to the window and gives its output") {
+  test("XTIME stepping back gives the window operators' output") {
     val dir = Files.createTempDirectory("graft_diff_back").toString
     writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
       Array(0f, 15f, 30f, 20f, 45f, 60f), storm)
-    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)))
-    assert(res.diffPaths(D03).startsWith("window: ") &&
-      res.diffPaths(D03).contains("steps back at record 3"), res.diffPaths)
+    assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)))
   }
 
-  test("a repeated 6-dp latitude falls back to the window and gives its output") {
+  test("a repeated 6-dp latitude is rejected before anything is written") {
     val dir = Files.createTempDirectory("graft_diff_lat").toString
-    // rows 1 and 2 share a latitude; their increments depend on the
-    // latitude, not the row, so the window's merged series has one
-    // order whatever its sort does with the tied rows
-    val lats = Array(6.8f, 6.83f, 6.83f, 6.86f)
-    writeRun(dir, D03, lats, grid(5, 79.9f, 0.05f), grid(6, 0f, 15f),
-      (k, t, y, x) => storm(k, t, if (y == 2) 1 else y, x))
-    // no bundles: the merged series keeps a first-record row for the
-    // shared cells only, which the positional bundle format rejects
-    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)), packaged = false)
-    assert(res.diffPaths(D03).startsWith("window: ") &&
-      res.diffPaths(D03).contains("repeated 6-dp latitude 6.830000"), res.diffPaths)
+    writeRun(dir, D03, Array(6.8f, 6.83f, 6.83f, 6.86f), grid(5, 79.9f, 0.05f),
+      grid(6, 0f, 15f), storm)
+    spark.catalog.clearCache()
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark,
+      config(dir, s"$dir/out", Seq(DomainConfig("d03", D03)))))
+    assert(e.getMessage.contains("repeated 6-dp latitude 6.830000"), e.getMessage)
+    assert(!new File(dir, "out/_rfields_staging").exists())
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("tied XTIME values keep the reader path (record order is the window's tie-break)") {
@@ -218,8 +211,7 @@ class PipelineDiffSpec extends SparkSpec {
     writeRun(dir, D03, grid(4, 6.8f, 0.03f), grid(5, 79.9f, 0.05f),
       Array(0f, 15f, 15f, 30f, 30f, 45f), storm)
     // bundles need one file per timestep, which tied steps cannot give
-    val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)), packaged = false)
-    assert(res.diffPaths === Map(D03 -> "reader"))
+    assertSameAsWindow(dir, Seq(DomainConfig("d03", D03)), packaged = false)
   }
 
   test("a system whose file holds one record contributes no series and no stations") {
@@ -230,7 +222,6 @@ class PipelineDiffSpec extends SparkSpec {
       systems = Seq("SE"))
     val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
       DomainConfig("basin", D03, Some((79.9, 6.8, 80.0, 6.86)))))
-    assert(res.diffPaths === Map(D03 -> "reader"))
     assert(res.stations === 20L && res.seriesRows === 3L * 20 * 5 && res.watermarks === 3L * 20)
     assert(res.perSystem === Map("A" -> 100L, "C" -> 100L, "E" -> 100L))
     // its bundle is an xy.csv-only bundle with no cell
@@ -247,7 +238,6 @@ class PipelineDiffSpec extends SparkSpec {
       systems = Seq("E", "SE"))
     val res = assertSameAsWindow(dir, Seq(DomainConfig("d03", D03),
       DomainConfig("basin", D03, Some((80.0, 6.85, 80.12, 6.92)))))
-    assert(res.diffPaths === Map(D03 -> "reader"))
     assert(res.stations === 8L * 7 && res.seriesRows === 4L * 42 * 4 && res.watermarks === 4L * 42)
   }
 
