@@ -27,7 +27,9 @@ import graft.sources.{NetCdfClassic, NetCdfClassicWriter}
   *
   * With no args, generates a synthetic 2-system WRF run (via
   * [[NetCdfClassicWriter]]) into a temp dir first, then processes it —
-  * a self-contained smoke of source → operators → sinks.
+  * a self-contained smoke of source → operators → sinks; the temp dir
+  * is removed once the run has printed its lines
+  * ([[withSyntheticRun]]).
   */
 object Pipeline {
 
@@ -50,23 +52,23 @@ object Pipeline {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), shufflePartitions = "8")
 
     def numeric(s: String) = s.matches("[0-9]+")
-    val cfg = args match {
-      case Array("--config", path) => PipelineConfig.fromJson(path)
+    def report(cfg: PipelineConfig): Unit = {
+      val t0 = System.nanoTime()
+      run(spark, cfg)
+      println(f"PIPELINE wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
+    args match {
+      case Array("--config", path) => report(PipelineConfig.fromJson(path))
       // DISCOVERY config, not the Seq("A","C") default: a directory
       // with A/C/E files must process all three — the default subset
       // would silently omit E from every mean, count, and watermark
-      case Array(a, b) if !numeric(a) || !numeric(b) => discoveryConfig(a, b)
+      case Array(a, b) if !numeric(a) || !numeric(b) => report(discoveryConfig(a, b))
       // numeric-guarded so a 3-token typo ("--config run.json
-      // --verbose") reaches the usage error below instead of leaking
-      // a temp dir and dying in toInt
+      // --verbose") reaches the usage error below instead of dying in
+      // toInt
       case Array(ny, nx, nt) if Seq(ny, nx, nt).forall(numeric) =>
-        val d = java.nio.file.Files.createTempDirectory("graft_pipeline")
-        generateSyntheticRun(d.toString, ny.toInt, nx.toInt, nt.toInt)
-        PipelineConfig(ncDir = d.toString, outDir = s"$d/out")
-      case Array() => // no args: default synthetic demo run
-        val d = java.nio.file.Files.createTempDirectory("graft_pipeline")
-        generateSyntheticRun(d.toString)
-        PipelineConfig(ncDir = d.toString, outDir = s"$d/out")
+        withSyntheticRun(ny.toInt, nx.toInt, nt.toInt)(report)
+      case Array() => withSyntheticRun()(report) // default synthetic demo run
       case other =>
         // fail loud: a malformed invocation must not silently
         // fabricate and process a synthetic run the operator
@@ -78,10 +80,21 @@ object Pipeline {
             "       Pipeline <ncDir> <outDir>\n" +
             "       Pipeline --config <path>")
     }
-    val t0 = System.nanoTime()
-    run(spark, cfg)
-    println(f"PIPELINE wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
     spark.stop()
+  }
+
+  /** A synthetic run ([[generateSyntheticRun]]) in a fresh
+    * `graft_pipeline*` directory under `java.io.tmpdir`, handed to
+    * `body` as a config that writes into its `out/`; the directory,
+    * inputs and outputs alike, is deleted when `body` returns or
+    * throws. */
+  def withSyntheticRun[A](ny: Int = 4, nx: Int = 6, nt: Int = 25)
+                         (body: PipelineConfig => A): A = {
+    val d = java.nio.file.Files.createTempDirectory("graft_pipeline")
+    try {
+      generateSyntheticRun(d.toString, ny, nx, nt)
+      body(PipelineConfig(ncDir = d.toString, outDir = s"$d/out"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 
   /** WRF systems × nt steps × ny×nx grid of cumulative rainfall

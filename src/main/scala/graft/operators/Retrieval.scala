@@ -25,12 +25,13 @@ import org.apache.spark.sql.functions._
   * bucketed rows in one job, scoring over the query terms'
   * bucket-pruned Σ df(term) posting rows), semantic top-k from the
   * written index ([[Similarity.ivfTopKFromIndex]] — partition-pruned
-  * probed lists), rank-only RRF fusion ([[TextAnalysis.rrfFuse]] —
-  * BM25 scores and cosines are incommensurable), and MMR
-  * diversification of the fused page ([[Similarity.mmrGreedy]] with
-  * the RRF s6 score as the scale-6 integer relevance — the standard
-  * MMR-over-fused-page composition; the sim matrix reads only the
-  * page's ≤ kLex+kSem vectors via a pushed-down id filter).
+  * probed lists), rank-only RRF fusion ([[TextAnalysis.rrfFuse]]'s
+  * arithmetic on the driver — BM25 scores and cosines are
+  * incommensurable), and MMR diversification of the fused page
+  * ([[Similarity.mmrPicks]] with the RRF s6 score as the scale-6
+  * integer relevance — the standard MMR-over-fused-page composition;
+  * the sim matrix reads only the page's ≤ kLex+kSem vectors via a
+  * pushed-down id filter).
   *
   * Scale posture: serve-time work is Σ df(term) posting rows
   * (bucket-pruned), nprobe/nlist of the vector index (pruned at the
@@ -78,18 +79,22 @@ object Retrieval {
     * query ids exclude themselves on the semantic side (the
     * ivfTopKFromIndex contract).
     *
-    * Driver-job shape: one stats job (lexical dfs+meta), then
-    * mmrGreedy's two bounded collects. The first runs the fused-page
-    * lineage ONCE — the |terms|-task posting scan, the probe-list
-    * broadcast and the pruned list scan, the fusion windows — and the
-    * second the page's sim matrix over its id-filtered vectors. No
-    * job reads index metadata: the query id and the semantic probe
-    * come from the query's driver rows, the centroids and the lists
-    * schema from the IVF index's cached handle
+    * Driver-job shape: Spark only scans the index. The two legs run
+    * at once ([[Par.run]]) and are collected — the lexical leg's stats
+    * job, its |terms|-task posting scan and top-k; the semantic leg's
+    * probe-list broadcast, pruned list scan and rank window — then one
+    * id-filtered read of the page's vectors ([[Similarity.mmrPicks]]).
+    * Everything after the scans is ≤ kLex + kSem rows on the driver:
+    * the RRF fusion ([[TextAnalysis.rrfFuseLocal]]), the sim matrix
+    * (the join's sim_u expression, evaluated interpreted), the greedy,
+    * and the answer, a local relation in rank order whose collect runs
+    * no job. No job reads index metadata: the query id and the
+    * semantic probe come from the query's driver rows, the centroids
+    * and the lists schema from the IVF index's cached handle
     * ([[Similarity.ivfTopKFromIndex]]). A warm page over a local query
-    * frame is 11 jobs (spec-pinned). rrf_score = rel_u/1e6 exactly,
-    * since rel_u = s6 and s6 ≤ ~2e6·k is held exactly by the
-    * double. */
+    * frame is 7 jobs (spec-pinned). rrf_score = s6/1e6 exactly, since
+    * s6 ≤ ~2e6·k is held exactly by the double. The page is computed
+    * when this returns. */
   def serve(spark: SparkSession, table: String, path: String,
             emb: DataFrame, queryVec: DataFrame,
             cfg: ServeConfig): DataFrame =
@@ -220,9 +225,6 @@ object Retrieval {
           .cast("double") / lit(1e6)).as("ndcg"))
   }
 
-  /** The shared page pipeline; `vecs` is a prepared non-zero vector
-    * frame (the [[graft.operators.Similarity.prepared]] shape) for
-    * the MMR rerank's sim matrix. */
   /** F32: second-stage LINEAR rerank of a fused retrieval page — the
     * standard two-stage serving shape (candidate generation, then a
     * calibrated learning-to-rank model over per-candidate features;
@@ -379,17 +381,8 @@ object Retrieval {
     import spark.implicits._
     graft.functions.VecExprs.register(spark)
     require(cfg.terms.nonEmpty, "serveLtr needs at least one query term")
-    val lex = TextAnalysis.bm25TopKFromIndex(spark, table,
-      cfg.terms, cfg.kLex).select(col("doc_id"), col("rank"))
-    val sem = Similarity.ivfTopKFromIndex(spark, s"$path/ivf", queryVec,
-        cfg.kSem, nprobe = cfg.nprobe)
-      .select(col("n_id").as("doc_id"), col("rank"))
-    val fused = TextAnalysis.rrfFuse(lex, sem, cfg.kRrf,
-      topK = cfg.kLex + cfg.kSem)
-    // the page is ≤ kLex+kSem rows — bounded driver metadata
-    val pageRows = fused.select(col("doc_id"),
-        round(col("rrf_score") * lit(1e6), 0).cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+    // the fused page (doc_id, s6 = rrf6) — ≤ kLex+kSem driver rows
+    val pageRows = fusedPage(spark, table, path, queryVec, cfg)
     val ids = pageRows.map(_._1)
     if (ids.isEmpty)
       return Seq.empty[(Long, Double, Long)]
@@ -533,32 +526,46 @@ object Retrieval {
       wRrf = w.getLong(0), wQ = w.getLong(1), wCos = w.getLong(2))
   }
 
+  /** Both legs of a page, collected at once, fused on the driver: the
+    * lexical top-kLex ([[TextAnalysis.bm25TopKFromIndex]], its stats
+    * job included) and the semantic top-kSem
+    * ([[Similarity.ivfTopKFromIndex]]) in one [[Par.run]], then
+    * [[TextAnalysis.rrfFuseLocal]]. `(doc_id, s6)` in rank order,
+    * ≤ kLex + kSem rows; a page's rrf_score is s6 / 1e6. */
+  private def fusedPage(spark: SparkSession, table: String, path: String,
+                        queryVec: DataFrame,
+                        cfg: ServeConfig): Seq[(Long, Long)] = {
+    def ranked(df: DataFrame): Seq[(Long, Long)] =
+      df.select(col("doc_id"), col("rank").cast("long")).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1)))
+    val Seq(lex, sem) = Par.run(Seq(
+      () => ranked(TextAnalysis.bm25TopKFromIndex(spark, table, cfg.terms,
+        cfg.kLex)),
+      () => ranked(Similarity.ivfTopKFromIndex(spark, s"$path/ivf", queryVec,
+          cfg.kSem, nprobe = cfg.nprobe)
+        .select(col("n_id").as("doc_id"), col("rank")))))
+    TextAnalysis.rrfFuseLocal(lex, sem, cfg.kRrf, topK = cfg.kLex + cfg.kSem)
+  }
+
+  /** The shared page pipeline; `vecs` is a prepared non-zero vector
+    * frame (the [[graft.operators.Similarity.prepared]] shape) for
+    * the MMR rerank's sim matrix. */
   private def page(spark: SparkSession, table: String, path: String,
                    vecs: DataFrame, queryVec: DataFrame,
                    cfg: ServeConfig): DataFrame = {
     require(cfg.terms.nonEmpty, "serve needs at least one query term")
-    val lex = TextAnalysis.bm25TopKFromIndex(spark, table,
-      cfg.terms, cfg.kLex).select(col("doc_id"), col("rank"))
-    val sem = Similarity.ivfTopKFromIndex(spark, s"$path/ivf", queryVec,
-        cfg.kSem, nprobe = cfg.nprobe)
-      .select(col("n_id").as("doc_id"), col("rank"))
-    // the whole fused page (≤ kLex + kSem docs) is the MMR candidate
-    // set; rrf_score = s6/1e6 with s6 ≤ ~2e6·k — the double holds it
-    // exactly, so s6 recovers exactly
-    val fused = TextAnalysis.rrfFuse(lex, sem, cfg.kRrf,
-      topK = cfg.kLex + cfg.kSem)
     val qRows = queryVec.select(col("vec_id")).limit(2).collect()
     require(qRows.length == 1,
       s"serve answers exactly ONE query vector, got ${qRows.length} rows")
-    // the query id as a plan reference, not a literal: the stage's
-    // generated code then stays the same for every query
-    val qId = graft.functions.ServeExprs.longParam(spark, qRows(0).getLong(0))
-    val cand = fused.select(qId.as("q_id"), col("doc_id").as("n_id"),
-      round(col("rrf_score") * 1e6, 0).cast("long").as("rel_u"))
-    Similarity.mmrGreedy(spark, vecs, cand, cfg.kOut, cfg.lamN, cfg.lamD)
-      .select(col("q_id"), col("doc_id"),
-        (col("rel_u").cast("double") / lit(1e6)).as("rrf_score"),
-        col("mmr_score"), col("rank"))
-      .orderBy(col("rank"))
+    val qId = qRows(0).getLong(0)
+    // the whole fused page (≤ kLex + kSem docs) is the MMR candidate
+    // set, its s6 the scale-6 relevance; rrf_score = s6/1e6 with
+    // s6 ≤ ~2e6·k, which the double holds exactly
+    val cand = fusedPage(spark, table, path, queryVec, cfg)
+      .map { case (d, s6) => (qId, d, s6) }
+    import spark.implicits._
+    Similarity.mmrPicks(vecs, cand, cfg.kOut, cfg.lamN, cfg.lamD)
+      .map { case (q, d, relU, mmr, rank) => (q, d, relU.toDouble / 1e6, mmr, rank) }
+      .toDF("q_id", "doc_id", "rrf_score", "mmr_score", "rank")
   }
 }

@@ -450,37 +450,45 @@ object Similarity {
 
   /** The MMR greedy core over an EXPLICIT candidate frame
     * `(q_id, n_id, rel_u)` — rel_u any scale-6 integer relevance
-    * ([[mmrTopK]] passes the scale-6 cosine; the composed
-    * [[graft.operators.Retrieval]] serve passes the RRF s6 score, the
-    * standard MMR-over-fused-page composition). Same split of labor,
+    * ([[mmrTopK]] passes the scale-6 cosine). Same split of labor,
     * exactness, and output contract as [[mmrTopK]]'s scaladoc: the
-    * candidate×candidate sim matrix is computed DISTRIBUTED from the
-    * prepared vector frame `p`, collected as scale-6 longs (bounded —
-    * guarded below on the exact Σ per-query candidates² the collect
-    * materializes), and the greedy argmax compares exact BIGINTs with
-    * doc-id tie-break. */
+    * candidate frame is collected through a hard limit (so the collect
+    * itself is bounded, and the candidate lineage executes exactly
+    * once), then [[mmrPicks]] runs the greedy. */
   private[graft] def mmrGreedy(spark: org.apache.spark.sql.SparkSession,
                                p: DataFrame, cand: DataFrame, kOut: Int,
                                lamN: Long, lamD: Long): DataFrame = {
-    require(kOut > 0, s"kOut=$kOut must be positive")
-    require(lamD > 0 && lamN >= 0 && lamN <= lamD,
-      s"λ=$lamN/$lamD must be a rational in [0, 1]")
     import spark.implicits._
-    // guard fold (r10 verdict ask #2): the candidate frame is
-    // collected ONCE through a hard limit (so the collect itself is
-    // bounded), then the exact Σ_q c_q² sim ceiling is checked on the
-    // driver from the rows in hand — the old separate guard aggregate
-    // job is gone, and the candidate lineage (in the composed serve,
-    // the whole fused page pipeline) executes exactly once instead of
-    // once per downstream branch.
     val relCeiling = 4 << 20 // ~4M (q, n, rel) rows ≈ 100 MB, max
-    val simCeiling = 64L << 20 // ~64M sim longs ≈ 512 MB of rows, max
     val relRows = cand.select(col("q_id"), col("n_id"), col("rel_u"))
       .limit(relCeiling + 1).collect()
     require(relRows.length <= relCeiling,
       s"mmrGreedy would collect more than $relCeiling candidate rows " +
         "to the driver; page the query set or shrink the candidate pages")
-    val rels = relRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // rel_u rides along so a caller can recover its relevance without
+    // a join-back; mmrTopK drops it
+    mmrPicks(p, relRows.toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+        kOut, lamN, lamD)
+      .toDF("q_id", "doc_id", "rel_u", "mmr_score", "rank")
+      .repartition(1)
+  }
+
+  /** The MMR greedy over candidate rows `(q_id, n_id, rel_u)` already
+    * on the driver (the composed [[graft.operators.Retrieval]] serve
+    * passes its driver-fused page with the RRF s6 score as rel_u, the
+    * standard MMR-over-fused-page composition): `(q_id, doc_id, rel_u,
+    * mmr_score, rank)` per pick, each query's picks in rank order. The
+    * candidate×candidate sim matrix comes from the prepared vector
+    * frame `p` ([[mmrSims]]; its size is guarded below on the exact
+    * Σ per-query candidates²), and the greedy argmax compares exact
+    * BIGINTs with doc-id tie-break. */
+  private[graft] def mmrPicks(p: DataFrame, rels: Seq[(Long, Long, Long)],
+                              kOut: Int, lamN: Long, lamD: Long)
+      : Seq[(Long, Long, Long, Double, Long)] = {
+    require(kOut > 0, s"kOut=$kOut must be positive")
+    require(lamD > 0 && lamN >= 0 && lamN <= lamD,
+      s"λ=$lamN/$lamD must be a rational in [0, 1]")
+    val simCeiling = 64L << 20 // ~64M sim longs ≈ 512 MB of rows, max
     val byQ = rels.groupBy(_._1)
     val simRows = byQ.valuesIterator
       .map(rows => rows.length.toLong * rows.length).sum
@@ -488,33 +496,7 @@ object Similarity {
       s"mmrGreedy would collect $simRows sim rows to the driver " +
         s"(ceiling $simCeiling); page the query set or shrink " +
         "the candidate pages")
-    // candidate×candidate cosine matrix, same-query pairs only — the
-    // pair list is built from the ALREADY-COLLECTED ids (a local
-    // frame, broadcast against `p`), so only the vector joins and the
-    // codegen dot run distributed. The vector side is filtered by the
-    // same ids, so an index-backed `p` scans with `vec_id IN (…)`
-    // pushed down instead of reading every committed vector (past
-    // idFilterCeiling distinct ids the literal list would cost more
-    // than it prunes, and the joins alone select the rows)
-    val ids = rels.map(r => (r._1, r._2)).toSeq.toDF("q_id", "n_id")
-    val candIds = rels.map(_._2).distinct
-    val pc =
-      if (candIds.length <= idFilterCeiling) p.filter(col("vec_id").isin(candIds: _*))
-      else p
-    val sims = ids.as("x").join(ids.as("y"),
-        col("x.q_id") === col("y.q_id") && col("x.n_id") < col("y.n_id"))
-      .select(col("x.q_id").as("q_id"), col("x.n_id").as("a_id"),
-        col("y.n_id").as("b_id"))
-      .join(pc.select(col("vec_id").as("a_id"), col("v").as("a_v"),
-        col("n2").as("a_n2")), Seq("a_id"))
-      .join(pc.select(col("vec_id").as("b_id"), col("v").as("b_v"),
-        col("n2").as("b_n2")), Seq("b_id"))
-      .select(col("q_id"), col("a_id"), col("b_id"),
-        round(round(cosineFromParts(dot(col("a_v"), col("b_v")),
-          col("a_n2"), col("b_n2")), 6) * 1e6, 0).cast("long").as("sim_u"))
-    val simMap = sims.collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
-      .toMap
+    val simMap = mmrSims(p, rels)
     // a candidate with no (non-zero) vector in `p` has no sim rows —
     // possible for lexical-only docs in the composed serve. A missing
     // pair is SKIPPED in the max (unknown similarity contributes no
@@ -528,7 +510,7 @@ object Similarity {
     // bruteForceTopK), so there the distinction never fires.
     def sim(q: Long, a: Long, b: Long): Option[Long] =
       if (a < b) simMap.get((q, a, b)) else simMap.get((q, b, a))
-    val out = byQ.toSeq.flatMap { case (q, rows) =>
+    byQ.toSeq.flatMap { case (q, rows) =>
       val relOf = rows.map(r => r._2 -> r._3).toMap
       var remaining = rows.map(_._2).sorted.toVector
       var picked = Vector.empty[Long]
@@ -549,14 +531,85 @@ object Similarity {
       }
       acc.result()
     }
-    // rel_u rides along so the composed serve can recover its
-    // rrf_score without a join-back; mmrTopK drops it
-    out.toDF("q_id", "doc_id", "rel_u", "mmr_score", "rank")
-      .repartition(1)
   }
 
-  /** Most distinct candidate ids [[mmrGreedy]] pushes into its vector
-    * scan as an `IN` list (a serve page holds ≤ kLex + kSem). */
+  /** A candidate pair's scale-6 cosine in micro-units over
+    * `(a_v, a_n2, b_v, b_n2)` — the one sim_u spelling of the MMR
+    * matrix, on the driver and distributed. */
+  private def simU: Column =
+    round(round(cosineFromParts(dot(col("a_v"), col("b_v")),
+      col("a_n2"), col("b_n2")), 6) * 1e6, 0).cast("long")
+
+  /** The MMR candidate×candidate matrix `(q_id, a_id, b_id) → sim_u`,
+    * same-query pairs with a_id < b_id whose two candidates both have
+    * a row in `p`.
+    *
+    * Up to [[idFilterCeiling]] distinct candidates (a serve page holds
+    * ≤ kLex + kSem): ONE read of their vectors, `vec_id IN (…)`
+    * pushed down so an index-backed `p` scans only those rows, then
+    * every pair's sim_u on the driver — [[simU]] analysed once over
+    * the pair's column types and evaluated interpreted (the
+    * [[graft.functions.VecExprs.nearestCentroidsLocal]] posture), so
+    * each value is the distributed join's bit for bit. No row carries
+    * two vectors and no join is planned. Past the ceiling the literal
+    * list would cost more than it prunes: the pair list is built from
+    * the collected ids (a local frame), and the vector joins and the
+    * codegen dot run distributed. */
+  private[graft] def mmrSims(p: DataFrame, rels: Seq[(Long, Long, Long)])
+      : Map[(Long, Long, Long), Long] = {
+    val spark = p.sparkSession
+    import spark.implicits._
+    val candIds = rels.map(_._2).distinct
+    if (candIds.length > idFilterCeiling) {
+      val ids = rels.map(r => (r._1, r._2)).toDF("q_id", "n_id")
+      ids.as("x").join(ids.as("y"),
+          col("x.q_id") === col("y.q_id") && col("x.n_id") < col("y.n_id"))
+        .select(col("x.q_id").as("q_id"), col("x.n_id").as("a_id"),
+          col("y.n_id").as("b_id"))
+        .join(p.select(col("vec_id").as("a_id"), col("v").as("a_v"),
+          col("n2").as("a_n2")), Seq("a_id"))
+        .join(p.select(col("vec_id").as("b_id"), col("v").as("b_v"),
+          col("n2").as("b_n2")), Seq("b_id"))
+        .select(col("q_id"), col("a_id"), col("b_id"), simU.as("sim_u"))
+        .collect()
+        .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
+        .toMap
+    } else {
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+      import org.apache.spark.sql.catalyst.plans.logical.Project
+      import org.apache.spark.sql.types.{StructField, StructType}
+      val pc = p.filter(col("vec_id").isin(candIds: _*))
+        .select(col("vec_id"), col("v"), col("n2"))
+      val vecs = pc.collect().map(r => r.getLong(0) ->
+          (org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+            .fromPrimitiveArray(r.getSeq[Double](1).toArray), r.getDouble(2)))
+        .toMap
+      val (vt, nt) = (pc.schema("v").dataType, pc.schema("n2").dataType)
+      val pairs = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField("a_v", vt), StructField("a_n2", nt),
+          StructField("b_v", vt), StructField("b_n2", nt))))
+      val simExpr = pairs.select(simU).queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), child) =>
+          BindReferences.bindReference(e, child.output)
+        case other => throw new IllegalStateException(
+          s"sim_u did not analyse to one projection: $other")
+      }
+      (for {
+        (q, rows) <- rels.groupBy(_._1).iterator
+        ids = rows.map(_._2).distinct.filter(vecs.contains).sorted
+        i <- ids.indices.iterator
+        j <- (i + 1 until ids.length).iterator
+        (av, an2) = vecs(ids(i))
+        (bv, bn2) = vecs(ids(j))
+        // a null cosine (a zero-norm row in `p`) is an unknown pair
+        s <- Option(simExpr.eval(InternalRow(av, an2, bv, bn2)))
+      } yield (q, ids(i), ids(j)) -> s.asInstanceOf[Long]).toMap
+    }
+  }
+
+  /** Most distinct candidate ids [[mmrSims]] pushes into its vector
+    * read as an `IN` list (a serve page holds ≤ kLex + kSem). */
   private val idFilterCeiling = 4096
 
   /** [[prepared]] exposed for [[graft.operators.Retrieval]]'s MMR

@@ -1033,7 +1033,9 @@ object TextAnalysis {
     *
     * Scale shape: inputs are two top-k frames, so everything here is
     * O(k) rows — the single-partition rank window is bounded by
-    * construction (≤ 2k candidates), never a corpus sort. */
+    * construction (≤ 2k candidates), never a corpus sort. The serves
+    * fuse collected legs with [[rrfFuseLocal]], the same arithmetic
+    * on the driver. */
   def rrfFuse(lex: DataFrame, sem: DataFrame, kRrf: Int = 60,
               topK: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1050,6 +1052,21 @@ object TextAnalysis {
         (col("s6").cast("double") / lit(1e6)).as("rrf_score"),
         col("rank").cast("bigint").as("rank"))
   }
+
+  /** [[rrfFuse]] on the driver, for two ranked `(doc_id, rank)` lists
+    * already in hand: the same scale-6 term
+    * `(2·10⁶ + (kRrf + r)) div (2·(kRrf + r))` per row, summed in exact
+    * longs per doc, ranked by (s6 desc, doc_id) and cut at `topK`.
+    * Returns `(doc_id, s6)` in rank order; rrfFuse's `rrf_score` is
+    * s6 / 1e6 and its `rank` the position. A serve page fuses ≤ 2k
+    * rows, so this runs no Spark job. */
+  def rrfFuseLocal(lex: Seq[(Long, Long)], sem: Seq[(Long, Long)],
+                   kRrf: Int = 60, topK: Int = 20): Seq[(Long, Long)] =
+    (lex ++ sem)
+      .groupMapReduce(_._1) { case (_, r) =>
+        (2L * 1000000L + (kRrf + r)) / (2L * (kRrf + r)) }(_ + _)
+      .toSeq.sortBy { case (d, s6) => (-s6, d) }
+      .take(topK)
 
   def bm25TopKAgainst(spark: org.apache.spark.sql.SparkSession,
                       table: String, docs: DataFrame,

@@ -158,7 +158,7 @@ class IndexServeSpec extends SparkSpec {
     info(s"warm knn: $knnJobs jobs, warm page: $pageJobs jobs")
     // ±2: the BenchCountersSpec band for AQE stage-submission races
     assert(math.abs(knnJobs - 3) <= 2, s"warm knn ran $knnJobs jobs: $knnStages")
-    assert(math.abs(pageJobs - 11) <= 2, s"warm page ran $pageJobs jobs: $pageStages")
+    assert(math.abs(pageJobs - 7) <= 2, s"warm page ran $pageJobs jobs: $pageStages")
     val inference = (knnStages ++ pageStages).filter(_.startsWith("parquet at"))
     assert(inference.isEmpty, s"schema-inference jobs on a warm serve: $inference")
     Seq("_df", "_meta", "_post").foreach(sfx =>

@@ -362,4 +362,21 @@ class PipelineDiffSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(out.list().toSet === Set("rfields"))
   }
+
+  test("a synthetic run's directory is gone once its body returns or throws") {
+    var dir: File = null
+    val res = Pipeline.withSyntheticRun(3, 4, 5) { cfg =>
+      dir = new File(cfg.ncDir)
+      assert(new File(dir, "d03_RAINNC_A.nc").isFile)
+      val r = Pipeline.run(spark, cfg)
+      assert(new File(cfg.outDir, "rfields").isDirectory)
+      r
+    }
+    assert(res.stations === 12L && !dir.exists())
+    val e = intercept[IllegalStateException](Pipeline.withSyntheticRun() { cfg =>
+      dir = new File(cfg.ncDir)
+      throw new IllegalStateException("a failed run")
+    })
+    assert(e.getMessage === "a failed run" && !dir.exists())
+  }
 }

@@ -85,6 +85,67 @@ class RetrievalServeSpec extends SparkSpec {
     assert(again.map(_.toSeq).toSeq === page.map(_.toSeq).toSeq)
   }
 
+  test("driver RRF fusion ≡ rrfFuse: shared, one-leg and tied docs, an empty lexical leg") {
+    import spark.implicits._
+    // (doc_id, rrf_score, rank) both ways; ranks are ints, as the legs' row_number
+    def fused(lex: Seq[(Long, Int)], sem: Seq[(Long, Int)], topK: Int) = {
+      val viaSpark = TextAnalysis.rrfFuse(lex.toDF("doc_id", "rank"),
+          sem.toDF("doc_id", "rank"), 60, topK)
+        .orderBy("rank").collect().toSeq
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+      val viaDriver = TextAnalysis.rrfFuseLocal(
+          lex.map { case (d, r) => (d, r.toLong) },
+          sem.map { case (d, r) => (d, r.toLong) }, 60, topK)
+        .zipWithIndex.map { case ((d, s6), i) => (d, s6.toDouble / 1e6, i + 1L) }
+      assert(viaDriver === viaSpark, s"lex=$lex sem=$sem topK=$topK")
+      viaDriver
+    }
+    // 1 and 4 on both legs, 2/3/5 lexical-only, 6/7 semantic-only; 10
+    // and 9 each hold one rank-1 term, so their s6 ties and 9 goes first
+    val lex = Seq(10L -> 1, 2L -> 2, 3L -> 3, 1L -> 4, 4L -> 5, 5L -> 6)
+    val sem = Seq(9L -> 1, 4L -> 2, 6L -> 3, 1L -> 4, 7L -> 5)
+    val all = fused(lex, sem, 20)
+    assert(all.size === 9 && all.map(_._1).indexOf(9L) + 1 === all.map(_._1).indexOf(10L))
+    assert(all.count(_._2 == all.find(_._1 == 9L).get._2) === 2)
+    assert(fused(lex, sem, 3).size === 3 && fused(lex, Nil, 20).size === lex.size)
+    assert(fused(Nil, Nil, 20).isEmpty)
+    // the serve's own legs, a query term set the vocabulary lacks included
+    val p = servePath
+    for (ts <- Seq(terms, Seq("zzqx_not_a_term"))) {
+      def ranks(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("doc_id"), col("rank")).as[(Long, Int)].collect().toSeq
+      val lexLeg = ranks(TextAnalysis.bm25TopKFromIndex(spark, "serve_spec_bm25", ts, 20))
+      val semLeg = ranks(Similarity.ivfTopKFromIndex(spark, s"$p/ivf", query, 20, nprobe = 4)
+        .select(col("n_id").as("doc_id"), col("rank")))
+      assert(semLeg.nonEmpty && lexLeg.isEmpty === (ts != terms))
+      assert(fused(lexLeg, semLeg, 40).nonEmpty)
+    }
+  }
+
+  test("a page ≡ its distributed spelling: rrfFuse over the legs, mmrGreedy over the fused frame") {
+    val p = servePath
+    val vecs = Similarity.readIndexVectors(spark, s"$p/ivf").filter(col("n2") > 0)
+    for (ts <- Seq(terms, Seq("zzqx_not_a_term"))) {
+      val cfg = Retrieval.ServeConfig(ts, nprobe = 4)
+      val lex = TextAnalysis.bm25TopKFromIndex(spark, "serve_spec_bm25", ts, cfg.kLex)
+        .select(col("doc_id"), col("rank"))
+      val sem = Similarity.ivfTopKFromIndex(spark, s"$p/ivf", query, cfg.kSem,
+          nprobe = cfg.nprobe)
+        .select(col("n_id").as("doc_id"), col("rank"))
+      val cand = TextAnalysis.rrfFuse(lex, sem, cfg.kRrf, topK = cfg.kLex + cfg.kSem)
+        .select(lit(0L).as("q_id"), col("doc_id").as("n_id"),
+          round(col("rrf_score") * 1e6, 0).cast("long").as("rel_u"))
+      val want = Similarity.mmrGreedy(spark, vecs, cand, cfg.kOut, cfg.lamN, cfg.lamD)
+        .select(col("q_id"), col("doc_id"),
+          (col("rel_u").cast("double") / lit(1e6)).as("rrf_score"),
+          col("mmr_score"), col("rank"))
+        .orderBy(col("rank")).collect().toSeq.map(_.toSeq)
+      val got = Retrieval.serveFromIndex(spark, "serve_spec_bm25", p, query, cfg)
+        .collect().toSeq.map(_.toSeq)
+      assert(got === want && got.size === cfg.kOut, s"terms $ts")
+    }
+  }
+
   test("posting-list serve reads Σ df(term) rows through pruned buckets, never the corpus") {
     val p = servePath // force artifact build
     assert(p.nonEmpty)

@@ -792,6 +792,32 @@ class SimilaritySpec extends SparkSpec {
     assert(out(2)._2 === 1800000.0 / 2e6)
   }
 
+  test("MMR sim matrix: the driver's sim_u ≡ the distributed join's, bit for bit, negative cosines included") {
+    val rnd = new scala.util.Random(11)
+    val n = 4200
+    val base = (0 until n).map(i =>
+      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat), "x"))
+    // an exact opposite of vector 0 (cos −1) and a copy of vector 1 (cos 1)
+    val vs = base ++ Seq((n.toLong, base(0)._2.map(-_), "x"),
+      (n + 1L, base(1)._2.clone(), "x"))
+    val p = Similarity.preparedNonZeroFrame(vs.toDF("vec_id", "embedding", "label"))
+    // ten candidates per query, the two specials with their twins in
+    // query 0, and a candidate with no vector in query 1
+    val rels = (0L until n).map(i => (i / 10, i, 0L)) ++
+      Seq((0L, n.toLong, 0L), (0L, n + 1L, 0L), (1L, 99999L, 0L))
+    // n + 3 distinct candidates are past the id-filter ceiling: this
+    // call joins distributed; each chunk of 200 queries (≤ 2002
+    // candidates) is under it and computes its pairs on the driver
+    val joined = Similarity.mmrSims(p, rels)
+    val driver = rels.groupBy(_._1).toSeq.sortBy(_._1).grouped(200)
+      .map(qs => Similarity.mmrSims(p, qs.flatMap(_._2)))
+      .reduce(_ ++ _)
+    assert(driver === joined)
+    assert(driver.size === 419 * 45 + 66)
+    assert(driver((0L, 0L, n.toLong)) === -1000000L && driver((0L, 1L, n + 1L)) === 1000000L)
+    assert(driver.values.count(_ < 0) > driver.size / 3)
+  }
+
   test("E10 knnGraph: complete ranked graph, consistent with E1 on its query set") {
     val real = Tables.embeddings(spark, sfDir)
     val k = 5
