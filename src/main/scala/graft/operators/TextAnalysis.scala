@@ -1061,7 +1061,7 @@ object TextAnalysis {
     * s6 / 1e6 and its `rank` the position. A serve page fuses ≤ 2k
     * rows, so this runs no Spark job. */
   def rrfFuseLocal(lex: Seq[(Long, Long)], sem: Seq[(Long, Long)],
-                   kRrf: Int = 60, topK: Int = 20): Seq[(Long, Long)] =
+                   kRrf: Int, topK: Int): Seq[(Long, Long)] =
     (lex ++ sem)
       .groupMapReduce(_._1) { case (_, r) =>
         (2L * 1000000L + (kRrf + r)) / (2L * (kRrf + r)) }(_ + _)
