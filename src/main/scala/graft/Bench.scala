@@ -54,18 +54,6 @@ object Bench {
       .trim.split("\\s+").take(3).toSeq.map(_.toDouble)
     catch { case scala.util.control.NonFatal(_) => Seq.empty }
 
-  /** Catalog entries the bench SKIPS (they stay in Verify and the
-    * recall gate — this is a bench-cost decision, not a coverage cut;
-    * r14 verdict #7): the graph-serve family was paying THREE bench
-    * lines for one serve path — the in-memory anchor (full-corpus
-    * probe per hop BY DESIGN, the non-deploy recall baseline) and the
-    * indexed catalog entry (a full knnGraphAnn build + artifact land
-    * per rep). The benched graph numbers are now the attributable
-    * idx_graph_* block: build / serve / paged serve / streaming
-    * ingest, each costed separately. */
-  private val benchExclude: Set[String] =
-    Set("ann_graph_topk", "ann_graph_topk_indexed", "ann_graph_topk_seeded")
-
   /** noop-sink wall time of one plan — the same materialization rule
     * as the catalog loop (see Methodology). */
   private[graft] def timeNoop(fn: () => org.apache.spark.sql.DataFrame): Double = {
@@ -92,19 +80,19 @@ object Bench {
     // round's bench line (the serve/pipeline benches already drop
     // failed entries); shared timeNoop so the timing bracket can't
     // drift between the catalog loop and the serve bench
-    // sorted-name order: catalog Map iteration is hash-arbitrary, and
-    // entries that share a memo (bpe_train/bpe_encode) would otherwise
-    // split their cost by whichever happened to run first — sorted
-    // order makes every entry's number reproducible run-over-run
+    // runOrderKey order: entries that share a memo (bpe_train/
+    // bpe_encode) would otherwise split their cost by whichever
+    // happened to run first — a fixed order makes every entry's number
+    // reproducible run-over-run
+    def benched(mode: SparkEntry.Benched => Boolean): Seq[SparkEntry.Query] =
+      SparkEntry.catalog.filter(q => mode(q.bench)).sortBy(q => SparkEntry.runOrderKey(q.name))
     def runAll(dir: String, record: Boolean): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(kv => SparkEntry.runOrderKey(kv._1))
-        .filterNot(kv => benchExclude(kv._1))
-        .flatMap { case (name, fn) =>
-        try Some(name -> (
-          if (record) counters.record(name)(timeNoop(() => fn(spark, dir)))
-          else timeNoop(() => fn(spark, dir))))
+      benched(_ != SparkEntry.Benched.Skip).flatMap { q =>
+        try Some(q.name -> (
+          if (record) counters.record(q.name)(timeNoop(() => q.build(spark, dir)))
+          else timeNoop(() => q.build(spark, dir))))
         catch { case scala.util.control.NonFatal(e) =>
-          if (record) System.err.println(s"[bench] $name FAILED, no entry: ${e.getMessage}")
+          if (record) System.err.println(s"[bench] ${q.name} FAILED, no entry: ${e.getMessage}")
           None
         }
       }.toMap
@@ -125,11 +113,12 @@ object Bench {
 
     // the D3 family (ngram-jaccard lineage) swings ±26% between
     // identical-code runs on this box (PERF.md r10: same-day A/B) —
-    // enough to read as a regression when it is ambient load. These
-    // three get an ISOLATED re-measure: back-to-back reps of only the
-    // entry, more of them, medianed — the number future rounds should
-    // diff, carried as its own block so the headline totals stay
-    // comparable with r1-r10 lines.
+    // enough to read as a regression when it is ambient load. Its
+    // entries and the knn family (SparkEntry.Benched.Isolated) get an
+    // ISOLATED re-measure: back-to-back reps of only the entry, more of
+    // them, medianed — the number future rounds should diff, carried as
+    // its own block so the headline totals stay comparable with r1-r10
+    // lines.
     // toIntOption: a malformed env value degrades to the default
     // like every other failure in this block, instead of killing
     // the whole bench run outside the per-entry handler
@@ -139,28 +128,19 @@ object Bench {
     // isolated block's 80.2 s knn_components_ann outlier was
     // attributable only by builder folklore — now the committed
     // artifact carries every rep this block measured)
-    val driftIsoReps: Map[String, Seq[Double]] = {
-      // knn_* joined r13 (r12 verdict #3): the 8.78→10.54 s
-      // knn_components_ann driver-run delta read as a regression while
-      // the same-day local run said improved — isolated medians settle
-      // variance-vs-code for the whole family round-over-round
-      val names = Seq("dedup_ngram_jaccard", "dedup_survivors", "dedup_cluster",
-        "knn_graph", "knn_graph_ann", "knn_components", "knn_components_ann")
-      names.flatMap { name =>
-        SparkEntry.queries.get(name).flatMap { fn =>
-          try {
-            val times = (1 to isoReps).map { _ =>
-              clearCaches()
-              timeNoop(() => fn(spark, sfDir))
-            }
-            Some(name -> times)
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] isolated $name FAILED: ${e.getMessage}")
-            None
+    val driftIsoReps: Map[String, Seq[Double]] =
+      benched(_ == SparkEntry.Benched.Isolated).flatMap { q =>
+        try {
+          val times = (1 to isoReps).map { _ =>
+            clearCaches()
+            timeNoop(() => q.build(spark, sfDir))
           }
+          Some(q.name -> times)
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] isolated ${q.name} FAILED: ${e.getMessage}")
+          None
         }
       }.toMap
-    }
     val driftIso = driftIsoReps.map { case (n, ts) => n -> median(ts) }
     clearCaches()
     val loadPostIso = loadAvg()
@@ -177,9 +157,9 @@ object Bench {
     // ONE per-name rep collection — results medians and the
     // rep-detail record both derive from it
     val catalogReps: Map[String, Seq[Double]] =
-      SparkEntry.queries.keys.flatMap { name =>
-        val ok = runs.flatMap(_.get(name))
-        if (ok.isEmpty) None else Some(name -> ok)
+      SparkEntry.catalog.flatMap { q =>
+        val ok = runs.flatMap(_.get(q.name))
+        if (ok.isEmpty) None else Some(q.name -> ok)
       }.toMap
     val results =
       catalogReps.map { case (n, ok) => n -> median(ok) } ++

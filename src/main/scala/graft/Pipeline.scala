@@ -273,7 +273,7 @@ object Pipeline {
           for (d <- domains.filter(_.filePattern == p); s <- cfg.systems)
             yield RfieldSink.Bundle(s"${domainDir("rfields_packaged", d)}/$s",
               col("system") === s && inBbox(d), s"${cfg.model}_${s}_${cfg.version}",
-              Some(cells(d, s))),
+              cells(d, s)),
           s"${cfg.outDir}/_rfields_staging", "t")
       })
       // 4. the registry (A9), the series rows and the fgt watermarks

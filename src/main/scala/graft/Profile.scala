@@ -26,18 +26,9 @@ object Profile {
         s""""sf":${Jsons.str(sfDir)}}"""
   }
 
-  /** An error naming every entry of `names` the catalog lacks, with
-    * the available names; None when all are catalog entries. */
-  private[graft] def unknownNames(names: Seq[String]): Option[String] = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    if (unknown.isEmpty) None
-    else Some(s"unknown entry ${unknown.mkString("'", "', '", "'")}; available: " +
-      SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-  }
-
   private[graft] def profile(spark: SparkSession, counters: BenchCounters,
                              sfDir: String, entry: String, reps: Int = 5): Result = {
-    val fn = SparkEntry.queries(entry)
+    val fn = SparkEntry.query(entry).build
     val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
     Bench.clearAllCaches(spark)
     Bench.timeNoop(() => fn(spark, sfDir)) // untimed warm-up: JIT and codegen
@@ -56,7 +47,7 @@ object Profile {
     }
     val sfDir = args.head
     val entries = args.toSeq.tail
-    unknownNames(entries).foreach { msg => System.err.println(msg); sys.exit(2) }
+    SparkEntry.unknownNames(entries).foreach { msg => System.err.println(msg); sys.exit(2) }
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val counters = new BenchCounters(spark.sparkContext)
     // per-entry catch (the Bench.runAll posture): one entry's failure

@@ -4,7 +4,7 @@ import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** rfield file output — the reference's end product: one text file per
@@ -37,12 +37,11 @@ object RfieldSink {
   /** One bundle of [[writePackaged]]: the directory it is written to
     * (zipped into `{dir}.zip`), the predicate on the field's columns
     * that selects its rows, its value files' name prefix
-    * `{model}_{system}_{version}`, and its (lon, lat) cells when the
-    * caller knows that each of its timesteps holds each of them exactly
-    * once (a netCDF grid read in record order: every record holds the
-    * header's grid). */
+    * `{model}_{system}_{version}`, and its (lon, lat) cells: each of
+    * its timesteps must hold each of them exactly once (a netCDF grid
+    * read in record order: every record holds the header's grid). */
   final case class Bundle(dir: String, holds: Column, prefix: String,
-                          cells: Option[Seq[(Double, Double)]] = None)
+                          cells: Seq[(Double, Double)])
 
   /** Write `rfield` (must carry `lon`, `lat`, `value` + `timeCol`) as
     * space-separated text partitioned by `timeCol`. The shuffle gets
@@ -139,59 +138,32 @@ object RfieldSink {
     * Distributed where it matters: the rows are tagged with their
     * bundles, shuffled once on the timestep and written sorted by Spark
     * in one write partitioned by (bundle, timestep), into `staging`
-    * (removed on every exit path). A bundle that lists its cells gets
-    * its xy.csv from them; one aggregate over the bundles that do not
-    * yields their cells with their row and timestep counts, and runs
-    * only when there is such a bundle. Only the O(#timesteps) file
-    * renames, the O(#cells) xy.csv, and the zip run on the driver — the
-    * zip is inherently a single-stream artifact (it exists to be
-    * scp'd), not a data-path operation.
+    * (removed on every exit path). A bundle's xy.csv comes from its
+    * listed cells. Only the O(#timesteps) file renames, the O(#cells)
+    * xy.csv, and the zip run on the driver — the zip is inherently a
+    * single-stream artifact (it exists to be scp'd), not a data-path
+    * operation.
     *
     * The value-only format is positional, so every timestep of a bundle
-    * must hold every cell of the bundle exactly once: each cell must
-    * have one row in each of the bundle's staged timesteps. This is
-    * checked for every bundle that does not list its cells before any
-    * bundle is moved into place, and a gap fails fast rather than
-    * silently misaligning every later line. */
+    * must hold every listed cell exactly once; the caller vouches for
+    * that ([[Bundle]]), and nothing here re-counts it. */
   def writePackaged(rfield: DataFrame, bundles: Seq[Bundle], staging: String,
                     timeCol: String): Unit = {
     val rows = tagged(byTimestep(rfield, timeCol), bundles.map(_.holds))
       .select(col(TagCol), col(timeCol), col("lon"), col("lat"),
         round(col("value").cast("double"), 3).as("value"))
     staged(rows, staging, timeCol, "lon", "lat") { (fs, stagedDir) =>
-      // the cells of the bundles that do not list theirs, with their
-      // rows and distinct timesteps; no Spark job when every bundle does
-      val counted = (
-        if (bundles.forall(_.cells.isDefined)) Map.empty[Int, Array[Row]]
-        else tagged(rfield, bundles.map(b => if (b.cells.isEmpty) b.holds else lit(false)))
-          .groupBy(col(TagCol), col("lon"), col("lat"))
-          .agg(count(lit(1)).as("n"), countDistinct(col(timeCol)).as("steps"))
-          .collect()
-          .sortBy(r => (r.getAs[Number](1).doubleValue, r.getAs[Number](2).doubleValue))
-          .groupBy(_.getInt(0)) // keeps the (lon, lat) order within a bundle
-        ).withDefaultValue(Array.empty)
-      // each bundle's staged value files by timestep
-      val steps = bundles.indices.map(i =>
-        fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*")).map(_.getPath)
-          .groupBy(_.getParent.getName.stripPrefix(s"$timeCol=").toLong))
-      // a cell with one row in each of its bundle's timesteps: the
-      // distinct count catches a duplicated cell masking a missing one
-      val bad = bundles.indices.flatMap(i => counted(i)
-        .filter(r => r.getLong(3) != steps(i).size || r.getLong(4) != steps(i).size)
-        .map(r => s"${bundles(i).dir} of ${steps(i).size} timesteps: $r"))
-      require(bad.isEmpty, "bundles have cells not in each of their timesteps exactly " +
-        s"once (value-only files would misalign): ${bad.take(5).mkString(", ")}")
       for ((b, i) <- bundles.zipWithIndex) {
+        val steps = fs.globStatus(new Path(stagedDir(i), s"$timeCol=*/part-*")).map(_.getPath)
+          .groupBy(_.getParent.getName.stripPrefix(s"$timeCol=").toLong)
         // Path.getFileSystem's fs, not URI.new (the Retention rationale:
         // a space in a dir is a legal path but an illegal URI)
         val out = new Path(b.dir)
         fs.delete(out, true); fs.mkdirs(out)
-        val cells = b.cells.fold(counted(i).toSeq.map(r => s"${r.get(1)},${r.get(2)}"))(
-          _.sorted.map { case (lon, lat) => s"$lon,$lat" })
         val xy = fs.create(new Path(out, "xy.csv"))
-        try cells.foreach(line => xy.write(s"$line\n".getBytes("UTF-8")))
+        try b.cells.sorted.foreach { case (lon, lat) => xy.write(s"$lon,$lat\n".getBytes("UTF-8")) }
         finally xy.close()
-        for ((t, parts) <- steps(i)) {
+        for ((t, parts) <- steps) {
           require(parts.length == 1, s"expected 1 file for $timeCol=$t, got ${parts.length}")
           val dest = new Path(out, s"${b.prefix}_${lkStamp(t)}.txt")
           // rename returns false (no throw) when dest exists — e.g. two

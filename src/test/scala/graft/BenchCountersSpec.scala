@@ -11,7 +11,7 @@ class BenchCountersSpec extends SparkSpec {
   private lazy val counters = new BenchCounters(spark.sparkContext)
 
   private def runCounted(name: String): BenchCounters.Snapshot = {
-    val fn = SparkEntry.queries(name)
+    val fn = SparkEntry.query(name).build
     Bench.clearAllCaches(spark)
     counters.record(name)(
       fn(spark, sfDir).write.format("noop").mode("overwrite").save())

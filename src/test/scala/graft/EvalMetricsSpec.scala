@@ -167,7 +167,7 @@ class EvalMetricsSpec extends SparkSpec {
   }
 
   test("catalog entry (ARI): lexical vs semantic near-dup components over the corpus") {
-    val out = SparkEntry.queries("eval_clustering_ari")(spark, sfDir)
+    val out = SparkEntry.query("eval_clustering_ari").build(spark, sfDir)
       .collect().head
     assert(out.getLong(0) > 0L)
     // an ARI is always in [-1, 1]; the synthetic corpus plants its
@@ -177,7 +177,7 @@ class EvalMetricsSpec extends SparkSpec {
   }
 
   test("catalog entry (pairs): LSH is high-precision against sub-threshold truth, misses marginal pairs") {
-    val out = SparkEntry.queries("eval_dedup_metrics")(spark, sfDir)
+    val out = SparkEntry.query("eval_dedup_metrics").build(spark, sfDir)
       .collect().head
     val (tp, fp, fn) = (out.getLong(0), out.getLong(1), out.getLong(2))
     assert(tp > 0L, "no true positives — the corpus should have near-dups")
@@ -187,7 +187,7 @@ class EvalMetricsSpec extends SparkSpec {
   }
 
   test("catalog entry: one row per system, fused page retrieves semantic mass bm25 alone may not") {
-    val out = SparkEntry.queries("eval_retrieval_metrics")(spark, sfDir)
+    val out = SparkEntry.query("eval_retrieval_metrics").build(spark, sfDir)
       .collect().map(x => x.getString(0) -> x.getDouble(2)).toMap
     assert(out.keySet === Set("bm25", "rrf"))
     // rrf fuses the reference list itself into the page, so its

@@ -428,7 +428,7 @@ class GraphIndexSpec extends SparkSpec {
       s"seeded hop-0 recall $s2 below frozen-entry $f2 at hops=2")
     // and at the serve defaults the seeded flavor holds well above
     // the catalog floor 0.75 (measured .94 at sf0.001 / .84 at
-    // sf0.01 — the recallChecks comment's source)
+    // sf0.01 — the source of the catalog record's comment)
     val s6 = recall(6, seeded = true)
     assert(s6 >= 0.85, s"seeded recall $s6 at defaults below the " +
       "measured sf0.001 band (.94)")

@@ -337,8 +337,8 @@ class PipelineDiffSpec extends SparkSpec {
     // the run's 2 and 5 for the bundles: the diff, read by the mean
     // and the bundles, is cached (3: its fill, the count's map stage
     // and result), and the bundle pass is the sums' exchange and the
-    // write of every bundle (2), with no coverage aggregate on the
-    // reader path; a write or a check per bundle adds to it
+    // write of every bundle (2); a write or a check per bundle adds to
+    // it
     assert(all === 7L, s"warm run jobs: $started")
     assert(bundleJobs === oneBundleJobs)
   }

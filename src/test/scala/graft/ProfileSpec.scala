@@ -14,9 +14,9 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("an unknown entry name fails with the list of available names") {
-    assert(Profile.unknownNames(Seq("knn_pagerank")) === None)
-    val msg = Profile.unknownNames(Seq("knn_pagerank", "no_such_entry")).get
+    assert(SparkEntry.unknownNames(Seq("knn_pagerank")) === None)
+    val msg = SparkEntry.unknownNames(Seq("knn_pagerank", "no_such_entry")).get
     assert(msg.startsWith("unknown entry 'no_such_entry'; available: "))
-    assert(SparkEntry.queries.keys.forall(msg.contains))
+    assert(SparkEntry.catalog.forall(q => msg.contains(q.name)))
   }
 }

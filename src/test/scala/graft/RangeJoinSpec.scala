@@ -49,7 +49,7 @@ class RangeJoinSpec extends SparkSpec {
   test("A21 catalog entry plans as a shuffled equi-join, never cartesian/BNLJ") {
     // the ACTUAL benched/verified entry, not a spec-local re-spelling
     // that could silently drift from it
-    val joined = SparkEntry.queries("ts_range_join")(spark, sfDir)
+    val joined = SparkEntry.query("ts_range_join").build(spark, sfDir)
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoop"), plan.take(2000))

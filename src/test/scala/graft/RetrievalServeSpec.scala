@@ -52,7 +52,7 @@ class RetrievalServeSpec extends SparkSpec {
             nprobe = 8)
           .select(col("n_id").as("doc_id"), col("rank")))
       .orderBy("rank").collect().toSeq.map(_.toSeq)
-    val fusedCatalog = SparkEntry.queries("retrieval_hybrid_rrf")(spark, sfDir)
+    val fusedCatalog = SparkEntry.query("retrieval_hybrid_rrf").build(spark, sfDir)
       .orderBy("rank").collect().toSeq.map(_.toSeq)
     assert(fusedFrozen === fusedCatalog)
   }

@@ -107,7 +107,8 @@ class RfieldSinkSpec extends SparkSpec {
       ((lon, lat), i) <- cells.zipWithIndex
     } yield (t, lon, lat, (k * 10 + i) + 0.125)).toDF("t", "lon", "lat", "value")
     val dir = Files.createTempDirectory("rfield_pkg").toString + "/d03"
-    RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0")), s"${dir}_staging", "t")
+    RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0", cells)),
+      s"${dir}_staging", "t")
 
     val xy = Files.readAllLines(Paths.get(dir, "xy.csv")).asScala.toList
     assert(xy === List("79.0,6.0", "79.0,6.5", "79.5,6.0", "79.5,6.5")) // (lon,lat) sorted
@@ -139,81 +140,25 @@ class RfieldSinkSpec extends SparkSpec {
     // epochs 0 and 30 both stamp to LK 1970-01-01_05-30; the second
     // rename returns false (dest exists) and must throw, not silently
     // ship a bundle with a step missing
-    val rf = (for {
-      t <- Seq(0L, 30L); (lon, lat) <- Seq((79.0, 6.0), (79.5, 6.0))
-    } yield (t, lon, lat, 1.0)).toDF("t", "lon", "lat", "value")
+    val cells = Seq((79.0, 6.0), (79.5, 6.0))
+    val rf = (for (t <- Seq(0L, 30L); (lon, lat) <- cells)
+      yield (t, lon, lat, 1.0)).toDF("t", "lon", "lat", "value")
     val dir = Files.createTempDirectory("rfield_dup").toString + "/d03"
     val e = intercept[IllegalArgumentException] {
-      RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0")), s"${dir}_staging", "t")
+      RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0", cells)),
+        s"${dir}_staging", "t")
     }
     assert(e.getMessage.contains("rename"))
     assert(!Files.exists(Paths.get(s"${dir}_staging")))
   }
 
-  test("writePackaged rejects a timestep with missing cells (would misalign)") {
-    val rf = Seq(
-      (0L, 79.0, 6.0, 1.0), (0L, 79.5, 6.0, 2.0),
-      (900L, 79.0, 6.0, 3.0) // missing cell (79.5, 6.0)
-    ).toDF("t", "lon", "lat", "value")
-    val dir = Files.createTempDirectory("rfield_bad").toString + "/d03"
-    val e = intercept[IllegalArgumentException] {
-      RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0")), s"${dir}_staging", "t")
-    }
-    assert(e.getMessage.contains("misalign"))
-  }
-
-  test("writePackaged rejects timesteps complete by count but holding disjoint cells") {
-    // each timestep holds two cells, but not the same two: every cell
-    // is in one timestep of two, so xy.csv's line i would name
-    // different cells in the two value files
-    val rf = Seq(
-      (0L, 79.0, 6.0, 1.0), (0L, 79.5, 6.0, 2.0),
-      (900L, 80.0, 6.0, 3.0), (900L, 80.5, 6.0, 4.0)
-    ).toDF("t", "lon", "lat", "value")
-    val dir = Files.createTempDirectory("rfield_disjoint").toString + "/d03"
-    val e = intercept[IllegalArgumentException] {
-      RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0")), s"${dir}_staging", "t")
-    }
-    assert(e.getMessage.contains("misalign"))
-    assert(!Files.exists(Paths.get(dir)) && !Files.exists(Paths.get(s"${dir}_staging")))
-  }
-
-  test("writePackaged rejects a bundle whose cells repeat in one timestep and miss another") {
-    // each cell has two rows, as many as there are timesteps, but both
-    // in one timestep
-    val rf = Seq(
-      (0L, 79.0, 6.0, 1.0), (0L, 79.0, 6.0, 2.0),
-      (900L, 79.5, 6.0, 3.0), (900L, 79.5, 6.0, 4.0)
-    ).toDF("t", "lon", "lat", "value")
-    val dir = Files.createTempDirectory("rfield_repeat").toString + "/d03"
-    val e = intercept[IllegalArgumentException] {
-      RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(dir, lit(true), "WRF_A_4.0")), s"${dir}_staging", "t")
-    }
-    assert(e.getMessage.contains("misalign"))
-  }
-
-  test("writePackaged checks every bundle before moving any into place") {
-    // bundle 0 is whole, bundle 1 misses a cell at t=900: neither lands
-    val rf = Seq(
-      ("A", 0L, 79.0, 6.0, 1.0), ("A", 0L, 79.5, 6.0, 2.0),
-      ("A", 900L, 79.0, 6.0, 3.0), ("A", 900L, 79.5, 6.0, 4.0),
-      ("C", 0L, 79.0, 6.0, 1.0), ("C", 0L, 79.5, 6.0, 2.0), ("C", 900L, 79.0, 6.0, 3.0)
-    ).toDF("system", "t", "lon", "lat", "value")
-    val root = Files.createTempDirectory("rfield_two").toString
-    val e = intercept[IllegalArgumentException] {
-      RfieldSink.writePackaged(rf, Seq("A", "C").map(s =>
-        RfieldSink.Bundle(s"$root/$s", $"system" === s, s"WRF_${s}_4.0")), s"$root/_staging", "t")
-    }
-    assert(e.getMessage.contains(s"$root/C") && e.getMessage.contains("misalign"))
-    assert(Files.list(Paths.get(root)).count() === 0L)
-  }
-
   test("writePackaged writes a bundle that holds no row as an xy.csv-only bundle beside a full one") {
-    val rf = (for (t <- Seq(0L, 900L); (lon, lat) <- Seq((79.0, 6.0), (79.5, 6.0)))
+    val cells = Seq((79.0, 6.0), (79.5, 6.0))
+    val rf = (for (t <- Seq(0L, 900L); (lon, lat) <- cells)
       yield (t, lon, lat, t / 900 + lon)).toDF("t", "lon", "lat", "value")
     val root = Files.createTempDirectory("rfield_empty").toString
-    RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(s"$root/all", lit(true), "WRF_A_4.0"),
-      RfieldSink.Bundle(s"$root/none", $"lon" > 90.0, "WRF_A_4.0")), s"$root/_staging", "t")
+    RfieldSink.writePackaged(rf, Seq(RfieldSink.Bundle(s"$root/all", lit(true), "WRF_A_4.0", cells),
+      RfieldSink.Bundle(s"$root/none", $"lon" > 90.0, "WRF_A_4.0", Nil)), s"$root/_staging", "t")
     def names(dir: String) = Files.list(Paths.get(dir)).iterator().asScala
       .map(_.getFileName.toString).filterNot(_.startsWith(".")).toList.sorted
     assert(names(s"$root/all") === List("WRF_A_4.0_1970-01-01_05-30.txt",
@@ -226,23 +171,21 @@ class RfieldSinkSpec extends SparkSpec {
     assert(names(root) === List("all", "all.zip", "none", "none.zip"))
   }
 
-  test("writePackaged writes a bundle that lists its cells as it writes the counted one, without the aggregate") {
+  test("writePackaged sorts a bundle's listed cells into xy.csv by (lon, lat)") {
     val cells = Seq((79.0, 6.0), (79.0, 6.5), (79.5, 6.0), (79.5, 6.5))
     val rf = (for (t <- Seq(0L, 900L, 1800L); ((lon, lat), i) <- cells.zipWithIndex)
       yield (t, lon, lat, t / 900 * 10 + i + 0.125)).toDF("t", "lon", "lat", "value")
     val root = Files.createTempDirectory("rfield_listed").toString
-    val counters = new BenchCounters(spark.sparkContext)
-    counters.record("counted")(RfieldSink.writePackaged(rf,
-      Seq(RfieldSink.Bundle(s"$root/counted", lit(true), "WRF_A_4.0")), s"$root/_staging", "t"))
-    counters.record("listed")(RfieldSink.writePackaged(rf,
-      Seq(RfieldSink.Bundle(s"$root/listed", lit(true), "WRF_A_4.0", Some(cells.reverse))),
-      s"$root/_staging", "t"))
+    RfieldSink.writePackaged(rf, Seq(
+      RfieldSink.Bundle(s"$root/sorted", lit(true), "WRF_A_4.0", cells),
+      RfieldSink.Bundle(s"$root/reversed", lit(true), "WRF_A_4.0", cells.reverse)),
+      s"$root/_staging", "t")
     def files(dir: String) = Files.list(Paths.get(dir)).iterator().asScala
       .filterNot(_.getFileName.toString.startsWith("."))
       .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
-    assert(files(s"$root/listed").keySet.size === 4)
-    assert(files(s"$root/listed") === files(s"$root/counted"))
-    assert(counters.all("listed").jobs < counters.all("counted").jobs,
-      s"${counters.all("listed").jobs} jobs listed, ${counters.all("counted").jobs} counted")
+    assert(files(s"$root/reversed").keySet.size === 4)
+    assert(files(s"$root/reversed") === files(s"$root/sorted"))
+    assert(new String(files(s"$root/reversed")("xy.csv").toArray, "UTF-8") ===
+      "79.0,6.0\n79.0,6.5\n79.5,6.0\n79.5,6.5\n")
   }
 }

@@ -82,14 +82,14 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("D11 catalog entry finds the planted duplicates") {
-    val pairs = SparkEntry.queries("dedup_substring")(spark, sfDir)
+    val pairs = SparkEntry.query("dedup_substring").build(spark, sfDir)
     assert(pairs.count() > 0L, "planted near-duplicates must share 23-token runs")
   }
 
   test("D11 capped catalog entry: cap engages, survivors are a subset") {
-    val capped = SparkEntry.queries("dedup_substring_capped")(spark, sfDir)
+    val capped = SparkEntry.query("dedup_substring_capped").build(spark, sfDir)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val uncapped = SparkEntry.queries("dedup_substring")(spark, sfDir)
+    val uncapped = SparkEntry.query("dedup_substring").build(spark, sfDir)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(capped.nonEmpty, "capped flavor must keep the non-boilerplate pairs")
     assert(capped.subsetOf(uncapped),

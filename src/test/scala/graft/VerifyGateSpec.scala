@@ -1,5 +1,7 @@
 package graft
 
+import SparkEntry.{Oracle, Query, RowsOnly}
+
 /** The empty-rows-only gate: the DuckDB hash compare only audits
   * queries with an oracle mirror, so [[Verify.floorFailures]] is what
   * turns "a rows-only query silently emptied" into a hard non-zero
@@ -9,14 +11,16 @@ package graft
   * return rows. */
 class VerifyGateSpec extends SparkSpec {
 
-  private val rowsOnly: Set[String] =
-    SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+  private val rowsOnly: Seq[String] =
+    SparkEntry.catalog.collect { case Query(n, _, _: RowsOnly, _) => n }
 
   // every count sits AT its declared floor (or a floor-free 100), so
   // the baseline is green however tight the static floors get
   private def greenCounts: Map[String, Long] =
-    SparkEntry.queries.keysIterator
-      .map(q => q -> SparkEntry.rowFloors.getOrElse(q, 100L)).toMap
+    SparkEntry.catalog.map {
+      case Query(n, _, r: RowsOnly, _) if r.floor > 1L => n -> r.floor
+      case q => q.name -> 100L
+    }.toMap
 
   test("entry smoke: SparkEntry.entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0, "SparkEntry.entry returned no rows")
@@ -24,9 +28,6 @@ class VerifyGateSpec extends SparkSpec {
 
   test("the catalog still has rows-only queries for the gate to guard") {
     assert(rowsOnly.nonEmpty)
-    // every declared floor names a real rows-only query — a floor on
-    // an oracle-able (or renamed) query would silently check nothing
-    assert(SparkEntry.rowFloors.keySet.subsetOf(rowsOnly))
   }
 
   test("all queries at or above floor → no failures") {
@@ -46,13 +47,26 @@ class VerifyGateSpec extends SparkSpec {
   }
 
   test("an oracle-able query emptying is NOT this gate's job (hash gate owns it)") {
-    val oracleQ = SparkEntry.oracleSql.keySet.head
+    val oracleQ = SparkEntry.catalog.collectFirst { case Query(n, _, _: Oracle, _) => n }.get
     assert(Verify.floorFailures(greenCounts.updated(oracleQ, 0L)) === Seq.empty)
   }
 
   test("static pair floors name real rows-only queries with non-trivial minimums") {
-    assert(SparkEntry.rowFloors.nonEmpty)
-    assert(SparkEntry.rowFloors.values.forall(_ > 1L))
+    val floors = SparkEntry.catalog.collect {
+      case Query(n, _, r: RowsOnly, _) if r.floor != 1L => n -> r.floor
+    }
+    assert(floors.nonEmpty)
+    assert(floors.forall(_._2 > 1L))
+  }
+
+  test("a pair entry one row below its static floor fails; at it passes") {
+    val floor = SparkEntry.query("dedup_embedding_lsh").check match {
+      case r: RowsOnly => r.floor
+      case c => fail(s"dedup_embedding_lsh is rows-only, not $c")
+    }
+    assert(Verify.floorFailures(greenCounts.updated("dedup_embedding_lsh", floor - 1)) ===
+      Seq(s"dedup_embedding_lsh: ${floor - 1} rows < floor $floor (rows-only regression)"))
+    assert(Verify.floorFailures(greenCounts.updated("dedup_embedding_lsh", floor)) === Seq.empty)
   }
 
   test("a top-k serve returning k/2 of its exact expected rows fails the gate") {
@@ -72,26 +86,17 @@ class VerifyGateSpec extends SparkSpec {
     assert(fails.size === 1 && fails.head.contains("!= exact expected 50"))
   }
 
-  test("a computed floor breached fails; met passes (rows-only entry)") {
-    // mm_frame_sample carried this floor until its r11 oracle (the
-    // hash gate owns it now — floorFailures SKIPS oracled queries, so
-    // the mechanism is exercised on a still-rows-only entry)
-    val fl = Map("mm_video_phash" -> 167L)
-    assert(Verify.floorFailures(greenCounts.updated("mm_video_phash", 100L),
-      computedFloors = fl).size === 1)
-    assert(Verify.floorFailures(greenCounts.updated("mm_video_phash", 167L),
-      computedFloors = fl) === Seq.empty)
-  }
-
   test("recall checks gate real rows-only queries against oracle-able baselines") {
-    assert(SparkEntry.recallChecks.keySet.subsetOf(rowsOnly))
-    assert(SparkEntry.recallChecks.values.forall { case (base, floor) =>
-      SparkEntry.oracleSql.contains(base) && floor > 0.0 && floor <= 1.0 })
+    val gates = SparkEntry.catalog.collect { case Query(_, _, RowsOnly(_, _, Some(g)), _) => g }
+    assert(gates.nonEmpty)
+    assert(gates.forall { g =>
+      SparkEntry.query(g.baseline).check.isInstanceOf[Oracle] && g.floor > 0.0 && g.floor <= 1.0 })
   }
 
   test("a recall below its floor, or an uncomputable recall, fails the gate") {
-    val green: Map[String, Option[Double]] =
-      SparkEntry.recallChecks.map { case (q, _) => q -> Some(1.0) }
+    val green: Map[String, Option[Double]] = SparkEntry.catalog.collect {
+      case Query(n, _, RowsOnly(_, _, Some(_)), _) => n -> Some(1.0)
+    }.toMap
     assert(Verify.recallFailures(green) === Seq.empty)
     // halve ann_lsh_topk's recall (floor 0.55): hard signal
     val halved = Verify.recallFailures(green.updated("ann_lsh_topk", Some(0.31)))
