@@ -75,15 +75,17 @@ object Retrieval {
     * kOut rows (fewer only if the fused page itself is smaller).
     * `queryVec` is a one-row (vec_id, embedding) frame — enforced
     * (a multi-row frame would silently duplicate probe rows inside
-    * the per-query rank window); its vec_id becomes q_id. In-corpus
+    * the per-query ranking); its vec_id becomes q_id. In-corpus
     * query ids exclude themselves on the semantic side (the
     * ivfTopKFromIndex contract).
     *
     * Driver-job shape: Spark only scans the index. The two legs run
     * at once ([[Par.run]]) and are collected — the lexical leg's stats
-    * job, its |terms|-task posting scan and top-k; the semantic leg's
-    * probe-list broadcast, pruned list scan and rank window — then one
-    * id-filtered read of the page's vectors ([[Similarity.mmrPicks]]).
+    * job and its posting scan, which sums, ranks and cuts the top-k
+    * in one task at serve sizes; the semantic leg's pruned list scan,
+    * which keeps each task's top-k ([[Similarity.ivfTopKFromIndex]])
+    * — then one id-filtered read of the page's vectors
+    * ([[Similarity.mmrPicks]]).
     * Everything after the scans is ≤ kLex + kSem rows on the driver:
     * the RRF fusion ([[TextAnalysis.rrfFuseLocal]]), the sim matrix
     * (the join's sim_u expression, evaluated interpreted), the greedy,
@@ -92,7 +94,7 @@ object Retrieval {
     * semantic probe come from the query's driver rows, the centroids
     * and the lists schema from the IVF index's cached handle
     * ([[Similarity.ivfTopKFromIndex]]). A warm page over a local query
-    * frame is 7 jobs (spec-pinned). rrf_score = s6/1e6 exactly, since
+    * frame is 4 jobs with no exchange (spec-pinned). rrf_score = s6/1e6 exactly, since
     * s6 ≤ ~2e6·k is held exactly by the double. The page is computed
     * when this returns. */
   def serve(spark: SparkSession, table: String, path: String,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -575,7 +576,6 @@ object Similarity {
         .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
         .toMap
     } else {
-      import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
       import org.apache.spark.sql.catalyst.plans.logical.Project
       import org.apache.spark.sql.types.{StructField, StructType}
@@ -2706,45 +2706,56 @@ object Similarity {
   /** The ONE probe-and-prune spelling every index serve and the
     * [[probedListFiles]] audit share: probe the index's cached coarse
     * quantizer ([[ivfHandle]]) on the driver with the zero-norm-filtered
-    * queries ([[queryProbes]] — a zero query has no defined ranking,
+    * queries ([[probedQueries]] — a zero query has no defined ranking,
     * and its degenerate probe rows would inflate the probed set,
     * reading list partitions no real query needs), and return
-    * (probes, prunedLists) where the list scan reads only the probed
-    * `lists/c_id=<id>` directories, plus the optional replayed-batch
-    * exclusion. The probed ids are paths, not a `c_id IN (…)`
-    * literal: a literal partition predicate compiled a new predicate
-    * class for every probe set. Nothing here schedules a Spark job
-    * beyond the query rows' collect (none for a local query frame):
-    * the centroids and the lists schema come from the handle, the
-    * probed ids from the driver probe, the committed batches from one
-    * ledger listing. The audit MEASURING the same scan the serves
+    * (probed queries, prunedLists) where the list scan reads only the
+    * probed `lists/c_id=<id>` directories, plus the optional
+    * replayed-batch exclusion. The probed ids are paths, not a
+    * `c_id IN (…)` literal: a literal partition predicate compiled a
+    * new predicate class for every probe set. Nothing here schedules a
+    * Spark job beyond the query rows' collect (none for a local query
+    * frame): the centroids and the lists schema come from the handle,
+    * the probed ids from the driver probe, the committed batches from
+    * one ledger listing. The audit MEASURING the same scan the serves
     * PLAN is the point — a hand-copied spelling de-syncs silently. */
-  private def probeAndPrune(spark: org.apache.spark.sql.SparkSession,
-                            path: String, queries: DataFrame, nprobe: Int,
-                            excludeIngestBatch: Option[Long] = None)
-      : (DataFrame, DataFrame) = {
+  private[graft] def probeAndPrune(spark: org.apache.spark.sql.SparkSession,
+                                   path: String, queries: DataFrame, nprobe: Int,
+                                   excludeIngestBatch: Option[Long] = None)
+      : (Seq[(Row, Array[Int])], DataFrame) = {
     val h = ivfHandle(spark, path)
-    val probes = queryProbes(queries, h.cents, nprobe)
-    val probedIds = probes.collect().map(_.getInt(3)).distinct.toSeq
+    val probed = probedQueries(queries, h.cents, nprobe)
+    val probedIds = probed.flatMap(_._2).distinct
     val lists = committedLists(spark, path, excludeIngestBatch, h,
       Some(probedIds.map(c => s"c_id=$c")))
-    (probes, lists)
+    (probed, lists)
   }
 
-  /** The query side of [[probeAndPrune]]: `probeList` over the
-    * non-zero prepared queries, evaluated on the DRIVER — the query
-    * rows are collected once (the serve broadcast them anyway) and
-    * each is probed by [[localProbes]], so the result is a local
-    * relation `(q_id, q_v, q_n2, c_id)` with exactly probeList's rows
-    * (spec-pinned, ties and zero-norm exclusion included). */
+  /** The non-zero prepared query rows `(vec_id, v, n2)`, collected once
+    * (the serve broadcast them anyway), each with the list ids
+    * [[localProbes]] assigns it on the DRIVER. */
+  private def probedQueries(queries: DataFrame, cents: Array[Array[Double]],
+                            nprobe: Int): Seq[(Row, Array[Int])] =
+    preparedQueries(queries).filter(col("n2") > 0).collect().toSeq
+      .map(r => (r, localProbes(r.getSeq[Double](1), cents, nprobe)))
+
+  /** `probeList` over the non-zero prepared queries, from
+    * [[probedQueries]]: a local relation `(q_id, q_v, q_n2, c_id)`
+    * with exactly probeList's rows (spec-pinned, ties and zero-norm
+    * exclusion included). */
   private[graft] def queryProbes(queries: DataFrame,
                                  cents: Array[Array[Double]],
-                                 nprobe: Int): DataFrame = {
+                                 nprobe: Int): DataFrame =
+    probeFrame(queries, probedQueries(queries, cents, nprobe))
+
+  /** [[probedQueries]]' rows as the probe-list relation, one row per
+    * (query row, probed list). */
+  private def probeFrame(queries: DataFrame,
+                         probed: Seq[(Row, Array[Int])]): DataFrame = {
     import org.apache.spark.sql.types._
-    val q = preparedQueries(queries).filter(col("n2") > 0)
-    val rows = q.collect().toSeq.flatMap { r =>
-      localProbes(r.getSeq[Double](1), cents, nprobe).toSeq
-        .map(c => Row(r.get(0), r.get(1), r.get(2), c))
+    val q = preparedQueries(queries)
+    val rows = probed.flatMap { case (r, cs) =>
+      cs.toSeq.map(c => Row(r.get(0), r.get(1), r.get(2), c))
     }
     queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(
@@ -2781,20 +2792,32 @@ object Similarity {
 
   /** Query a written IVF index: probe the stored quantizer, then read
     * ONLY the probed partitions (the scan reads the probed `c_id=`
-    * directories — spec-proved, with the input file set restricted to
-    * the probed directories). `queries` is any frame
-    * with (vec_id, embedding) — the external query set of a real
-    * deployment. The probe runs on the driver against the index's
-    * cached quantizer ([[probeAndPrune]]), so the returned frame's
-    * execution is the whole serve: for a local query frame, the
-    * probe-list broadcast, the pruned list scan and the rank window
-    * (three warm jobs, spec-pinned) — no centroid read, probe job or
-    * schema inference per request.
+    * directories — spec-proved by [[probedListFiles]], which measures
+    * the same scan). `queries` is any frame with (vec_id, embedding) —
+    * the external query set of a real deployment. The probe runs on
+    * the driver against the index's cached quantizer
+    * ([[probeAndPrune]]), and the serve is ONE Spark job with no
+    * exchange: the pruned list scan scores each row against the query
+    * rows that probed its list — the probe list, the query vectors and
+    * norms ride the scan as plan reference objects
+    * ([[graft.functions.ServeExprs]]: `LongsForKey` + explode ≡ the
+    * probe-list equi-join, `VecForKey` / `N2ForKey` feed the same
+    * cosine expression) — and each task keeps its k best rows per
+    * query under the rank order (cos_sim desc, vec_id) with Spark's
+    * ordering for it ([[bestPerQuery]]). The driver merges the tasks'
+    * rows per q_id under the same ordering: rows and ranks equal the
+    * broadcast join + `row_number` window this replaced
+    * (`IndexServeSpec`), and the merge reads at most
+    * queries × k × tasks rows. The answer is a local relation
+    * `(q_id, n_id, cos_sim, rank)`, computed when this returns; its
+    * collect runs no job.
     *
     * `selfExclude` drops candidates whose vec_id equals the query's —
     * right when queries ARE corpus members (don't return yourself);
     * set false when query ids live in a separate namespace, where an
-    * id-equal corpus vector is a legitimate neighbor, not "self".
+    * id-equal corpus vector is a legitimate neighbor, not "self". It
+    * needs integral ids on both sides (compared as longs, what Spark's
+    * `=!=` compares after widening).
     *
     * `excludeIngestBatch`: drop that ingest partition from the serve
     * (partition-pruned). [[graft.streaming.EventStream
@@ -2806,22 +2829,103 @@ object Similarity {
                        queries: DataFrame, k: Int,
                        nprobe: Int = 4, selfExclude: Boolean = true,
                        excludeIngestBatch: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+      Descending, InterpretedOrdering, SortOrder}
+    import org.apache.spark.sql.types._
+    import graft.functions.ServeExprs._
+    import graft.functions.VecExprs.withTempFunction
     // zero-norm rows out on BOTH sides (undefined cosine): queries
     // inside probeAndPrune; a zero INDEXED vector is never a
     // legitimate cosine neighbor either
-    val (probes, lists0) =
+    val (probed, lists0) =
       probeAndPrune(spark, path, queries, nprobe, excludeIngestBatch)
     val lists = lists0.filter(col("n2") > 0)
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    lists.as("c").join(broadcast(probes), Seq("c_id"))
-      .filter(if (selfExclude) col("q_id") =!= col("vec_id") else lit(true))
-      .select(col("q_id"), col("vec_id"),
-        round(cosineFromParts(dot(col("q_v"), col("c.v")), col("q_n2"), col("c.n2")), 6)
-          .as("cos_sim"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("cos_sim"), col("rank"))
+    val (qType, nType) = (queries.schema("vec_id").dataType,
+      lists0.schema("vec_id").dataType)
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    require(!selfExclude || (integral(qType) && integral(nType)),
+      s"ivfTopKFromIndex selfExclude compares integral ids; got query vec_id " +
+        s"${qType.simpleString} and index vec_id ${nType.simpleString}")
+    // the window's partitions: one per distinct q_id; a query row's
+    // position in `probed` is its key in the reference tables. Under
+    // selfExclude a null q_id matches nothing (`=!=` is null there).
+    val qIds = probed.map(_._1.get(0)).distinct
+    val groupOf = {
+      val g = qIds.zipWithIndex.toMap
+      probed.map(p => g(p._1.get(0))).toArray
+    }
+    val live = probed.indices.filter(i => !selfExclude || !probed(i)._1.isNullAt(0))
+    // the rank window's order over the scan's (pos, vec_id, cos_sim)
+    val order = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(2, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(1, nType, nullable = true), Ascending)))
+    val best =
+      if (live.isEmpty || k <= 0) Array.empty[InternalRow]
+      else {
+        val probeTable = LongsTable.byKey(
+          for (i <- live; c <- probed(i)._2.toSeq) yield (i.toLong, c.toLong))
+        val qTable = VecTable(live.map(i =>
+          (i.toLong, probed(i)._1.getSeq[Double](1), probed(i)._1.getDouble(2))))
+        // the functions resolve into the plan as it is built, so the
+        // plan runs after their names are dropped
+        val scored =
+          withTempFunction(spark, "graft_probes", a => LongsForKey(a(0), probeTable)) { pFn =>
+          withTempFunction(spark, "graft_qvec", a => VecForKey(a(0), qTable)) { qvFn =>
+          withTempFunction(spark, "graft_qn2", a => N2ForKey(a(0), qTable)) { qnFn =>
+            val cand = lists
+              .select(explode(call_function(pFn, col("c_id").cast("long"))).as("pos"),
+                col("vec_id"), col("v"), col("n2"))
+            val kept = if (!selfExclude) cand else {
+              val self = LongPairSet(live.map(i =>
+                (i.toLong, probed(i)._1.getAs[Number](0).longValue)))
+              withTempFunction(spark, "graft_self", a => PairKnown(a(0), a(1), self)) { sFn =>
+                cand.filter(col("vec_id").isNotNull &&
+                  !call_function(sFn, col("pos"), col("vec_id").cast("long")))
+              }
+            }
+            kept.select(col("pos"), col("vec_id"),
+              round(cosineFromParts(dot(call_function(qvFn, col("pos")), col("v")),
+                call_function(qnFn, col("pos")), col("n2")), 6).as("cos_sim"))
+          }}}
+        val qe = scored.queryExecution
+        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+          qe.toRdd.mapPartitions(bestPerQuery(_, groupOf, k, order)).collect()
+        }
+      }
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(nType)
+    val rows = best.groupBy(r => groupOf(r.getLong(0).toInt)).toSeq.flatMap {
+      case (g, rs) => rs.sorted(order).take(k).zipWithIndex.map { case (r, i) =>
+        Row(qIds(g), toScala(r.get(1, nType)), r.get(2, DoubleType), i + 1)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("q_id", qType), StructField("n_id", nType),
+      StructField("cos_sim", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** One scan task's k best rows per query group under `order`: rows
+    * are `(pos, vec_id, cos_sim)`, `pos` a query row whose group is
+    * `groupOf(pos)`. A bounded heap per group, worst row on top; a
+    * row that ties the worst kept one under `order` has equal rank
+    * keys, so either may stay. */
+  private def bestPerQuery(rows: Iterator[InternalRow], groupOf: Array[Int],
+                           k: Int, order: Ordering[InternalRow]): Iterator[InternalRow] = {
+    import scala.jdk.CollectionConverters._
+    val worstFirst = order.reverse
+    val heaps = scala.collection.mutable.HashMap.empty[Int,
+      java.util.PriorityQueue[InternalRow]]
+    rows.foreach { r =>
+      val heap = heaps.getOrElseUpdate(groupOf(r.getLong(0).toInt),
+        new java.util.PriorityQueue(k + 1, worstFirst))
+      if (heap.size < k) heap.add(r.copy())
+      else if (order.lt(r, heap.peek())) { heap.poll(); heap.add(r.copy()) }
+    }
+    heaps.valuesIterator.flatMap(_.iterator.asScala)
   }
 
   /** E12's on-disk serve: label-FILTERED top-k from an index written
@@ -2998,7 +3102,8 @@ object Similarity {
     val m = codebook.agg(max(col("j"))).as[Int].head() + 1
     val q0 = preparedQueries(queries).filter(col("n2") > 0)
     val qu = unitFrame(q0)
-    val (probes, lists) = probeAndPrune(spark, path, queries, nprobe)
+    val (probed, lists) = probeAndPrune(spark, path, queries, nprobe)
+    val probes = probeFrame(queries, probed)
     // per-query LUT from the STORED codebook (same subDist spelling as
     // the encode expression — bit-identical ADC)
     val subLen = (size(col("u")) / m).cast("int")

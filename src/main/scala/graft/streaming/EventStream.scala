@@ -339,7 +339,7 @@ object EventStream {
         // dedup BEFORE the per-id serve loop (r10 ADVICE): a
         // duplicate vec_id in one micro-batch would otherwise hand
         // serve a multi-row queryVec — duplicated probe rows inside
-        // the per-query rank window and a double-emitted page.
+        // the per-query ranking and a double-emitted page.
         // dedupById picks the max-payload row, so a replay serves
         // the SAME page the original attempt did.
         val dedup = dedupById(batch, "vec_id")

@@ -15,18 +15,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the shipped codegen cache: suites see the compile behaviour a
-      // deployment gets (the IndexServeSpec compile pin depends on it)
-      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The shipped session ([[Sessions.local]], what Bench, Verify,
+    * Profile, perfbench and deployments run), at 4 cores and 4 shuffle
+    * partitions: job and task pins hold for the configuration that
+    * ships. */
+  lazy val session: SparkSession = Sessions.local("4", "4")
 }
