@@ -1112,13 +1112,9 @@ object TextAnalysis {
     *     `<table>_post` layout, reading Σ df(term) rows — never the
     *     n-doc corpus (the r10 verdict's one serve scale-killer,
     *     removed). No join at all: dl is denormalized on the posting
-    *     row. The stats give the exact committed Σ df(term) before
-    *     the scan is planned: up to [[OneTaskPostings]] rows, the
-    *     posting union is coalesced to ONE task, so the groupBy(doc_id),
-    *     the top-k and the rank run in it with no exchange (one job);
-    *     above it the scan runs |terms| tasks and the groupBy(doc_id)
-    *     exchanges its Σ df(term) rows. Both branches plan the same
-    *     expressions, so their rows are identical (spec-pinned).
+    *     row. The posting union is coalesced to ONE task, so the
+    *     groupBy(doc_id), the top-k and the rank run in it with no
+    *     exchange (one job).
     *
     * A term the vocabulary never saw has no posting rows and df = 0 —
     * maximal finite Lucene idf, zero contribution, exactly
@@ -1136,21 +1132,7 @@ object TextAnalysis {
     * append's equality-to-rebuild contract). */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                         table: String, terms: Seq[String],
-                        k: Int): DataFrame =
-    bm25TopKFromIndex(spark, table, terms, k, OneTaskPostings)
-
-  /** Most committed posting rows (Σ df of the query terms) that
-    * [[bm25TopKFromIndex]] scores in one task with no exchange. One
-    * task sums them in less time than the exchange's extra job costs
-    * up to about this many rows (PERF.md, "A warm retrieval round in
-    * 5 Spark jobs"). */
-  private val OneTaskPostings = 250000L
-
-  /** [[bm25TopKFromIndex]] with the one-task ceiling as a parameter,
-    * so specs reach both plans over one index. */
-  private[graft] def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-                                       table: String, terms: Seq[String],
-                                       k: Int, oneTaskPostings: Long): DataFrame = {
+                        k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25TopKFromIndex needs at least one query term")
     require(k > 0, s"k=$k must be positive")
     val uniq = terms.distinct
@@ -1222,16 +1204,10 @@ object TextAnalysis {
           (tfD * lit(10L) * lit(t) + lit(3L * t).cast(D38) +
             col("dl").cast(D38) * lit(9L * n)).cast("double"), 6)
         .cast(org.apache.spark.sql.types.DecimalType(20, 6))
-    // bucket-pruned: Σ df(term) rows, which the committed dfs count
-    // exactly. The bucketed scan still plans one partition per bucket
-    // — empty ones included — so above the one-task ceiling coalesce
-    // it to the ≤ |terms| buckets the pruning can keep: the same files
-    // read by |terms| tasks instead of one task per bucket
-    val oneTask = uniq.map(dfs.getOrElse(_, 0L)).sum <= oneTaskPostings
-    val postScan = spark.table(s"${table}_post")
+    // bucket-pruned: Σ df(term) rows
+    val postBase = spark.table(s"${table}_post")
       .filter(col("tok").isin(uniq: _*))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-    val postBase = if (oneTask) postScan else postScan.coalesce(uniq.size)
     // delta segments ride the same shape: pbkt partition-pruned to
     // the query terms' buckets, still Σ df(term) rows — appended
     // doc_ids are new by the append contract, so the union is
@@ -1248,7 +1224,8 @@ object TextAnalysis {
             col("ingest_batch").isin(committed.toSeq: _*))
           .select(col("tok"), col("doc_id"), col("tf"), col("dl"))))
       .getOrElse(postBase)
-    val scored = (if (oneTask) postAll.coalesce(1) else postAll)
+    // one task reads every posting row and sums them: no exchange
+    val scored = postAll.coalesce(1)
       .select(col("doc_id"),
         (contrib * multCol.cast(org.apache.spark.sql.types
           .DecimalType(20, 6))).as("c"))

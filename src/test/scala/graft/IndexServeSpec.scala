@@ -2,11 +2,14 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 import graft.functions.VectorFunctions.{cosineFromParts, dot}
 import graft.operators.{Par, Retrieval, Similarity, TextAnalysis}
@@ -215,41 +218,6 @@ class IndexServeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       qs.take(0).toDF("vec_id", "embedding"), 5).count() === 0L)
   }
 
-  test("BM25 serve: the one-task and the exchange plan give identical rows, deltas and an orphan included") {
-    val p = tmp("graft_idx_bm25_plans")
-    val table = "idx_plans_bm25"
-    val docs = Tables.documents(spark, sfDir)
-    TextAnalysis.writeBm25Stats(docs.filter(col("doc_id") % 3 =!= 0), table, s"$p/bm25")
-    val termSets = Seq(Seq("spark", "window", "merge"), Seq("dup", "spark", "spark"),
-      Seq("absentterm"), Seq("query", "absentterm", "row", "data"))
-    def exchanges(df: DataFrame) =
-      collect(df.queryExecution.executedPlan) { case e: Exchange => e }.size
-    def both(label: String): Unit = termSets.foreach { terms =>
-      def plan(oneTask: Long) = TextAnalysis.bm25TopKFromIndex(spark, table, terms,
-        20, oneTask)
-      // one distinct term on the base alone is one task either way
-      assert(exchanges(plan(Long.MaxValue)) === 0 &&
-        (terms.distinct.size == 1 || exchanges(plan(-1L)) > 0),
-        s"$label, terms $terms: the ceiling must pick the plan")
-      def serve(oneTask: Long) = plan(oneTask).orderBy("rank").collect().toSeq.map(_.toSeq)
-      val (one, exchanged) = (serve(Long.MaxValue), serve(-1L))
-      assert(one === exchanged, s"$label, terms $terms")
-      assert(one === TextAnalysis.bm25TopKFromIndex(spark, table, terms, 20)
-        .orderBy("rank").collect().toSeq.map(_.toSeq), s"$label, terms $terms")
-    }
-    both("base index")
-    TextAnalysis.appendToBm25Index(docs.filter(col("doc_id") % 3 === 0 &&
-      col("doc_id") % 2 === 0).select("doc_id", "text"), table, ingestBatch = 0L)
-    both("a delta segment")
-    TextAnalysis.appendToBm25Index(docs.filter(col("doc_id") % 3 === 0 &&
-      col("doc_id") % 2 =!= 0).select("doc_id", "text"), table, ingestBatch = 1L)
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.delete(new Path(s"$p/bm25_meta_delta/ingest_batch=1"), true))
-    both("an orphaned batch")
-    Seq("_df", "_meta", "_post").foreach(sfx =>
-      spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
-  }
-
   test("warm serves schedule only their own jobs: pinned counts, no parquet schema inference") {
     val path = tmp("graft_idx_jobs")
     Retrieval.buildArtifacts(Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir),
@@ -258,11 +226,6 @@ class IndexServeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .limit(4).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val counters = new BenchCounters(spark.sparkContext)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(s => stages.add(s.name))
-    })
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -270,24 +233,50 @@ class IndexServeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                              e: Exception): Unit = plans.add(qe.executedPlan)
     }
+    // the session's plan listeners hear an execution's end on the
+    // shared listener queue ahead of any listener added after them, so
+    // once the listener below has seen an execution end, its plan is
+    // in `plans`
     spark.listenerManager.register(planListener)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // each job's SQL execution id ("" for a job outside one), and the
+    // executions that have ended
+    val jobExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        e.stageInfos.foreach(s => stages.add(s.name))
+        jobExecs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).getOrElse(""))
+      }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case end: SparkListenerSQLExecutionEnd => ended.add(end.executionId.toString)
+          case _ =>
+        }
+    })
     // (jobs, stage names, executed plans) of a warm run of `f`
     def counted(name: String)(f: => Unit): (Long, Seq[String], Seq[SparkPlan]) = {
       f // warm-up: handle load, codegen
       counters.record(s"$name-0")(())
-      stages.clear()
-      plans.clear()
+      Seq(stages, plans, jobExecs, ended).foreach(_.clear())
       counters.record(name)(f)
       val jobs = counters.all(name).jobs
-      // the plan listener hears of an execution after its last job
+      // an execution ends after its last job: wait for the end of
+      // every execution that ran a job, so each job's plan is in
       val deadline = System.nanoTime() + 10000000000L
-      while (plans.size < jobs && System.nanoTime() < deadline) Thread.sleep(20)
+      while (!ended.containsAll(jobExecs) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!jobExecs.contains(""), s"a warm $name job ran outside a SQL execution")
+      assert(ended.containsAll(jobExecs),
+        s"warm $name: no end seen for executions ${jobExecs.asScala.toSeq.diff(ended.asScala.toSeq)}")
+      assert(plans.size >= jobExecs.size,
+        s"warm $name: ${plans.size} plans for ${jobExecs.size} executions with jobs")
       (jobs, stages.toArray(Array.empty[String]).toSeq,
         plans.toArray(Array.empty[SparkPlan]).toSeq)
     }
     val (knnJobs, knnStages, knnPlans) = counted("knn") {
       Similarity.ivfTopKFromIndex(spark, s"$path/ivf",
-        q4.toDF("vec_id", "embedding"), 5, nprobe = 4).collect(): Unit
+        q4.toDF("vec_id", "embedding"), 5, nprobe = 1).collect(): Unit
     }
     val (pageJobs, pageStages, pagePlans) = counted("page") {
       Retrieval.serveFromIndex(spark, "idx_jobs_bm25", path,
@@ -301,11 +290,22 @@ class IndexServeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // stage, so no room for AQE stage-submission races
     assert(knnJobs === 1L, s"warm knn ran $knnJobs jobs: $knnStages")
     assert(pageJobs === 4L, s"warm page ran $pageJobs jobs: $pageStages")
-    for ((what, ps) <- Seq("knn" -> knnPlans, "page" -> pagePlans)) {
-      assert(ps.nonEmpty, s"no executed plan seen for the warm $what")
+    for ((what, ps) <- Seq("knn" -> knnPlans, "page" -> pagePlans))
       ps.foreach(plan => assert(collect(plan) { case e: Exchange => e }.isEmpty,
         s"an exchange in the warm $what:\n$plan"))
-    }
+    // the knn's list scan reads only the probed c_id= directories: the
+    // lists the probedListFiles audit reads, fewer than nlist (4
+    // queries probing 1 list each read at most 4 of the 8)
+    val cId = """/lists/c_id=(\d+)""".r.unanchored
+    def cIds(paths: Seq[String]) = paths.collect { case cId(c) => c.toInt }.toSet
+    val knnRoots = knnPlans.flatMap(collect(_) { case s: FileSourceScanExec => s })
+      .flatMap(_.relation.location.rootPaths.map(_.toString))
+    assert(knnRoots.nonEmpty && knnRoots.forall(_.matches(".*/lists/c_id=\\d+")),
+      s"warm knn scans other than the lists' c_id= directories: $knnRoots")
+    val audited = cIds(Similarity.probedListFiles(spark, s"$path/ivf",
+      q4.toDF("vec_id", "embedding"), nprobe = 1).toSeq)
+    assert(cIds(knnRoots) === audited && audited.size < 8,
+      s"warm knn read lists ${cIds(knnRoots)}; the audit read $audited")
     val inference = (knnStages ++ pageStages).filter(_.startsWith("parquet at"))
     assert(inference.isEmpty, s"schema-inference jobs on a warm serve: $inference")
     Seq("_df", "_meta", "_post").foreach(sfx =>

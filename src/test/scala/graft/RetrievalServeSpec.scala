@@ -170,12 +170,12 @@ class RetrievalServeSpec extends SparkSpec {
     val readFiles = scanned.select(input_file_name()).distinct().count()
     assert(readFiles < allFiles,
       s"expected bucket pruning: read $readFiles of $allFiles files")
-    // exchange-free probe: no join anywhere in the lexical leg (dl is
-    // denormalized onto the posting row) — the only exchange is the
-    // Σ df(term)-row groupBy(doc_id)
+    // no join anywhere in the lexical leg (dl is denormalized onto the
+    // posting row), and no exchange: one task sums the postings
     val plan = TextAnalysis.bm25TopKFromIndex(spark, "serve_spec_bm25",
       terms, 20).queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"lexical serve plan has a join:\n$plan")
+    assert(!plan.contains("Exchange"), s"lexical serve plan has an exchange:\n$plan")
   }
 
   test("appendToBm25Index: serve after appends ≡ full rebuild, replay-idempotent, delta reads pruned") {
